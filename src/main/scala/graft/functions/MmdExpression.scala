@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -63,6 +63,15 @@ case class MmdCellProducts(child: Expression)
       StructField("cell", LongType, nullable = false),
       StructField("p", LongType, nullable = true))),
     containsNull = false)
+
+  /** The kernel reads elements with `getFloat`: any other element type
+    * must fail analysis, not quantize garbage bits. */
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      "mmd_cell_products needs an array<float> input, got " +
+        other.simpleString)
+  }
 
   override def nullSafeEval(input: Any): Any =
     MmdCellUtil.cells(input.asInstanceOf[ArrayData])

@@ -15,15 +15,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * `split(text, " ", -1)` tokenization, n-gram arrays empty below n
   * words (so counts are 0), distincts over the space-joined n-gram
   * STRINGS (concat_ws semantics; words cannot contain the separator, so
-  * string-distinct equals tuple-distinct), and the fixed 10-entry
-  * stopword list of TextFunctions.enStopwords. The r05 projections
+  * string-distinct equals tuple-distinct), and the stopword list of
+  * [[TextFunctions.enStopwords]] (read from there: one copy). The r05 projections
   * re-evaluated the split up to 12x per row and ran a slice+concat
   * lambda per n-gram position, three times over. */
 object RepStatsUtil {
   private val Stop: java.util.HashSet[String] = {
     val s = new java.util.HashSet[String]()
-    Seq("the", "a", "an", "of", "to", "in", "and", "is", "it", "that")
-      .foreach(s.add)
+    TextFunctions.enStopwords.foreach(s.add)
     s
   }
 

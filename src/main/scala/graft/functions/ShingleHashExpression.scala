@@ -397,7 +397,7 @@ object WindowKeys {
  * no interpreted higher-order lambdas). Feeds MinHash signatures and the
  * Jaccard inverted index; semantics (and the DuckDB oracle) are identical
  * to the expression-pipeline specification, which is kept in
- * [[TextFunctions.shingleHashesHof]] and cross-checked by tests.
+ * `shingleHashesHof` in PolyHashSpec and cross-checked there.
  */
 case class ShingleHashes(child: Expression, n: Int, distinct: Boolean = true)
     extends UnaryExpression with Serializable {

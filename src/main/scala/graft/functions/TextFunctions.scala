@@ -22,17 +22,9 @@ object TextFunctions {
   /** Polynomial rolling hash over characters: fold(h*31 + ascii(c)) mod p.
     * Matches DuckDB `list_reduce(list_prepend(0, [ascii(c) ...]), ...)`.
     * Evaluated by the native codegen'd [[PolyHash]] expression; the
-    * expression-only fold ([[polyHashHof]]) is kept as the executable
-    * specification and cross-checked in tests. */
+    * expression-only fold (`polyHashHof` in PolyHashSpec) is the executable
+    * specification it is cross-checked against. */
   def polyHash(s: Column): Column = PolyHash(s)
-
-  /** Reference formulation via higher-order fold (slow: allocates 1-char
-    * strings and interprets a lambda per character). */
-  def polyHashHof(s: Column): Column =
-    aggregate(
-      split(s, ""),
-      lit(0L),
-      (h, c) => pmod(h * lit(31L) + ascii(c), lit(HashMod)))
 
   /** n-word shingles of a word array (overlapping, space-joined; empty when
     * the text has fewer than n words — matches the oracle's comprehension
@@ -46,14 +38,9 @@ object TextFunctions {
   /** Distinct shingle hashes of a text (the MinHash universe / Jaccard
     * inverted-index key). Evaluated by the fused native codegen'd
     * [[ShingleHashes]] expression; the expression-pipeline formulation
-    * ([[shingleHashesHof]]) is kept as the executable specification and
-    * cross-checked in tests. */
+    * (`shingleHashesHof` in PolyHashSpec) is the executable specification
+    * it is cross-checked against. */
   def shingleHashes(text: Column, n: Int): Column = ShingleHashes(text, n)
-
-  /** Specification form: per-shingle string materialization + interpreted
-    * transform (slow; tests assert bit-equality with the native expr). */
-  def shingleHashesHof(text: Column, n: Int): Column =
-    array_distinct(transform(shingles(words(text), n), s => polyHash(s)))
 
   /** MinHash signature: for i in [0,k), min over shingle hashes h of
     * (a_i*h + b_i) mod p with a_i = 2i+1, b_i = 1000003*i + 12345. */
@@ -68,12 +55,8 @@ object TextFunctions {
 
   /** Word hashes of a text (compute once, feed to [[simhashFromHashes]]).
     * Native single-pass kernel; the transform-pipeline spec is
-    * [[wordHashesHof]], cross-checked in tests. */
+    * `wordHashesHof` in PolyHashSpec, cross-checked there. */
   def wordHashes(text: Column): Column = ShingleHashes.wordHashes(text)
-
-  /** Specification form of [[wordHashes]]. */
-  def wordHashesHof(text: Column): Column =
-    transform(words(text), w => polyHash(w))
 
   /** SimHash over precomputed word hashes, `bits` wide: bit j set iff the
     * sum over words of (+1 if bit j of hash else -1) is positive. */

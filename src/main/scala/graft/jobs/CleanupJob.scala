@@ -47,7 +47,6 @@ object CleanupJob {
       keepRuns: Int,
       dryRun: Boolean = false): Seq[String] = {
     require(keepRuns >= 1, "keepRuns must be >= 1")
-    import org.apache.spark.sql.functions._
     val runLogPath = ValidationJob.runLogPath(validationOutDir)
     val p = new org.apache.hadoop.fs.Path(runLogPath)
     if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
@@ -102,7 +101,6 @@ object CleanupJob {
       validationOutDir: Option[String] = None,
       dryRun: Boolean = false): Report = {
     import org.apache.spark.sql.functions._
-    import spark.implicits._
 
     def exists(path: String) = {
       val p = new org.apache.hadoop.fs.Path(path)

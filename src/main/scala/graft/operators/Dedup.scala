@@ -249,8 +249,8 @@ object Dedup {
     *
     * ONE codegen'd projection (native [[graft.functions.MinhashSig]]): the
     * signature is a per-row function of the row's own shingles. The
-    * explode -> groupBy shape ([[minhashSignaturesAgg]], kept as the
-    * cross-checked specification) existed as a CollapseProject barrier —
+    * explode -> groupBy shape (`minhashSignaturesAgg` in DedupSpec, kept as
+    * the cross-checked specification) existed as a CollapseProject barrier —
     * expression-pipeline formulations got the signature lambda re-inlined
     * into every downstream band reference (measured 64x re-evaluation at
     * sf0.1) — but paid a full (id, shingle-hash) shuffle; a native kernel
@@ -260,25 +260,6 @@ object Dedup {
       shingleN: Int = 3): DataFrame =
     df.select(col(idCol),
       graft.functions.MinhashSig(col(textCol), k, shingleN).as("sig"))
-
-  /** Specification form of [[minhashSignatures]] (explode -> groupBy with
-    * k MIN aggregates). */
-  def minhashSignaturesAgg(
-      df: DataFrame, idCol: String, textCol: String, k: Int,
-      shingleN: Int = 3): DataFrame = {
-    val hashes = df.select(
-      col(idCol),
-      explode_outer(shingleHashes(col(textCol), shingleN)).as("h"))
-    val minCols = (0 until k).map { i =>
-      min(pmod(col("h") * (i * 2 + 1) + (i * 1000003L + 12345L),
-        lit(graft.functions.TextFunctions.HashMod))).as(s"m$i")
-    }
-    hashes
-      .groupBy(col(idCol))
-      .agg(minCols.head, minCols.tail: _*)
-      .select(col(idCol),
-        array((0 until k).map(i => col(s"m$i")): _*).as("sig"))
-  }
 
   /** (id, sig, band_idx, band_key) — one row per (doc, band): the LSH
     * bucket keys of every doc's minhash signature. THE shared candidate
@@ -449,35 +430,12 @@ object Dedup {
     * words, so it is ONE codegen'd projection (native
     * [[graft.functions.Simhash64Bands]] kernel — zero shuffles; the r02
     * explode→groupBy shape paid a full (id, word-hash) shuffle for
-    * nothing). [[simhash64Agg]] keeps the aggregation formulation as a
-    * cross-checked specification. */
+    * nothing). `simhash64Agg` in DedupSpec keeps the aggregation formulation
+    * as a cross-checked specification. */
   def simhash64(df: DataFrame, idCol: String, textCol: String): DataFrame =
     df.select(col(idCol),
       graft.functions.Simhash64Bands(col(textCol), SimhashBands,
         SimhashBandBits).as("bands"))
-
-  /** Specification form of [[simhash64]]: explode -> groupBy with 64
-    * conditional SUMs (tests assert equality with the native kernel). */
-  def simhash64Agg(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val wh = df.select(
-      col(idCol), explode_outer(wordHashes(col(textCol))).as("h"))
-    val voteCols = (0 until SimhashBands * SimhashBandBits).map { j =>
-      sum(when(
-        pmod(col("h") * (2 * j + 1) + (j * 1000003L + 12345L),
-          lit(HashMod)) % 2 === 1, 1L).otherwise(-1L)).as(s"v$j")
-    }
-    val votes = wh.groupBy(col(idCol)).agg(voteCols.head, voteCols.tail: _*)
-    val bandCols = (0 until SimhashBands).map { b =>
-      (0 until SimhashBandBits).map { i =>
-        when(col(s"v${SimhashBandBits * b + i}") > 0,
-          lit(1L << i)).otherwise(lit(0L))
-      }.reduce(_ + _).as(s"band$b")
-    }
-    votes
-      .select(col(idCol) +: bandCols: _*)
-      .select(col(idCol),
-        array((0 until SimhashBands).map(b => col(s"band$b")): _*).as("bands"))
-  }
 
   /** SimHash near-dup pairs: hamming distance <= maxHamming over the
     * 64-bit hash. Blocking on the 4 disjoint 16-bit bands is
@@ -1026,8 +984,15 @@ object Dedup {
     * their single global minimum (standard short-document convention —
     * every document with any content carries ≥1 fingerprint).
     *
-    * Output: (id, fp), one row per distinct selected fingerprint. Scale
-    * shape: ONE codegen'd projection (the fused sliding-hash kernel + a
+    * Output: (id, fp), one row per distinct selected fingerprint.
+    *
+    * Precondition: `idCol` is unique — one row per document. The kernel
+    * dedups fingerprints within a row only, so two rows sharing an id
+    * emit the same (id, fp) twice, and [[winnowPairs]] would then
+    * inflate that document's shared-fingerprint counts. Callers with
+    * possibly repeated ids must aggregate text per id first.
+    *
+    * Scale shape: ONE codegen'd projection (the fused sliding-hash kernel + a
     * higher-order window-min over the in-row array) — zero exchanges; the
     * fingerprint table is the ~2/(w+1)-density inverted index downstream
     * joins consume.

@@ -25,18 +25,10 @@ object SimilaritySearch {
 
   /** Ordered-fold dot product over double-promoted elements — evaluated
     * by the native codegen'd [[graft.functions.DotProduct]] (tight loop,
-    * identical left-to-right IEEE fold). [[dotHof]] is the executable
-    * expression-only specification, cross-checked in SimilaritySpec. */
+    * identical left-to-right IEEE fold). `dotHof` in SimilaritySpec is the
+    * executable expression-only specification it is cross-checked against. */
   def dot(x: Column, y: Column): Column =
     graft.functions.DotProduct(x, y)
-
-  /** Specification form via higher-order fold (two interpreted lambdas
-    * per element — 128 closure calls per 64-dim pair; kept as the
-    * reference semantics the native kernel must match bit-for-bit). */
-  def dotHof(x: Column, y: Column): Column =
-    aggregate(
-      zip_with(x, y, (u, v) => u.cast("double") * v.cast("double")),
-      lit(0.0), (acc, p) => acc + p)
 
   /** Euclidean norm of a float-array column (ordered fold). */
   def norm(v: Column): Column = sqrt(dot(v, v))
@@ -114,34 +106,12 @@ object SimilaritySearch {
     topKPerProbe(scored, k)
   }
 
-  /** Deterministic pseudo-random hyperplane component for (seed, plane j,
-    * dim i): in {-1, +1} — a sign-random projection (Charikar-style
-    * SRP-LSH) with no stored model. Knuth multiplicative hash on plain
-    * integer arithmetic so the oracle engine reproduces buckets exactly. */
-  private def planeSign(seed: Long, j: Int, i: Column): Column =
-    when(
-      shiftright((i + 1) * lit(2654435761L) + lit((j + 1) * 40503L + seed),
-        16) % 2 === 0,
-      lit(1.0)).otherwise(lit(-1.0))
-
   /** SRP-LSH bucket id: `planes`-bit signature of sign(v · r_j).
     * Evaluated by the native codegen'd [[graft.functions.SrpBucket]]
-    * kernel; [[srpBucketHof]] is the executable expression-pipeline
-    * specification, cross-checked in tests. */
+    * kernel; `srpBucketHof` in SimilaritySpec is the executable
+    * expression-pipeline specification it is cross-checked against. */
   def srpBucket(vec: Column, planes: Int, seed: Long = 42L): Column =
     graft.functions.SrpBucket(vec, planes, seed)
-
-  /** Specification form: `planes` interpreted folds per row. */
-  def srpBucketHof(vec: Column, planes: Int, seed: Long = 42L): Column = {
-    val bits = (0 until planes).map { j =>
-      val proj = aggregate(
-        zip_with(vec, sequence(lit(0), size(vec) - 1),
-          (v, i) => v.cast("double") * planeSign(seed, j, i)),
-        lit(0.0), (acc, p) => acc + p)
-      when(proj > 0, lit(1L << j)).otherwise(lit(0L))
-    }
-    bits.reduce(_ + _)
-  }
 
   /** Corpus annotated with its SRP-LSH bucket. */
   def lshBuckets(corpus: DataFrame, vecCol: String, planes: Int,
@@ -706,7 +676,6 @@ object SimilaritySearch {
     * re-folding i literals (same plan shape, one column of state). */
   def kCenterGreedy(corpus: DataFrame, idCol: String, vecCol: String,
       k: Int): DataFrame = {
-    import org.apache.spark.sql.Row
     val spark = corpus.sparkSession
     val base = corpus.select(col(idCol).cast("long").as("vec_id"),
       col(vecCol).as("v"), norm(col(vecCol)).as("n"))

@@ -522,7 +522,7 @@ object SimilarityQueries {
 
   // SRP bucket: bit j set iff sum_i v[i]*sign(seed,j,i) > 0, with
   // sign = +1 iff ((i+1)*2654435761 + (j+1)*40503 + 42) >> 16 is even
-  // (i is the 0-based dim, j the 0-based plane; mirrors planeSign).
+  // (i is the 0-based dim, j the 0-based plane; mirrors SrpBucketUtil).
   private def bucketSqlP(planes: Int) =
     s"""(SELECT CAST(SUM(CASE WHEN pr > 0 THEN 1 << j ELSE 0 END) AS BIGINT)
        FROM (SELECT j, list_reduce(list_prepend(CAST(0.0 AS DOUBLE),

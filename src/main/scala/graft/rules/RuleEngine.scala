@@ -10,8 +10,8 @@ import graft.drift.Drift
  * The evaluation core: one validation pass over the sequences fact table
  * produces the violations table and per-(partition, rule) verdicts —
  * compressing the reference's E1+E3 lifecycle (manifest validation →
- * results ingestion → verdict roll-up, SURVEY.md §3) into a single Spark
- * plan per rule family.
+ * results ingestion → verdict roll-up, SURVEY.md §3) into ONE entry point,
+ * [[RuleEngine.planStaged]], the fused staged plan the job runs.
  *
  * Scale design (local[32] now, 1000 executors later):
  *  - Row rules: ONE narrow scan, all predicates fused into a single
@@ -21,23 +21,15 @@ import graft.drift.Drift
  *    as the reference reports all duplicate locations,
  *    manifest_processor.py:293-305) is gathered only for rows that join the
  *    duplicate-key set, so no unbounded collect_list over clean data.
- *  - Referential integrity: DISTINCT-first on the fact side, broadcast
- *    manifest — the shuffle is over |distinct sources|, not |rows|.
+ *  - Referential integrity: evaluated on the driver from the fused
+ *    scan's per-source counts against the collected manifest — no join,
+ *    no extra pass over |rows|.
  *  - Stats/verdicts: low-cardinality groupBy(source) with constant-size
  *    aggregation state — map-side partial aggregation absorbs hot-source
  *    skew (the 40%-cardiac partition) without salting; salting is reserved
  *    for large-state aggregations (see Dedup.saltedMembers).
  */
 object RuleEngine {
-
-  final case class ValidationResult(
-      violations: Dataset[Violation],
-      verdicts: Dataset[Verdict])
-
-  /** Columns the engine exposes from the broadcast manifest join, usable in
-    * RowRule expressions. */
-  private val manifestCols =
-    Seq("m_expected_docs", "m_min_tok", "m_max_tok")
 
   def emptyViolations(spark: SparkSession): Dataset[Violation] = {
     import spark.implicits._
@@ -108,76 +100,18 @@ object RuleEngine {
     }
   }
 
-  /** THE aggregation pass (classic form): one GLOBAL aggregation of the
+  /** THE aggregation pass (standalone form): one GLOBAL aggregation of the
     * per-source stats state — the by-source grouping lives inside the
     * aggregate's hash-map state, so the shuffle carries one ~|sources|-entry
     * partial per task instead of grouping rows by source; one scan serves
     * the stats rule, both drift rules, AND the completeness side of
-    * referential integrity (SURVEY.md A1-A3, A7, R_STATS, R_DRIFT_*). The
-    * fused path ([[planStaged]]) computes the exact same values without any
-    * dedicated scan at all. */
+    * referential integrity (SURVEY.md A1-A3, A7, R_STATS, R_DRIFT_*).
+    * [[planStaged]] runs it only as its fallback when there is no row-rule
+    * scan to ride; otherwise the observed scan computes the exact same
+    * values without any dedicated pass. */
   def aggregateBySource(seqs: DataFrame, vocab: Int): Seq[SourceAggregate] = {
     val row = seqs.select(sourceStatsColumn(vocab).as("stats")).head()
     parseSourceStats(row.getSeq[org.apache.spark.sql.Row](0))
-  }
-
-  /** The compiled evaluation: the (lazy) violations dataset plus the
-    * driver-side facts needed for verdict roll-up without another scan.
-    * `notCompleted` lists (source, rule_id) pairs whose check could not
-    * run (e.g. a drift rule with no baseline bins for that source) — the
-    * roll-up reports them as NOT_COMPLETED instead of a silent PASS
-    * (reference analog: ManifestStatusCheckRecord's NOT_COMPLETED status,
-    * dynamodb.py:89-95). */
-  final case class EnginePlan(
-      violations: Dataset[Violation],
-      sources: Seq[String],
-      stats: Option[(String, Map[String, String])],
-      rowCount: Option[Long],
-      notCompleted: Set[(String, String)] = Set.empty)
-
-  /** Build the evaluation plan. Exactly THREE distributed passes over the
-    * fact table — the fused row-rule scan, the per-key uniqueness
-    * aggregation, and the per-source stats/histogram aggregation (run
-    * eagerly here) — plus driver-side arithmetic on the collected
-    * per-source aggregates for RI, drift, and stats metrics. */
-  def plan(
-      seqs: Dataset[Sequence],
-      manifest: Dataset[ManifestEntry],
-      rules: RuleSet,
-      baseline: Option[Dataset[BaselineBin]] = None,
-      vocab: Int = graft.gen.SequenceGen.vocabSize,
-      refSnapshot: Option[Dataset[Sequence]] = None): EnginePlan = {
-    val spark = seqs.sparkSession
-    import spark.implicits._
-
-    val enriched = withManifest(seqs.toDF(), manifest)
-
-    val needAgg = rules.statsRules.nonEmpty || rules.refRules.nonEmpty ||
-      rules.driftRules.nonEmpty || rules.entropyRules.nonEmpty
-    val aggs: Seq[SourceAggregate] =
-      if (needAgg) aggregateBySource(seqs.toDF(), vocab) else Nil
-    // A check that never ran must not read as PASS (ADVICE r01; reference
-    // keeps an explicit NOT_COMPLETED status, dynamodb.py:89-95): drift
-    // rules lacking baseline bins for a source, and the snapshot-equality
-    // rule when no reference snapshot is configured — see driverSide.
-    val d = driverSide(spark, seqs, aggs, manifest, rules, baseline,
-      refSnapshot, needAgg)
-
-    val parts: Seq[Dataset[Violation]] =
-      Seq(rowViolations(enriched, rules.rowRules)) ++
-        rules.uniqueRules.map(r => uniqueViolations(seqs.toDF(), r)) ++
-        refSnapshot.toSeq.flatMap(ref =>
-          rules.snapshotRules.map(r =>
-            snapshotViolations(seqs.toDF(), ref.toDF(), r))) ++
-        (if (d.driverViolations.nonEmpty || needAgg)
-          Seq(spark.createDataset(d.driverViolations)) else Nil)
-
-    EnginePlan(
-      violations = parts.reduce(_ unionByName _),
-      sources = d.sources,
-      stats = d.stats,
-      rowCount = d.rowCount,
-      notCompleted = d.notCompleted)
   }
 
   /** The driver-side tail of a staged plan, available only after the scan
@@ -187,6 +121,11 @@ object RuleEngine {
       sources: Seq[String],
       stats: Option[(String, Map[String, String])],
       rowCount: Option[Long],
+      /** (source, rule_id) pairs whose check could not run (a drift rule
+        * with no baseline bins for that source, snapshot equality with no
+        * reference snapshot): the roll-up reports them as NOT_COMPLETED,
+        * never a silent PASS (reference analog: ManifestStatusCheckRecord's
+        * NOT_COMPLETED status, dynamodb.py:89-95). */
       notCompleted: Set[(String, String)],
       /** The per-source aggregates the driver rules evaluated over —
         * post-merge in an append-delta run. Each carries its mergeable
@@ -203,22 +142,23 @@ object RuleEngine {
       scanViolations: Dataset[Violation],
       finish: () => StagedResult)
 
-  /** The FUSED evaluation plan (the 100 TB shape): semantically identical
-    * to [[plan]] but the ENTIRE stats pass — both drift histograms,
+  /** The FUSED evaluation plan (the 100 TB shape) and the engine's one
+    * entry point: the ENTIRE stats pass — both drift histograms,
     * token-id min/max, n_tok stats, exact percentiles, distinct estimate —
     * rides the row-rule scan via `Dataset.observe` +
     * [[graft.drift.SourceStatsAggregate]], so the `tokens` array column
     * (~96% of the table's bytes) is decoded exactly ONCE and no dedicated
-    * stats job runs at all. The classic [[plan]] ran the row rules and a
-    * stats pass as independent full scans; on a memory-bandwidth-bound
-    * host that duplicated decode was the measured N→4N scaling ceiling
+    * stats job runs at all. Running the row rules and a stats pass as
+    * independent full scans duplicated that decode; on a
+    * memory-bandwidth-bound host it was the measured N→4N scaling ceiling
     * (VERDICT r02), and the residual narrow stats job's fixed
     * task-dispatch cost was the next non-scaling phase (r03 probe).
     *
     * Contract: callers MUST run an action on `scanViolations` (e.g. the
     * persist + count ValidationJob does anyway) before calling `finish()`,
     * which blocks on the observed metrics otherwise. Falls back to the
-    * classic eager aggregation when there is no row-rule scan to ride. */
+    * eager [[aggregateBySource]] pass when there is no row-rule scan to
+    * ride (e.g. a rule-delta run that re-evaluates no row rule). */
   def planStaged(
       seqs: Dataset[Sequence],
       manifest: Dataset[ManifestEntry],
@@ -234,7 +174,6 @@ object RuleEngine {
         * rescan would produce. */
       mergeStates: Map[String, Array[Byte]] = Map.empty): StagedPlan = {
     val spark = seqs.sparkSession
-    import spark.implicits._
 
     val needAgg = rules.statsRules.nonEmpty || rules.refRules.nonEmpty ||
       rules.driftRules.nonEmpty || rules.entropyRules.nonEmpty
@@ -283,7 +222,7 @@ object RuleEngine {
     StagedPlan(scanParts.reduce(_ unionByName _), finish)
   }
 
-  /** Driver-side arithmetic shared by [[plan]] and [[planStaged]]: RI /
+  /** Driver-side tail of [[planStaged]]'s `finish()`: RI /
     * drift / manifest violations from the collected aggregates, the source
     * domain, NOT_COMPLETED bookkeeping, stats metrics and exact row count. */
   private def driverSide(
@@ -335,22 +274,6 @@ object RuleEngine {
       rowCount = if (needAgg) Some(aggs.map(_.nDocs).sum) else None,
       notCompleted = notCompleted,
       aggregates = aggs)
-  }
-
-  /** Evaluate the full rule set. `baseline` powers drift rules (skipped when
-    * absent — first run of a fresh table records the baseline instead). */
-  def validate(
-      seqs: Dataset[Sequence],
-      manifest: Dataset[ManifestEntry],
-      rules: RuleSet,
-      baseline: Option[Dataset[BaselineBin]] = None,
-      vocab: Int = graft.gen.SequenceGen.vocabSize,
-      refSnapshot: Option[Dataset[Sequence]] = None): ValidationResult = {
-    val p = plan(seqs, manifest, rules, baseline, vocab, refSnapshot)
-    val verdicts = rollUpVerdicts(
-      seqs.sparkSession, p.sources, rules, p.violations, p.stats,
-      p.notCompleted)
-    ValidationResult(p.violations, verdicts)
   }
 
   /** RI + completeness from the collected aggregates (J1/J2 + A7 —
@@ -714,47 +637,6 @@ object RuleEngine {
       .as[Violation]
   }
 
-  /** Referential integrity + completeness reconciliation, both directions
-    * (J1/J2 + A7):
-    *  - source in data but not in manifest → WARNING per source (extra
-    *    files warn-only, submission_data.py:189-207), with row count.
-    *  - manifest expected_docs ≠ actual count → ERROR when actual <
-    *    expected (declared-but-missing hard FAIL, submission_data.py:133-137),
-    *    WARNING when actual > expected.
-    * The fact side is aggregated to per-source counts FIRST (partial agg,
-    * |sources| rows), then full-outer joined with the broadcast-size
-    * manifest. */
-  def refViolations(
-      seqs: DataFrame,
-      manifest: Dataset[ManifestEntry],
-      rule: RefIntegrityRule): Dataset[Violation] = {
-    val spark = seqs.sparkSession
-    import spark.implicits._
-    val actual = seqs.groupBy(col("source")).agg(count(lit(1)).as("actual_docs"))
-    val m = manifest.toDF().select(
-      col("source").as("m_source"),
-      col("expected_docs"))
-    val joined = actual.join(m, actual("source") === m("m_source"), "full_outer")
-
-    val srcOut = coalesce(col("source"), col("m_source"))
-    joined
-      .select(
-        lit(null).cast(StringType).as("doc_id"),
-        lit(rule.id).as("rule_id"),
-        to_json(struct(
-          coalesce(col("actual_docs"), lit(0L)).as("actual_docs"),
-          col("expected_docs"))).as("observed"),
-        srcOut.as("source"),
-        when(col("m_source").isNull, lit(Severity.Warning)) // undeclared src
-          .when(coalesce(col("actual_docs"), lit(0L)) < col("expected_docs"),
-            lit(Severity.Error)) // missing docs
-          .when(col("actual_docs") > col("expected_docs"),
-            lit(Severity.Warning)) // surplus docs
-          .otherwise(lit(null).cast(StringType)).as("severity"))
-      .filter(col("severity").isNotNull)
-      .as[Violation]
-  }
-
   /** Verdict roll-up (A9): for every (source, rule) in the domain —
     * sources seen in data ∪ manifest, × all rule ids — status is FAIL if
     * any error-severity violation exists, PASS_WITH_WARNINGS if only
@@ -820,25 +702,4 @@ object RuleEngine {
             to_json(struct(col("n_error"), col("n_warning"))))).as("metrics"))
       .as[Verdict]
   }
-
-  /** Per-partition column statistics (StatsRule payload): one
-    * constant-state groupBy(source) pass — min/max/avg n_tok,
-    * null fractions, approx-distinct doc_id (HLL++), token id range.
-    * Returned as a metrics DataFrame consumed by jobs for verdict metrics
-    * (reference analog: bucket/manifest summary reports,
-    * scripts/reports/bucket_summary/main.py:27-95). */
-  def partitionStats(seqs: DataFrame): DataFrame =
-    seqs
-      .groupBy(col("source"))
-      .agg(
-        count(lit(1)).as("n_docs"),
-        min(col("n_tok")).as("min_ntok"),
-        max(col("n_tok")).as("max_ntok"),
-        avg(col("n_tok")).as("avg_ntok"),
-        sum(col("n_tok").cast("long")).as("total_tokens"),
-        (sum(when(col("doc_id").isNull, 1L).otherwise(0L)) / count(lit(1)))
-          .as("null_frac_doc_id"),
-        approx_count_distinct(col("doc_id")).as("approx_distinct_doc_id"),
-        min(array_min(col("tokens"))).as("min_token_id"),
-        max(array_max(col("tokens"))).as("max_token_id"))
 }

@@ -8,8 +8,6 @@ import org.apache.spark.sql.functions._
   * oracled queries plant synthetic PII; this is the realistic-input
   * coverage). */
 class CleanFunctionsSpec extends SparkSpec {
-  import spark.implicits._
-
   private def one(c: org.apache.spark.sql.Column): String =
     spark.range(1).select(c.cast("string")).collect().head.getString(0)
 

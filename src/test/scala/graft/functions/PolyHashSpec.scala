@@ -12,7 +12,7 @@ class PolyHashSpec extends SparkSpec {
       .select(col("text"))
     val diff = docs.select(
         TextFunctions.polyHash(col("text")).as("native"),
-        TextFunctions.polyHashHof(col("text")).as("hof"))
+        PolyHashSpec.polyHashHof(col("text")).as("hof"))
       .filter(col("native") =!= col("hof"))
     assert(diff.count() === 0)
     // known value + edge cases
@@ -20,7 +20,7 @@ class PolyHashSpec extends SparkSpec {
       TextFunctions.polyHash(lit("hello")).as("h"),
       TextFunctions.polyHash(lit("")).as("e"),
       TextFunctions.polyHash(lit("ünïcödé")).as("u"),
-      TextFunctions.polyHashHof(lit("ünïcödé")).as("u2")).collect().head
+      PolyHashSpec.polyHashHof(lit("ünïcödé")).as("u2")).collect().head
     assert(r.getLong(0) === 99162322L)
     assert(r.getLong(1) === 0L)
     assert(r.getLong(2) === r.getLong(3)) // BMP code points agree with ascii()
@@ -44,9 +44,9 @@ class PolyHashSpec extends SparkSpec {
     Seq(docs, edge).foreach { df =>
       val diff = df.select(
           TextFunctions.shingleHashes(col("text"), 3).as("native"),
-          TextFunctions.shingleHashesHof(col("text"), 3).as("hof"),
+          PolyHashSpec.shingleHashesHof(col("text"), 3).as("hof"),
           TextFunctions.wordHashes(col("text")).as("wnative"),
-          TextFunctions.wordHashesHof(col("text")).as("whof"))
+          PolyHashSpec.wordHashesHof(col("text")).as("whof"))
         .filter(col("native") =!= col("hof") ||
           col("wnative") =!= col("whof"))
       assert(diff.count() === 0, df.columns.mkString)
@@ -63,4 +63,29 @@ class PolyHashSpec extends SparkSpec {
       .collect().head.getSeq[Long](0)
     assert(arr === Seq(97L, 98L))
   }
+}
+
+/** Executable specifications of the native text kernels: the
+  * expression-only formulations the tests above cross-check
+  * [[PolyHash]] and [[ShingleHashes]] against, bit for bit. */
+object PolyHashSpec {
+  import org.apache.spark.sql.Column
+  import TextFunctions.{HashMod, polyHash, shingles, words}
+
+  /** Reference formulation via higher-order fold (slow: allocates 1-char
+    * strings and interprets a lambda per character). */
+  def polyHashHof(s: Column): Column =
+    aggregate(
+      split(s, ""),
+      lit(0L),
+      (h, c) => pmod(h * lit(31L) + ascii(c), lit(HashMod)))
+
+  /** Specification form: per-shingle string materialization + interpreted
+    * transform (slow; tests assert bit-equality with the native expr). */
+  def shingleHashesHof(text: Column, n: Int): Column =
+    array_distinct(transform(shingles(words(text), n), s => polyHash(s)))
+
+  /** Specification form of [[TextFunctions.wordHashes]]. */
+  def wordHashesHof(text: Column): Column =
+    transform(words(text), w => polyHash(w))
 }

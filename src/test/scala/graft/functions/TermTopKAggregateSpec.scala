@@ -9,8 +9,6 @@ import org.apache.spark.sql.functions._
   * distinct scores ⇒ nearly every rank decision is a binary-UTF8 word
   * tie-break), carried attributes included. */
 class TermTopKAggregateSpec extends SparkSpec {
-  import spark.implicits._
-
   private def mk = spark.range(3000).select(
     (col("id") % 4).cast("int").as("g"),
     concat(lit("w"), pmod(xxhash64(col("id") * 7), lit(900)).cast("string"))

@@ -9,8 +9,6 @@ import org.apache.spark.sql.functions._
   * part, so it is pinned against the reference window form on adversarial
   * data (few distinct scores ⇒ many ties). */
 class TopKAggregateSpec extends SparkSpec {
-  import spark.implicits._
-
   private def windowTopK(df: org.apache.spark.sql.DataFrame, k: Int) = {
     val w = Window.partitionBy(col("g"))
       .orderBy(col("score").desc, col("id").asc)

@@ -4,7 +4,7 @@ import graft.SparkSpec
 import graft.gen.SequenceGen
 import graft.gen.SequenceGen.Knobs
 import graft.model._
-import graft.rules.{RowRule, RuleEngine, RuleSet, Rules, UniqueRule}
+import graft.rules.{Evaluate, RowRule, RuleSet, Rules, UniqueRule}
 
 /** Row-level salvage of failing sources: violations-named rows move to the
   * quarantine table, the rest salvage and re-validate clean; sources whose
@@ -75,7 +75,7 @@ class QuarantineJobSpec extends SparkSpec {
       case rl: RowRule => rl
       case u: UniqueRule => u
     })
-    val res = RuleEngine.validate(salvaged, manifest, rowRules)
+    val res = Evaluate(salvaged, manifest, rowRules)
     assert(res.violations.count() === 0,
       res.violations.collect().take(5).mkString("\n"))
   }

@@ -172,7 +172,7 @@ class RuleDeltaSpec extends SparkSpec {
         SequenceGen.sequences(spark, N).toDF(), SequenceGen.vocabSize, "base")
       .write.mode("overwrite").parquet(s"$dir/baseline")
     writeInput(dir, Knobs(badNtokRate = 0.04))
-    val r1 = ValidationJob.run(spark, cfg(dir, "out", Rules.standard))
+    ValidationJob.run(spark, cfg(dir, "out", Rules.standard))
     assert(vioSet(s"$dir/out").exists(_._2 == Rules.RConsistentNtok))
 
     val without = RuleSet(Rules.standard.rules.filterNot(

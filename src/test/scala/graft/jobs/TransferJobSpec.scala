@@ -5,7 +5,6 @@ import graft.gen.SequenceGen
 import graft.model._
 import graft.drift.Drift
 import graft.checkpoint.Checkpoint
-import org.apache.spark.sql.functions._
 
 /** E3 tail: verdict-gated promotion into the store + manifest.txt
   * regeneration (reference data_transfer_manager), plus the folder-lock

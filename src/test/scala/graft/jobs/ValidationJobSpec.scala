@@ -5,7 +5,6 @@ import graft.gen.SequenceGen
 import graft.gen.SequenceGen.Knobs
 import graft.model._
 import graft.drift.Drift
-import org.apache.spark.sql.functions._
 
 /** The SURVEY.md §7.2 milestone slice: scan → rule eval → violation sink →
   * verdict roll-up → checkpoint, plus resume semantics. */

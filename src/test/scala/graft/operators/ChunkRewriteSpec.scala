@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** chunkRewrite semantics on a hand-built corpus: keep-first passage
   * dedup at df <= maxDf, boilerplate drop at df > maxDf, position-order

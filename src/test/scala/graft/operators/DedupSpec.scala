@@ -109,7 +109,7 @@ class DedupSpec extends SparkSpec {
       .union(Seq((100001L, "one two")).toDF("doc_id", "text")) // < 3 words
     val native = Dedup.minhashSignatures(real, "doc_id", "text", 16)
       .collect().map(r => r.getLong(0) -> r.getSeq[Any](1)).toMap
-    val spec = Dedup.minhashSignaturesAgg(real, "doc_id", "text", 16)
+    val spec = DedupSpec.minhashSignaturesAgg(real, "doc_id", "text", 16)
       .collect().map(r => r.getLong(0) -> r.getSeq[Any](1)).toMap
     assert(native === spec)
     assert(native(100001L).forall(_ == null)) // all-null edge signature
@@ -122,7 +122,7 @@ class DedupSpec extends SparkSpec {
       .select(col("doc_id"), col("text"))
     val native = Dedup.simhash64(real, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    val spec = Dedup.simhash64Agg(real, "doc_id", "text")
+    val spec = DedupSpec.simhash64Agg(real, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(native === spec)
   }
@@ -668,5 +668,57 @@ class DedupSpec extends SparkSpec {
     val one = run(d.repartition(1))
     assert(one === run(d.repartition(13)))
     assert(one.nonEmpty) // sf0.001 carries planted near-dups
+  }
+}
+
+/** Executable specifications of the native signature kernels: the
+  * explode -> groupBy formulations the tests above cross-check
+  * [[graft.functions.MinhashSig]] and [[graft.functions.Simhash64Bands]]
+  * against. */
+object DedupSpec {
+  import org.apache.spark.sql.DataFrame
+  import TextFunctions.{HashMod, shingleHashes, wordHashes}
+  import Dedup.{SimhashBandBits, SimhashBands}
+
+  /** Specification form of [[Dedup.minhashSignatures]] (explode -> groupBy with
+    * k MIN aggregates). */
+  def minhashSignaturesAgg(
+      df: DataFrame, idCol: String, textCol: String, k: Int,
+      shingleN: Int = 3): DataFrame = {
+    val hashes = df.select(
+      col(idCol),
+      explode_outer(shingleHashes(col(textCol), shingleN)).as("h"))
+    val minCols = (0 until k).map { i =>
+      min(pmod(col("h") * (i * 2 + 1) + (i * 1000003L + 12345L),
+        lit(graft.functions.TextFunctions.HashMod))).as(s"m$i")
+    }
+    hashes
+      .groupBy(col(idCol))
+      .agg(minCols.head, minCols.tail: _*)
+      .select(col(idCol),
+        array((0 until k).map(i => col(s"m$i")): _*).as("sig"))
+  }
+
+  /** Specification form of [[Dedup.simhash64]]: explode -> groupBy with 64
+    * conditional SUMs (tests assert equality with the native kernel). */
+  def simhash64Agg(df: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val wh = df.select(
+      col(idCol), explode_outer(wordHashes(col(textCol))).as("h"))
+    val voteCols = (0 until SimhashBands * SimhashBandBits).map { j =>
+      sum(when(
+        pmod(col("h") * (2 * j + 1) + (j * 1000003L + 12345L),
+          lit(HashMod)) % 2 === 1, 1L).otherwise(-1L)).as(s"v$j")
+    }
+    val votes = wh.groupBy(col(idCol)).agg(voteCols.head, voteCols.tail: _*)
+    val bandCols = (0 until SimhashBands).map { b =>
+      (0 until SimhashBandBits).map { i =>
+        when(col(s"v${SimhashBandBits * b + i}") > 0,
+          lit(1L << i)).otherwise(lit(0L))
+      }.reduce(_ + _).as(s"band$b")
+    }
+    votes
+      .select(col(idCol) +: bandCols: _*)
+      .select(col(idCol),
+        array((0 until SimhashBands).map(b => col(s"band$b")): _*).as("bands"))
   }
 }

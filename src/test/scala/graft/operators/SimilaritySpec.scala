@@ -73,7 +73,7 @@ class SimilaritySpec extends SparkSpec {
     Seq(2, 4, 7).foreach { planes =>
       val diff = emb.select(
           SimilaritySearch.srpBucket(col("embedding"), planes).as("native"),
-          SimilaritySearch.srpBucketHof(col("embedding"), planes).as("hof"))
+          SimilaritySpec.srpBucketHof(col("embedding"), planes).as("hof"))
         .filter(col("native") =!= col("hof"))
       assert(diff.count() === 0, s"planes=$planes")
     }
@@ -492,7 +492,7 @@ class SimilaritySpec extends SparkSpec {
     val both = e.select(col("vec_id"),
         SimilaritySearch.dot(col("embedding"),
           typedLit(probe)).as("native"),
-        SimilaritySearch.dotHof(col("embedding"),
+        SimilaritySpec.dotHof(col("embedding"),
           typedLit(probe)).as("spec"))
       .collect()
     assert(both.nonEmpty)
@@ -505,7 +505,7 @@ class SimilaritySpec extends SparkSpec {
     val cv = probe.map(_.toDouble * 1.7)
     val mixed = e.limit(16).select(
         SimilaritySearch.dot(col("embedding"), typedLit(cv)).as("native"),
-        SimilaritySearch.dotHof(col("embedding"), typedLit(cv)).as("spec"))
+        SimilaritySpec.dotHof(col("embedding"), typedLit(cv)).as("spec"))
       .collect()
     mixed.foreach { r =>
       assert(java.lang.Double.doubleToLongBits(r.getDouble(0)) ===
@@ -515,7 +515,7 @@ class SimilaritySpec extends SparkSpec {
     val mm = spark.range(1).select(
       SimilaritySearch.dot(typedLit(Seq(1.0f, 2.0f)),
         typedLit(Seq(1.0f))).as("native"),
-      SimilaritySearch.dotHof(typedLit(Seq(1.0f, 2.0f)),
+      SimilaritySpec.dotHof(typedLit(Seq(1.0f, 2.0f)),
         typedLit(Seq(1.0f))).as("spec")).collect().head
     assert(mm.isNullAt(0) && mm.isNullAt(1))
   }
@@ -590,5 +590,43 @@ class SimilaritySpec extends SparkSpec {
       assert(math.abs(cshare - cn.toDouble / 8.0) < 1e-12)
     }
     assert(got.values.map(_._1).sum == rows.length.toLong)
+  }
+}
+
+/** Executable specifications of the native vector kernels: the
+  * expression-only formulations the tests above cross-check
+  * [[graft.functions.DotProduct]] and [[graft.functions.SrpBucket]]
+  * against, bit for bit. */
+object SimilaritySpec {
+  import org.apache.spark.sql.Column
+
+  /** Specification form via higher-order fold (two interpreted lambdas
+    * per element — 128 closure calls per 64-dim pair; kept as the
+    * reference semantics the native kernel must match bit-for-bit). */
+  def dotHof(x: Column, y: Column): Column =
+    aggregate(
+      zip_with(x, y, (u, v) => u.cast("double") * v.cast("double")),
+      lit(0.0), (acc, p) => acc + p)
+
+  /** Deterministic pseudo-random hyperplane component for (seed, plane j,
+    * dim i): in {-1, +1} — a sign-random projection (Charikar-style
+    * SRP-LSH) with no stored model. Knuth multiplicative hash on plain
+    * integer arithmetic so the oracle engine reproduces buckets exactly. */
+  private def planeSign(seed: Long, j: Int, i: Column): Column =
+    when(
+      shiftright((i + 1) * lit(2654435761L) + lit((j + 1) * 40503L + seed),
+        16) % 2 === 0,
+      lit(1.0)).otherwise(lit(-1.0))
+
+  /** Specification form: `planes` interpreted folds per row. */
+  def srpBucketHof(vec: Column, planes: Int, seed: Long = 42L): Column = {
+    val bits = (0 until planes).map { j =>
+      val proj = aggregate(
+        zip_with(vec, sequence(lit(0), size(vec) - 1),
+          (v, i) => v.cast("double") * planeSign(seed, j, i)),
+        lit(0.0), (acc, p) => acc + p)
+      when(proj > 0, lit(1L << j)).otherwise(lit(0L))
+    }
+    bits.reduce(_ + _)
   }
 }

@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** r04 additions: embedding-distribution drift, deterministic output
   * sharding, and the cross-source duplication matrix. Each checked

@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.SparkSpec
-import graft.model.{ManifestEntry, Sequence}
 import graft.rules.{RuleEngine, Rules}
 
 /** Physical-plan assertions: the plans we rely on at scale must actually
@@ -382,7 +381,6 @@ class PlanSpec extends SparkSpec {
 
   test("fused engine: the stats aggregate rides the row-rule scan as " +
       "observed metrics (one tokens decode, VERDICT r02 #1)") {
-    import graft.model.BaselineBin
     val seqs = graft.gen.SequenceGen.sequences(spark, 500)
     val manifest = graft.gen.SequenceGen.manifest(spark, 500)
     val staged = RuleEngine.planStaged(seqs, manifest, Rules.standard)

@@ -9,12 +9,14 @@ import graft.model._
 import org.apache.spark.sql.functions._
 
 /**
- * Fused-vs-classic equivalence: [[RuleEngine.planStaged]] (one tokens
- * decode — observe()-carried token stats + narrow aggregation) must produce
- * field-exact identical results to the classic [[RuleEngine.plan]] (two
- * full-array scans) on the same input: same violations, same verdicts, same
- * per-source aggregates. This is the proof obligation for the r03 scan
- * fusion (VERDICT r02 "Next round" #1).
+ * Observe-vs-fallback equivalence: [[RuleEngine.planStaged]] carries the
+ * per-source stats on the row-rule scan via observe() (one tokens
+ * decode); with no row rule to ride it falls back to the standalone
+ * [[RuleEngine.aggregateBySource]] pass, as a rule-delta run does. Both
+ * paths must produce field-exact identical results on the same input:
+ * same violations, same roll-up facts, same per-source aggregates. This
+ * is the proof obligation for the r03 scan fusion (VERDICT r02
+ * "Next round" #1).
  */
 class FusedEngineSpec extends SparkSpec {
   import spark.implicits._
@@ -42,27 +44,48 @@ class FusedEngineSpec extends SparkSpec {
     (Option(v.doc_id).getOrElse(""), v.rule_id, v.source, v.severity,
       v.observed)
 
-  test("fused staged plan reproduces the classic plan exactly") {
+  /** Every [[RuleEngine.SourceAggregate]] field except the serialized
+    * state, arrays compared by content. */
+  private def fields(aggs: Seq[RuleEngine.SourceAggregate]) =
+    aggs.sortBy(_.source).map(a => (a.source, a.nDocs, a.minNtok, a.maxNtok, a.avgNtok, a.totalTokens,
+      a.nullFracDocId, a.approxDistinctDocId, a.minTokenId, a.maxTokenId,
+      a.p50Ntok, a.p95Ntok, a.ntokHist.toSeq, a.tokenHist.toSeq))
+
+  test("observe path reproduces the aggregateBySource fallback exactly") {
     val rules = Rules.standard
-    val classic = RuleEngine.plan(
+    val observed = RuleEngine.planStaged(
       seqs, manifest, rules, Some(baseline))
-    val staged = RuleEngine.planStaged(
-      seqs, manifest, rules, Some(baseline))
+    val obsScan = observed.scanViolations.collect() // action => metrics ready
+    val obsFin = observed.finish()
 
-    val scanVios = staged.scanViolations.collect() // action => metrics ready
-    val fin = staged.finish()
+    // the same rule set minus its row rules: nothing to ride, so finish()
+    // runs the standalone aggregation pass
+    val fallback = RuleEngine.planStaged(
+      seqs, manifest,
+      RuleSet(rules.rules.filterNot(_.isInstanceOf[RowRule])),
+      Some(baseline))
+    val fbScan = fallback.scanViolations.collect()
+    val fbFin = fallback.finish()
 
-    // violations: classic union vs (scan ∪ driver-derived)
-    val classicSet = classic.violations.collect().map(key).sorted
-    val fusedSet = (scanVios ++ fin.driverViolations).map(key).sorted
-    assert(fusedSet.length === classicSet.length)
-    assert(fusedSet.sameElements(classicSet))
+    // violations: observed scan ∪ driver-derived vs the fallback's, with
+    // the row rules evaluated without an observation attached
+    val fbRow = RuleEngine.rowViolations(
+      RuleEngine.withManifest(seqs.toDF(), manifest), rules.rowRules)
+      .collect()
+    val fusedSet = (obsScan ++ obsFin.driverViolations).map(key).sorted
+    val fallbackSet =
+      (fbRow ++ fbScan ++ fbFin.driverViolations).map(key).sorted
+    assert(fusedSet.length === fallbackSet.length)
+    assert(fusedSet.sameElements(fallbackSet))
+    assert(obsFin.driverViolations.map(key).sorted ===
+      fbFin.driverViolations.map(key).sorted)
 
     // roll-up facts
-    assert(fin.sources === classic.sources)
-    assert(fin.rowCount === classic.rowCount)
-    assert(fin.notCompleted === classic.notCompleted)
-    assert(fin.stats === classic.stats) // field-exact incl. HLL + pcts JSON
+    assert(obsFin.sources === fbFin.sources)
+    assert(obsFin.rowCount === fbFin.rowCount)
+    assert(obsFin.notCompleted === fbFin.notCompleted)
+    assert(obsFin.stats === fbFin.stats) // field-exact incl. HLL + pcts JSON
+    assert(fields(obsFin.aggregates) === fields(fbFin.aggregates))
   }
 
   test("observed token stats are field-exact vs the classic aggregation") {
@@ -79,9 +102,10 @@ class FusedEngineSpec extends SparkSpec {
     // matched, including the token histogram feeding drift
     val classicStats = RuleEngine.statsMetricsFromAgg(classicAggs)
     assert(fin.stats.map(_._2) === Some(classicStats))
+    assert(fields(fin.aggregates) === fields(classicAggs))
   }
 
-  test("fused ValidationJob matches classic RuleEngine.validate verdicts") {
+  test("fused ValidationJob matches the staged evaluation helper") {
     val dir = tmpDir("fused-job")
     seqs.write.mode("overwrite").partitionBy("source")
       .parquet(s"$dir/input")
@@ -97,25 +121,25 @@ class FusedEngineSpec extends SparkSpec {
     assert(rep.rowsValidated === N)
 
     val input = spark.read.parquet(s"$dir/input").as[Sequence]
-    val classic = RuleEngine.validate(
+    val expected = Evaluate(
       input, manifest, Rules.standard,
       Some(spark.read.parquet(s"$dir/baseline").as[BaselineBin]))
 
     val wroteVio = spark.read
       .parquet(ValidationJob.violationsPath(cfg.outDir)).as[Violation]
       .collect().map(key).sorted
-    val classicVio = classic.violations.collect().map(key).sorted
-    assert(wroteVio.sameElements(classicVio))
-    assert(rep.violations === classicVio.length)
+    val expectedVio = expected.violations.collect().map(key).sorted
+    assert(wroteVio.sameElements(expectedVio))
+    assert(rep.violations === expectedVio.length)
 
     val wroteVer = spark.read
       .parquet(ValidationJob.verdictsPath(cfg.outDir)).as[Verdict]
       .collect().map(v => (v.source, v.rule_id, v.status, v.severity,
         v.metrics)).sorted
-    val classicVer = classic.verdicts
+    val expectedVer = expected.verdicts
       .collect().map(v => (v.source, v.rule_id, v.status, v.severity,
         v.metrics)).sorted
-    assert(wroteVer.sameElements(classicVer))
+    assert(wroteVer.sameElements(expectedVer))
 
     // drift must actually FIRE for the shifted sources (not vacuous)
     assert(wroteVer.exists(v =>
@@ -124,7 +148,6 @@ class FusedEngineSpec extends SparkSpec {
 
   test("empty input: the observation resolves (no hang) and manifest-only " +
       "sources still get verdicts") {
-    import org.apache.spark.sql.functions.col
     val dir = tmpDir("fused-empty")
     // a partitioned table with ZERO rows (schema-only write)
     SequenceGen.sequences(spark, 0L)

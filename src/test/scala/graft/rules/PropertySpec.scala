@@ -24,7 +24,7 @@ class PropertySpec extends SparkSpec {
       val seqs = SequenceGen.sequences(spark, 400, seed,
         Knobs(badNtokRate = rate))
       val manifest = SequenceGen.manifest(spark, 400, seed)
-      val res = RuleEngine.validate(seqs, manifest, Rules.standard)
+      val res = Evaluate(seqs, manifest, Rules.standard)
       val errCounts = res.violations.collect()
         .filter(_.severity == Severity.Error)
         .groupBy(v => (v.source, v.rule_id)).view.mapValues(_.length).toMap
@@ -43,7 +43,7 @@ class PropertySpec extends SparkSpec {
       val expected = seqs.collect().groupBy(_.doc_id)
         .filter(_._2.length > 1).keySet
       val manifest = SequenceGen.manifest(spark, 400, seed)
-      val got = RuleEngine.validate(seqs, manifest, Rules.standard)
+      val got = Evaluate(seqs, manifest, Rules.standard)
         .violations.filter($"rule_id" === Rules.RUniqueDocId)
         .select("doc_id").distinct().as[String].collect().toSet
       assert(got === expected, s"seed=$seed")

@@ -29,7 +29,7 @@ class RuleConfigSpec extends SparkSpec {
     val seqs = SequenceGen.sequences(spark, N, knobs = knobs)
     val manifest = SequenceGen.manifest(spark, N)
     def keys(rs: RuleSet) =
-      RuleEngine.validate(seqs, manifest, rs).violations
+      Evaluate(seqs, manifest, rs).violations
         .collect().map(v => (v.doc_id, v.rule_id)).sorted.toSeq
     assert(keys(loaded) === keys(Rules.standard))
   }
@@ -48,7 +48,7 @@ class RuleConfigSpec extends SparkSpec {
 
     val seqs = SequenceGen.sequences(spark, N)
     val manifest = SequenceGen.manifest(spark, N)
-    val res = RuleEngine.validate(seqs, manifest, rs)
+    val res = Evaluate(seqs, manifest, rs)
     val over = seqs.collect().filter(_.n_tok > 40)
     assert(over.nonEmpty) // generator spans the cap; the rule must fire
     val got = res.violations.collect()

@@ -14,7 +14,7 @@ class RuleEngineSpec extends SparkSpec {
       "drift rules that had no baseline to run against") {
     val seqs = SequenceGen.sequences(spark, N)
     val manifest = SequenceGen.manifest(spark, N)
-    val res = RuleEngine.validate(seqs, manifest, Rules.standard)
+    val res = Evaluate(seqs, manifest, Rules.standard)
     assert(res.violations.count() === 0)
     val statuses = res.verdicts.collect()
     assert(statuses.nonEmpty)
@@ -34,7 +34,7 @@ class RuleEngineSpec extends SparkSpec {
     val manifest = SequenceGen.manifest(spark, N)
     val baseline = graft.drift.Drift.histograms(
       seqs.toDF(), SequenceGen.vocabSize, "base")
-    val res = RuleEngine.validate(seqs, manifest, Rules.standard,
+    val res = Evaluate(seqs, manifest, Rules.standard,
       Some(baseline))
     val statuses = res.verdicts.collect()
     assert(statuses.forall(_.status == Status.Pass),
@@ -61,7 +61,7 @@ class RuleEngineSpec extends SparkSpec {
       .map(_.doc_id).toSet
     assert(expectedBad.nonEmpty)
 
-    val res = RuleEngine.validate(seqs, manifest, Rules.standard)
+    val res = Evaluate(seqs, manifest, Rules.standard)
     val flagged = res.violations
       .filter($"rule_id" === Rules.RConsistentNtok)
       .collect()
@@ -87,7 +87,7 @@ class RuleEngineSpec extends SparkSpec {
       .filter(_._2.length > 1).keySet
     assert(dupIds.nonEmpty)
 
-    val vios = RuleEngine.validate(seqs, manifest, Rules.standard)
+    val vios = Evaluate(seqs, manifest, Rules.standard)
       .violations.filter($"rule_id" === Rules.RUniqueDocId).collect()
     assert(vios.map(_.doc_id).toSet === dupIds)
     // observed payload lists all member sources
@@ -103,7 +103,7 @@ class RuleEngineSpec extends SparkSpec {
     // manifest counts derive from CLEAN generation, so sources that lost
     // rows to "mystery" now under-deliver => error; mystery => warning.
     val manifest = SequenceGen.manifest(spark, N)
-    val res = RuleEngine.validate(seqs, manifest, Rules.standard)
+    val res = Evaluate(seqs, manifest, Rules.standard)
     val vios = res.violations
       .filter($"rule_id" === Rules.RRefIntegrity).collect()
     val bySource = vios.groupBy(_.source)
@@ -120,7 +120,7 @@ class RuleEngineSpec extends SparkSpec {
       Sequence("D1234", Array(1), 1, "cardiac")) // too few digits
     val seqs = SequenceGen.sequences(spark, 100).union(bad.toDS())
     val manifest = SequenceGen.manifest(spark, 100)
-    val vios = RuleEngine.validate(seqs, manifest, Rules.standard)
+    val vios = Evaluate(seqs, manifest, Rules.standard)
       .violations.filter($"rule_id" === Rules.RSchema).collect()
     assert(vios.map(_.doc_id).toSet === Set("not-an-id", "D1234"))
   }
@@ -131,7 +131,7 @@ class RuleEngineSpec extends SparkSpec {
       .map(s => ManifestEntry(s, 0L, 0, 10)) // absurdly tight range
       .toDS()
     // expected_docs=0 actual>0 triggers RI warnings, ignore those here
-    val vios = RuleEngine.validate(seqs, manifest, Rules.standard)
+    val vios = Evaluate(seqs, manifest, Rules.standard)
       .violations.filter($"rule_id" === Rules.RTokenRange)
     assert(vios.count() > 0)
   }
@@ -144,7 +144,7 @@ class RuleEngineSpec extends SparkSpec {
       ManifestEntry("badneg", -5L, 0, 100), // invalid expected_docs
       ManifestEntry("badrange", 1L, 100, 0) // min_tok > max_tok
     )).toDS()
-    val res = RuleEngine.validate(seqs, manifest, Rules.standard)
+    val res = Evaluate(seqs, manifest, Rules.standard)
     val vios = res.violations.filter($"rule_id" === Rules.RManifest).collect()
     assert(vios.exists(v => v.source == "cardiac" &&
       v.observed.contains("duplicate_manifest_rows")))
@@ -173,7 +173,7 @@ class RuleEngineSpec extends SparkSpec {
     val manifest = SequenceGen.manifest(spark, 100)
     val rules = Rules.withSnapshotEquality
 
-    val res = RuleEngine.validate(cur, manifest, rules,
+    val res = Evaluate(cur, manifest, rules,
       refSnapshot = Some(ref))
     val vios = res.violations
       .filter($"rule_id" === Rules.RSnapshotEquality).collect()
@@ -185,26 +185,37 @@ class RuleEngineSpec extends SparkSpec {
       .contains("missing_in_new"))
 
     // no reference snapshot -> the rule reports NOT_COMPLETED, never PASS
-    val res2 = RuleEngine.validate(cur, manifest, rules)
+    val res2 = Evaluate(cur, manifest, rules)
     val statuses = res2.verdicts
       .filter($"rule_id" === Rules.RSnapshotEquality).collect()
     assert(statuses.nonEmpty &&
       statuses.forall(_.status == Status.NotCompleted))
   }
 
-  test("partitionStats produces sane per-source statistics") {
+  test("R_STATS metrics and aggregates carry sane per-source statistics") {
     val seqs = SequenceGen.sequences(spark, 1000)
-    val stats = RuleEngine.partitionStats(seqs.toDF()).collect()
-    assert(stats.length === SequenceGen.sources.size)
-    stats.foreach { r =>
-      val n = r.getAs[Long]("n_docs")
-      assert(n > 0)
-      assert(r.getAs[Int]("min_ntok") >= SequenceGen.minLen)
-      assert(r.getAs[Int]("max_token_id") < SequenceGen.vocabSize)
-      assert(r.getAs[Double]("null_frac_doc_id") === 0.0)
+    val manifest = SequenceGen.manifest(spark, 1000)
+    val res = Evaluate(seqs, manifest, Rules.standard)
+    val aggs = res.fin.aggregates
+    assert(aggs.length === SequenceGen.sources.size)
+    aggs.foreach { a =>
+      assert(a.nDocs > 0)
+      assert(a.minNtok >= SequenceGen.minLen)
+      assert(a.maxTokenId < SequenceGen.vocabSize)
+      assert(a.nullFracDocId === 0.0)
     }
-    val total = stats.map(_.getAs[Long]("n_docs")).sum
-    assert(total === 1000L)
+    assert(aggs.map(_.nDocs).sum === 1000L)
+    // the R_STATS verdict of every source carries the same figures
+    val metrics = res.verdicts.filter($"rule_id" === Rules.RStats).collect()
+      .map(v => v.source -> v.metrics).toMap
+    assert(metrics.keySet === SequenceGen.sources.toSet)
+    aggs.foreach { a =>
+      val m = metrics(a.source)
+      assert(m.contains(s""""n_docs":${a.nDocs},"""), m)
+      assert(m.contains(s""""min_ntok":${a.minNtok},"""), m)
+      assert(m.contains(s""""max_token_id":${a.maxTokenId},"""), m)
+      assert(m.contains(""""null_frac_doc_id":0.0,"""), m)
+    }
   }
 
   test("R_TOKEN_ENTROPY flags a collapsed-token source (stuck generator) " +
@@ -215,7 +226,7 @@ class RuleEngineSpec extends SparkSpec {
       Sequence(f"D0000000009$i%02d", Array.fill(32)(7), 32, "stuck_src"))
     val seqs = (base ++ stuck).toDS()
     val manifest = SequenceGen.manifest(spark, N)
-    val res = RuleEngine.validate(seqs, manifest, Rules.standard)
+    val res = Evaluate(seqs, manifest, Rules.standard)
     val flagged = res.violations
       .filter($"rule_id" === Rules.RTokenEntropy).collect()
     assert(flagged.map(_.source).toSet === Set("stuck_src"),

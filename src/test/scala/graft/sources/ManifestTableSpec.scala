@@ -5,8 +5,6 @@ import graft.gen.SequenceGen
 import org.apache.spark.sql.functions._
 
 class ManifestTableSpec extends SparkSpec {
-  import spark.implicits._
-
   private def writeTable(dir: String, n: Int = 300): String = {
     val t = s"$dir/t"
     SequenceGen.sequences(spark, n).toDF()

@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** Streaming embedding-centroid drift: convergence to the driver-computed
   * cumulative cosine, shifted-label detection, bounded per-batch work. */

@@ -4,7 +4,6 @@ import graft.SparkSpec
 import graft.gen.SequenceGen
 import graft.model.Sequence
 import graft.sources.ManifestTable
-import org.apache.spark.sql.functions._
 
 /** startSplitIngest: validate-at-the-door streaming ingestion — clean
   * rows land exactly-once in the manifested main table, rule-condemned

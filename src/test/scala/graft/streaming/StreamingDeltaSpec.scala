@@ -4,7 +4,6 @@ import graft.SparkSpec
 import graft.gen.SequenceGen
 import graft.jobs.ValidationJob
 import graft.model.Sequence
-import org.apache.spark.sql.functions._
 import scala.collection.mutable.ListBuffer
 
 /** startDeltaValidating: the streaming orchestrator over the full
