@@ -42,38 +42,10 @@ object TextFunctions {
     * it is cross-checked against. */
   def shingleHashes(text: Column, n: Int): Column = ShingleHashes(text, n)
 
-  /** MinHash signature: for i in [0,k), min over shingle hashes h of
-    * (a_i*h + b_i) mod p with a_i = 2i+1, b_i = 1000003*i + 12345. */
-  def minhashSignature(shingleHashArr: Column, k: Int): Column =
-    transform(
-      sequence(lit(0), lit(k - 1)),
-      i =>
-        array_min(transform(
-          shingleHashArr,
-          h => pmod(h * (i * 2 + 1) + (i * lit(1000003L) + lit(12345L)),
-            lit(HashMod)))))
-
-  /** Word hashes of a text (compute once, feed to [[simhashFromHashes]]).
-    * Native single-pass kernel; the transform-pipeline spec is
+  /** Word hashes of a text, in order with repeats kept (polyHash of each
+    * word). Native single-pass kernel; the transform-pipeline spec is
     * `wordHashesHof` in PolyHashSpec, cross-checked there. */
   def wordHashes(text: Column): Column = ShingleHashes.wordHashes(text)
-
-  /** SimHash over precomputed word hashes, `bits` wide: bit j set iff the
-    * sum over words of (+1 if bit j of hash else -1) is positive. */
-  def simhashFromHashes(hashes: Column, bits: Int): Column = {
-    val bitCols = (0 until bits).map { j =>
-      val votes = aggregate(
-        hashes,
-        lit(0L),
-        (acc, h) =>
-          acc + when(shiftright(h, j) % 2 === 1, lit(1L)).otherwise(lit(-1L)))
-      when(votes > 0, lit(1L << j)).otherwise(lit(0L))
-    }
-    bitCols.reduce(_ + _)
-  }
-
-  def simhash(text: Column, bits: Int): Column =
-    simhashFromHashes(wordHashes(text), bits)
 
   /** Exact word-count and distinct-word (type) count. */
   def tokenCount(text: Column): Column = size(words(text))

@@ -245,7 +245,10 @@ object Dedup {
           " ").as("new_text"))
   }
 
-  /** (id, minhash signature) for every doc. k = signature length.
+  /** (id, minhash signature) for every doc. k = signature length; slot
+    * i in [0,k) is the min over the doc's shingle hashes h of
+    * (a_i·h + b_i) mod p with a_i = 2i+1, b_i = 1000003·i + 12345,
+    * p = [[graft.functions.TextFunctions.HashMod]].
     *
     * ONE codegen'd projection (native [[graft.functions.MinhashSig]]): the
     * signature is a per-row function of the row's own shingles. The
@@ -322,54 +325,72 @@ object Dedup {
         estSim(col("sig_a"), col("sig_b"), k).as("est_sim"))
   }
 
+  /** The key index of every self-join pair generator: `idx`
+    * hash-partitioned on `key` once, minus every key with more than
+    * `maxPerKey` rows (`<=` keeps a key of exactly `maxPerKey` rows, as
+    * the oracles' `HAVING COUNT(*) <= cap`). `Int.MaxValue` is uncapped:
+    * nothing above the repartition.
+    *
+    * Shared exchange: the key degree is a count window over that same
+    * partitioning, and [[boundedSelfJoin]]'s two branches are identical
+    * subtrees down to the repartition, so the planner runs it once
+    * (ReusedExchange) and the equi-join on `key` adds no exchange. The
+    * corpus is scanned, and its key kernel evaluated, once per query.
+    * Without the repartition each branch shuffles its own
+    * differently-aliased projection and nothing below it is reused (two
+    * scans). Post-cap keys hold <= maxPerKey rows, so the join has no hot
+    * key; the cap window's degenerate-key task is count-only and spills.
+    * Null keys never pair (the equi-join drops them). */
+  private[operators] def cappedIndex(
+      idx: DataFrame, key: Seq[String], maxPerKey: Int): DataFrame = {
+    val keyCols = key.map(col)
+    val parted = idx.repartition(keyCols: _*)
+    if (maxPerKey == Int.MaxValue) parted
+    else parted
+      .withColumn("key_degree", count(lit(1)).over(
+        org.apache.spark.sql.expressions.Window.partitionBy(keyCols: _*)))
+      .filter(col("key_degree") <= maxPerKey)
+      .drop("key_degree")
+  }
+
+  /** Every unordered pair of `index` rows sharing `key`: columns `key`,
+    * id_a, id_b, and p_a, p_b for each `payload` column p, with
+    * id_a < id_b. Both branches project the same `index`, so over a
+    * [[cappedIndex]] they share its one exchange (see there). A pair
+    * sharing several keys appears once per key; callers apply their
+    * verdict first and then `distinct` or aggregate. */
+  private[operators] def boundedSelfJoin(
+      index: DataFrame, key: Seq[String], idCol: String,
+      payload: Seq[String] = Nil): DataFrame = {
+    def side(s: String): DataFrame = index.select(
+      key.map(col) ++ (col(idCol).as(s"id_$s") +:
+        payload.map(p => col(p).as(s"${p}_$s"))): _*)
+    side("a").join(side("b"), key).filter(col("id_a") < col("id_b"))
+  }
+
   /** MinHash-LSH candidate pairs with estimated Jaccard >= minEstSim.
     * Signature split into `bands` bands of k/bands rows; docs sharing any
     * band bucket become candidates; est sim = matching minhash fraction.
+    * `maxBucketSize` drops degenerate band buckets.
     *
-    * r06 plan (guide §2.4 shared exchange + §2.3 narrow exchanges): the
-    * banded table is hash-partitioned on (band_idx, band_key) ONCE and
-    * that single exchange feeds the bucket-size cap (a count window over
-    * the same partitioning — band_key is never null, concat_ws can't
-    * return null, so window-group vs join-key null semantics can't
-    * diverge) and BOTH self-join branches via ReusedExchange. The r05
-    * shape (groupBy sizes + left-semi + independent l/r subtrees) planned
-    * the MinhashSig corpus kernel FOUR times (measured in the sf0.1
-    * plan: four parquet scans each with its own Generate). est_sim is
-    * now computed in the join projection and thresholded BEFORE the
-    * dedup, so the distinct exchange carries (id_a, id_b, est_sim)
-    * survivors instead of every candidate with two k-long signatures.
-    * Equivalence: sig is functionally determined by id, so distinct on
-    * (id_a, id_b, sig_a, sig_b) = distinct on (id_a, id_b, est_sim), and
-    * filter/distinct commute. Post-cap buckets are <= maxBucketSize, so
-    * the self-join itself has no hot keys by construction; the cap
-    * window's degenerate-bucket task is count-only and spills. */
+    * Plan: the banded table is the [[cappedIndex]] on (band_idx,
+    * band_key), joined by [[boundedSelfJoin]] (one corpus scan, one
+    * shared exchange; see there). est_sim is computed in the join
+    * projection and thresholded BEFORE the dedup, so the distinct
+    * exchange carries (id_a, id_b, est_sim) survivors instead of every
+    * candidate with two k-long signatures. Equivalence: sig is
+    * functionally determined by id, so distinct on (id_a, id_b, sig_a,
+    * sig_b) = distinct on (id_a, id_b, est_sim), and filter/distinct
+    * commute. */
   def minhashLshPairs(
       df: DataFrame, idCol: String, textCol: String,
       k: Int = 16, bands: Int = 4, minEstSim: Double = 0.5,
       shingleN: Int = 3, maxBucketSize: Int = Int.MaxValue): DataFrame = {
-    val banded = bandedSignatures(df, idCol, textCol, k, bands, shingleN)
-
-    // the UNCAPPED form (small-scale oracle baseline — the capped form is
-    // the documented scale configuration) skips the repartition: with no
-    // cap window to feed there is nothing to share, and the l/r subtrees'
-    // band exchanges are reused at runtime anyway
-    val capped =
-      if (maxBucketSize == Int.MaxValue) banded
-      else banded
-        .repartition(col("band_idx"), col("band_key"))
-        .withColumn("bsz", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy(col("band_idx"), col("band_key"))))
-        .filter(col("bsz") <= maxBucketSize)
-        .drop("bsz")
-
-    val l = capped.select(col("band_idx"), col("band_key"),
-      col(idCol).as("id_a"), col("sig").as("sig_a"))
-    val r = capped.select(col("band_idx"), col("band_key"),
-      col(idCol).as("id_b"), col("sig").as("sig_b"))
-
-    l.join(r, Seq("band_idx", "band_key"))
-      .filter(col("id_a") < col("id_b"))
+    val bandKey = Seq("band_idx", "band_key")
+    val index = cappedIndex(
+      bandedSignatures(df, idCol, textCol, k, bands, shingleN),
+      bandKey, maxBucketSize)
+    boundedSelfJoin(index, bandKey, idCol, Seq("sig"))
       .select(col("id_a"), col("id_b"),
         estSim(col("sig_a"), col("sig_b"), k).as("est_sim"))
       .filter(col("est_sim") >= minEstSim)
@@ -408,13 +429,6 @@ object Dedup {
       .select(col("id_a"), col("id_b"), col("est_sim"), col("exact_sim"),
         (col("est_sim") - col("exact_sim")).as("err"))
   }
-
-  /** (id, simhash) for every doc — `bits`-wide locality-sensitive hash.
-    * Legacy narrow form (bits <= ~30, limited by the polynomial hash
-    * width); the pair path uses the 64-bit band form below. */
-  def simhashes(df: DataFrame, idCol: String, textCol: String,
-      bits: Int = 16): DataFrame =
-    df.select(col(idCol), simhash(col(textCol), bits).as("simhash"))
 
   /** Number of simhash bands and bits per band: 4 x 16 = a 64-bit simhash
     * in band-array form (array<long> of 4 values in [0, 65536)). The array
@@ -509,44 +523,25 @@ object Dedup {
     * signature table — the blocking join [[simhashPairs64]] runs on text
     * SimHashes and [[graft.operators.Multimodal.phash64]] runs on media
     * perceptual hashes. Same pigeonhole completeness (maxHamming ≤
-    * nBands − 1) and degenerate-bucket cap contract. */
+    * nBands − 1) and degenerate-bucket cap contract.
+    *
+    * Plan: [[cappedIndex]] on (band_idx, band_key) + [[boundedSelfJoin]]
+    * (one scan, one shared exchange; see there), with the hamming verdict
+    * before the distinct, as in [[minhashLshPairs]]: hamming is
+    * functionally determined by the pair, so filter/distinct commute and
+    * the distinct exchange carries (id_a, id_b, hamming) survivors. */
   def bandedHammingPairs(sh: DataFrame, idCol: String,
       maxHamming: Int = 3, maxBucketSize: Int = Int.MaxValue): DataFrame = {
-    // r06: same shared-exchange + verdict-before-distinct restructure as
-    // minhashLshPairs (see its header) — one (band_idx, band_key)
-    // partitioning reused by the cap window and both join branches; the
-    // distinct exchange carries (id_a, id_b, hamming) survivors instead
-    // of candidate rows with both band arrays. Band keys are long array
-    // elements (never null); hamming is functionally determined by the
-    // pair, so filter/distinct commute and the dedup key is equivalent.
-    val banded = sh.select(
-      col(idCol), col("bands"),
-      posexplode(col("bands")).as(Seq("band_idx", "band_key")))
-
-    // uncapped form skips the repartition — same reasoning as
-    // minhashLshPairs above
-    val capped =
-      if (maxBucketSize == Int.MaxValue) banded
-      else banded
-        .repartition(col("band_idx"), col("band_key"))
-        .withColumn("bsz", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy(col("band_idx"), col("band_key"))))
-        .filter(col("bsz") <= maxBucketSize)
-        .drop("bsz")
-
-    val l = capped.select(col("band_idx"), col("band_key"),
-      col(idCol).as("id_a"), col("bands").as("b_a"))
-    val r = capped.select(col("band_idx"), col("band_key"),
-      col(idCol).as("id_b"), col("bands").as("b_b"))
-
+    val bandKey = Seq("band_idx", "band_key")
+    val index = cappedIndex(
+      sh.select(col(idCol), col("bands"),
+        posexplode(col("bands")).as(bandKey)),
+      bandKey, maxBucketSize)
     val hamming = (0 until SimhashBands).map { i =>
-      bit_count(element_at(col("b_a"), i + 1)
-        .bitwiseXOR(element_at(col("b_b"), i + 1)))
+      bit_count(element_at(col("bands_a"), i + 1)
+        .bitwiseXOR(element_at(col("bands_b"), i + 1)))
     }.reduce(_ + _)
-
-    l.join(r, Seq("band_idx", "band_key"))
-      .filter(col("id_a") < col("id_b"))
+    boundedSelfJoin(index, bandKey, idCol, Seq("bands"))
       .select(col("id_a"), col("id_b"), hamming.as("hamming"))
       .filter(col("hamming") <= maxHamming)
       .distinct()
@@ -721,9 +716,7 @@ object Dedup {
     * off, results are exact.
     *
     * Plan shape: sizes come from a pure projection (no explode); the
-    * exploded inverted index is built ONCE and explicitly hash-partitioned
-    * on shingle, so the self-join's two branches reuse a single exchange
-    * (r01 recomputed the explode three times). */
+    * exploded inverted index is built once ([[shinglePairCounts]]). */
   def jaccardPairs(df: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, minJaccard: Double = 0.5,
       maxDf: Int = Int.MaxValue): DataFrame =
@@ -762,34 +755,24 @@ object Dedup {
     * inverted-index shuffle carries 8-byte longs instead of shingle
     * strings, and no shingle string is ever materialized. Set overlap over
     * hashed shingles equals string overlap up to hash collisions, which
-    * the oracle reproduces identically. */
+    * the oracle reproduces identically.
+    *
+    * Plan: [[cappedIndex]] on shingle + [[boundedSelfJoin]] (one scan,
+    * one shared exchange; see there). */
   private def shinglePairCounts(df: DataFrame, idCol: String,
       textCol: String, shingleN: Int, maxDf: Int): DataFrame = {
     val shingleSet = shingleHashes(col(textCol), shingleN)
     val sizes = df.select(col(idCol), size(shingleSet).as("n_shingles"))
 
-    val docShingles = df.select(col(idCol), explode(shingleSet).as("shingle"))
-
-    // ONE exchange on shingle serves everything: the df cap is a window
-    // count over the same partitioning (no second explode, no extra
-    // shuffle), and both self-join branches reuse the exchange. r06: the
-    // capped index is materialized via localCheckpoint (partitioning and
-    // shingle ordering survive into the LogicalRDD), so the self-join
+    val capped = cappedIndex(
+      df.select(col(idCol), explode(shingleSet).as("shingle")),
+      Seq("shingle"), maxDf)
+    // the capped index is materialized via localCheckpoint (partitioning
+    // and shingle ordering survive into the LogicalRDD), so the self-join
     // consumes it twice without re-running the cap window + sort per
     // branch and without a broadcast build of the whole index.
-    val idx0 = docShingles.repartition(col("shingle"))
-    val idx =
-      if (maxDf == Int.MaxValue) idx0
-      else idx0
-        .withColumn("df", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window.partitionBy(col("shingle"))))
-        .filter(col("df") <= maxDf)
-        .drop("df")
-        .localCheckpoint()
-    val l = idx.select(col("shingle"), col(idCol).as("id_a"))
-    val r = idx.select(col("shingle"), col(idCol).as("id_b"))
-    val inter = l.join(r, Seq("shingle"))
-      .filter(col("id_a") < col("id_b"))
+    val idx = if (maxDf == Int.MaxValue) capped else capped.localCheckpoint()
+    val inter = boundedSelfJoin(idx, Seq("shingle"), idCol)
       .groupBy("id_a", "id_b")
       .agg(count(lit(1)).as("n_inter"))
 
@@ -1019,28 +1002,19 @@ object Dedup {
     * trade recall for pair-list size.
     *
     * Scale shape: jaccardPairs' inverted-index discipline on a ~2/(w+1)
-    * density index — ONE exchange on fp serves the df-cap window and both
-    * self-join branches; `maxDf` drops boilerplate fingerprints (df > cap)
-    * before any pair forms, bounding the pair space by Σ_fp df². */
+    * density index — [[cappedIndex]] on fp + [[boundedSelfJoin]] (one
+    * scan, one shared exchange; see there); `maxDf` drops boilerplate
+    * fingerprints (df > cap) before any pair forms, bounding the pair
+    * space by Σ_fp df². */
   def winnowPairs(df: DataFrame, idCol: String, textCol: String,
       k: Int = 4, w: Int = 5, minShared: Long = 2L,
-      maxDf: Int = Int.MaxValue): DataFrame = {
-    val idx0 = winnowFps(df, idCol, textCol, k, w)
-      .repartition(col("fp"))
-    val idx =
-      if (maxDf == Int.MaxValue) idx0
-      else idx0
-        .withColumn("df", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window.partitionBy(col("fp"))))
-        .filter(col("df") <= maxDf)
-        .drop("df")
-    idx.select(col("fp"), col(idCol).as("id_a"))
-      .join(idx.select(col("fp"), col(idCol).as("id_b")), Seq("fp"))
-      .filter(col("id_a") < col("id_b"))
+      maxDf: Int = Int.MaxValue): DataFrame =
+    boundedSelfJoin(
+        cappedIndex(winnowFps(df, idCol, textCol, k, w), Seq("fp"), maxDf),
+        Seq("fp"), idCol)
       .groupBy("id_a", "id_b")
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)
-  }
 
   /** Sorted-neighborhood near-duplicate pairs (Hernández & Stolfo 1995's
     * merge/purge sliding-window method, public algorithm, re-expressed

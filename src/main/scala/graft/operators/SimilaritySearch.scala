@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 /**
  * Similarity search over an embedding column (`array<float>`).
@@ -541,9 +540,10 @@ object SimilaritySearch {
     * embedding puts every copy in one bucket — is unboundedly quadratic.
     * `maxBucketSize` drops buckets above the cap BEFORE the join (same
     * contract as [[Dedup.minhashLshPairs]]: an over-common signature
-    * carries no near-dup signal). The bucket count rides the SAME exchange
-    * the self-join reuses (a window over the bucket partitioning — no
-    * extra shuffle). */
+    * carries no near-dup signal). The bucketed path is
+    * [[Dedup.cappedIndex]] on bucket + [[Dedup.boundedSelfJoin]] (one
+    * scan, one shared exchange; see there), with norms computed once per
+    * row below the exchange. */
   def embeddingDupPairs(corpus: DataFrame, idCol: String, vecCol: String,
       minCos: Double, planes: Int = 0, seed: Long = 42L,
       maxBucketSize: Int = Int.MaxValue): DataFrame = {
@@ -570,26 +570,14 @@ object SimilaritySearch {
     val base =
       if (planes > 0) lshBuckets(corpus, vecCol, planes, seed)
       else corpus.withColumn("bucket", lit(0L))
-    // norms once per row; the repartition is the projection barrier AND the
-    // single exchange both self-join branches reuse
-    val withNorm0 = base.select(col("bucket"), col(idCol),
-      col(vecCol).as("v"), norm(col(vecCol)).as("n"))
-      .repartition(col("bucket"))
-    val withNorm =
-      if (maxBucketSize == Int.MaxValue) withNorm0
-      else withNorm0
-        .withColumn("bsz",
-          count(lit(1)).over(Window.partitionBy(col("bucket"))))
-        .filter(col("bsz") <= maxBucketSize)
-        .drop("bsz")
-    val l = withNorm.select(col("bucket"), col(idCol).as("id_a"),
-      col("v").as("va"), col("n").as("na"))
-    val r = withNorm.select(col("bucket"), col(idCol).as("id_b"),
-      col("v").as("vb"), col("n").as("nb"))
-    l.join(r, Seq("bucket"))
-      .filter(col("id_a") < col("id_b"))
+    val index = Dedup.cappedIndex(
+      base.select(col("bucket"), col(idCol),
+        col(vecCol).as("v"), norm(col(vecCol)).as("n")),
+      Seq("bucket"), maxBucketSize)
+    Dedup.boundedSelfJoin(index, Seq("bucket"), idCol, Seq("v", "n"))
       .select(col("id_a"), col("id_b"),
-        cosineWithNorms(col("va"), col("vb"), col("na"), col("nb")).as("cos"))
+        cosineWithNorms(col("v_a"), col("v_b"), col("n_a"), col("n_b"))
+          .as("cos"))
       .filter(col("cos") >= minCos)
   }
 

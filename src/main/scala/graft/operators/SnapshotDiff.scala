@@ -63,10 +63,4 @@ object SnapshotDiff {
       lit(0L),
       (h, t) => pmod(h * lit(31L) + t.cast("long"),
         lit(graft.functions.TextFunctions.HashMod)))
-
-  /** Token-array equality between two sequence snapshots: diff on doc_id
-    * comparing (poly hash of tokens, n_tok). */
-  def tokenEquality(oldSnap: DataFrame, newSnap: DataFrame): DataFrame =
-    diff(oldSnap, newSnap, "doc_id",
-      tokenArrayHash(col("tokens")), col("n_tok"))
 }

@@ -201,7 +201,7 @@ object ManifestTable {
     readFull(spark, table).flatMap { df =>
       if (!df.columns.contains("commit_key")) None
       else Option(df.select(first(col("commit_key"), ignoreNulls = false))
-        .head.getString(0))
+        .head().getString(0))
     }
 
   /** EXACTLY-ONCE keyed append into a manifested table — the streaming
@@ -293,7 +293,7 @@ object ManifestTable {
       if (!df.columns.contains("row_count")) None
       else {
         val r = df.agg(
-          sum(col("row_count")), count(lit(1)), count(col("row_count"))).head
+          sum(col("row_count")), count(lit(1)), count(col("row_count"))).head()
         if (r.getLong(2) != r.getLong(1)) None
         else Some(if (r.isNullAt(0)) 0L else r.getLong(0))
       }
@@ -313,7 +313,7 @@ object ManifestTable {
       else {
         val r = df.agg(
           min(col(mnc)), max(col(mxc)),
-          count(lit(1)), count(col(mnc)), count(col(mxc))).head
+          count(lit(1)), count(col(mnc)), count(col(mxc))).head()
         if (r.getLong(2) == 0L || r.getLong(3) != r.getLong(2) ||
             r.getLong(4) != r.getLong(2)) None
         else Some((r.getLong(0), r.getLong(1)))

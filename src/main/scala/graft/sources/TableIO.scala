@@ -40,16 +40,13 @@ object TableIO {
       if (!recluster) df
       else if (saltFiles <= 1) df.repartition(n, col(partitionCol))
       else df.repartition(n, col(partitionCol),
-        pmod(xxhash64(struct(df.columns.map(col): _*)), lit(saltFiles.toLong)))
+        pmod(xxhash64(struct(df.columns.toIndexedSeq.map(col): _*)), lit(saltFiles.toLong)))
     clustered.write
       .mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionCol)
       .parquet(path)
   }
-
-  def readTable(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
 
   /** Bucketed table write — the co-located-join layout for keyed passes
     * at the 10^12-row shape. A table bucketed by `doc_id` gives every

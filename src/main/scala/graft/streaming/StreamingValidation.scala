@@ -550,7 +550,7 @@ object StreamingValidation {
     // superseded files are invisible to readers from here on; dropping
     // them is pure space reclamation, crash-tolerant in any order
     TableIO.deletePartitions(
-      spark, statePath, "batch_id", genIds.map(_.toString))
+      spark, statePath, "batch_id", genIds.map(_.toString).toIndexedSeq)
     if (baseHw >= 0)
       TableIO.deletePartitions(
         spark, driftBasePath(outDir, ns), "hw", Seq(baseHw.toString))

@@ -258,7 +258,7 @@ class CleanupJobSpec extends SparkSpec {
       .orderBy("source", "doc_id").collect().toSeq
     val allFiles = ManifestTable.read(spark, dir).get.count()
     val med = spark.read.parquet(dir)
-      .selectExpr("percentile_approx(n_tok, 0.5)").head.getInt(0).toLong
+      .selectExpr("percentile_approx(n_tok, 0.5)").head().getInt(0).toLong
     val prunedBefore =
       ManifestTable.prunedFiles(spark, dir, "n_tok", med, med).get.size
     assert(prunedBefore.toLong === allFiles) // scatter defeats zone maps

@@ -281,15 +281,22 @@ class DedupSpec extends SparkSpec {
   }
 
   test("LSH bucket cap drops degenerate buckets") {
-    // 20 identical docs -> one giant bucket; cap 5 must yield zero pairs
+    // 20 identical docs -> one giant bucket per band. The cap keeps a
+    // bucket of exactly maxBucketSize docs (<=, as the oracles' HAVING
+    // COUNT(*) <= cap): cap 20 keeps every pair, cap 19 and cap 5 none.
     val many = (1L to 20L).map(i => (i, "same same same text here"))
       .toDF("doc_id", "text")
-    val capped = Dedup.minhashLshPairs(many, "doc_id", "text",
-      k = 16, bands = 4, minEstSim = 0.0, maxBucketSize = 5)
-    assert(capped.count() === 0)
-    val uncapped = Dedup.minhashLshPairs(many, "doc_id", "text",
-      k = 16, bands = 4, minEstSim = 0.0)
-    assert(uncapped.count() === 190) // 20 choose 2
+    val generators = Seq[(String, Int => org.apache.spark.sql.DataFrame)](
+      "minhashLshPairs" -> (cap => Dedup.minhashLshPairs(many, "doc_id",
+        "text", k = 16, bands = 4, minEstSim = 0.0, maxBucketSize = cap)),
+      "simhashPairs64" -> (cap => Dedup.simhashPairs64(many, "doc_id",
+        "text", maxHamming = 3, maxBucketSize = cap)))
+    for ((name, pairs) <- generators) {
+      assert(pairs(5).count() === 0, name)
+      assert(pairs(19).count() === 0, name)
+      assert(pairs(20).count() === 190, name) // 20 choose 2
+      assert(pairs(Int.MaxValue).count() === 190, name) // uncapped
+    }
   }
 
   test("chunk passage dedup: cross-doc shared chunks counted per " +

@@ -104,9 +104,9 @@ class MultimodalSpec extends SparkSpec {
     // kernel is order-invariant in the hash array (collect_list order)
     val fps = Seq(7L, 99L, 3L, 1234567L)
     val a = Seq(fps).toDF("fps").select(
-      graft.functions.SimhashFromHashes(col("fps"), 4, 16)).head.getSeq[Long](0)
+      graft.functions.SimhashFromHashes(col("fps"), 4, 16)).head().getSeq[Long](0)
     val b = Seq(fps.reverse).toDF("fps").select(
-      graft.functions.SimhashFromHashes(col("fps"), 4, 16)).head.getSeq[Long](0)
+      graft.functions.SimhashFromHashes(col("fps"), 4, 16)).head().getSeq[Long](0)
     assert(a === b)
   }
 

@@ -90,6 +90,29 @@ class PlanSpec extends SparkSpec {
       plan.take(3000))
   }
 
+  test("every self-join pair query builds its key index from ONE corpus " +
+      "scan: both join branches share a single key exchange") {
+    // query -> the key its capped index is hash-partitioned on
+    val keyed = Seq(
+      "dedup_minhash_pairs" -> "band_idx",
+      "dedup_minhash_pairs_capped" -> "band_idx",
+      "dedup_simhash_pairs" -> "band_idx",
+      "dedup_simhash_pairs_capped" -> "band_idx",
+      "dedup_winnow_pairs" -> "fp",
+      "dedup_embedding_pairs_lsh" -> "bucket",
+      "mm_phash_pairs" -> "band_idx",
+      "dedup_jaccard_pairs_capped" -> "shingle",
+      "dedup_containment_pairs" -> "shingle")
+    for ((q, key) <- keyed) {
+      val plan = finalPlan(q)
+      assert("FileScan parquet".r.findAllIn(plan).size === 1,
+        s"$q\n" + plan.take(4000))
+      assert(plan.contains("ReusedExchange") ||
+        s"Exchange hashpartitioning\\($key".r.findAllIn(plan).size <= 1,
+        s"$q\n" + plan.take(4000))
+    }
+  }
+
   test("token burstiness: top-64 is a bounded TakeOrdered over the " +
       "rolled-up vocab — never a full vocabulary sort") {
     val plan = executedPlan("token_burstiness")

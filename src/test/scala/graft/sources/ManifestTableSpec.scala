@@ -96,12 +96,12 @@ class ManifestTableSpec extends SparkSpec {
     assert(man.columns.toSet.contains("min_n_tok"))
     assert(man.filter(col("row_count").isNull).count() === 0)
     // per-file row counts reconcile with the table
-    assert(man.agg(sum(col("row_count"))).head.getLong(0) ===
+    assert(man.agg(sum(col("row_count"))).head().getLong(0) ===
       spark.read.parquet(t).count())
     val full = spark.read.parquet(t)
     // a band inside the lowest range bucket — n_tok's heavy tail means a
     // fraction-of-max band would span every bucket
-    val lo = full.agg(min(col("n_tok"))).head.getInt(0).toLong
+    val lo = full.agg(min(col("n_tok"))).head().getInt(0).toLong
     val hi = lo + 30
     val allFiles = ManifestTable.partitionFiles(spark, t).get.values.flatten.size
     val kept = ManifestTable.prunedFiles(spark, t, "n_tok", lo, hi).get
@@ -178,7 +178,8 @@ class ManifestTableSpec extends SparkSpec {
     assert(ManifestTable.verifyAgainstListing(spark, t).isEmpty)
     // row-level: the table is exactly batch-0 ∪ batch-1, nothing else
     val expect = SequenceGen.sequences(spark, 100).toDF().unionByName(b1)
-    val got = spark.read.parquet(t).select(expect.columns.map(col): _*)
+    val got = spark.read.parquet(t)
+      .select(expect.columns.toIndexedSeq.map(col): _*)
     assert(got.except(expect).isEmpty && expect.except(got).isEmpty)
   }
 
@@ -192,7 +193,7 @@ class ManifestTableSpec extends SparkSpec {
     assert(ManifestTable.tableCount(spark, t) === Some(300L))
     val full = spark.read.parquet(t)
       .selectExpr("cast(min(n_tok) as long)", "cast(max(n_tok) as long)")
-      .head
+      .head()
     assert(ManifestTable.columnRange(spark, t, "n_tok")
       === Some((full.getLong(0), full.getLong(1))))
     // a column never zone-mapped: unavailable, not wrong
@@ -200,7 +201,7 @@ class ManifestTableSpec extends SparkSpec {
     // a stats-less commit of ONE partition leaves unstatted files in the
     // inventory: both answers degrade to None rather than undercount
     val p = spark.read.parquet(t).select("source").distinct()
-      .orderBy("source").head.getString(0)
+      .orderBy("source").head().getString(0)
     ManifestTable.commit(spark, t, touched = Some(Seq(p)))
     assert(ManifestTable.tableCount(spark, t) === None)
     assert(ManifestTable.columnRange(spark, t, "n_tok") === None)
