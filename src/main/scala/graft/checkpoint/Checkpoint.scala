@@ -2,7 +2,9 @@ package graft.checkpoint
 
 import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.reflect.runtime.universe.TypeTag
 import graft.model.CheckpointEntry
+import graft.sources.TableIO
 
 /**
  * Checkpoint manifest: per-partition lineage (snapshot_id, ruleset_hash,
@@ -21,10 +23,8 @@ object Checkpoint {
 
   def read(spark: SparkSession, path: String): Dataset[CheckpointEntry] = {
     import spark.implicits._
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) spark.read.parquet(path).as[CheckpointEntry]
-    else spark.emptyDataset[CheckpointEntry]
+    TableIO.readIfExists(spark, path)
+      .fold(spark.emptyDataset[CheckpointEntry])(_.as[CheckpointEntry])
   }
 
   /** Write one run's checkpoint entries as that run's OWN generation
@@ -71,7 +71,7 @@ object Checkpoint {
       .filter(_.isDirectory)
       .map(_.getPath.getName)
       .filter(_.startsWith("run_seg="))
-      .map(n => graft.sources.TableIO.unescapePathName(
+      .map(n => TableIO.unescapePathName(
         n.stripPrefix("run_seg=")))
     if (segs.size <= 1) return 0
     if (dryRun) return segs.size
@@ -87,7 +87,7 @@ object Checkpoint {
       .collect()
     val baseId = "base-" + java.util.UUID.randomUUID().toString.take(8)
     appendRun(spark.createDataset(entries.toSeq).coalesce(1), path, baseId)
-    graft.sources.TableIO.deletePartitions(spark, path, "run_seg", segs)
+    TableIO.deletePartitions(spark, path, "run_seg", segs)
     segs.size
   }
 
@@ -205,6 +205,21 @@ object Checkpoint {
 
   def sketchesPath(outDir: String): String = s"$outDir/_sketches"
 
+  /** Shared body of the side-table writers: `rows` as columns `cols`,
+    * hive-partitioned by `partitionCol` = the exact value `valueCol`
+    * carries (partition columns are TYPE-INFERRED on read, so readers key
+    * on `valueCol`), one file per partition dir, dynamic overwrite. */
+  private def writeKeyed[T <: Product : TypeTag](
+      spark: SparkSession, rows: Seq[T], cols: Seq[String], path: String,
+      partitionCol: String, valueCol: String): Unit = {
+    import spark.implicits._
+    if (rows.nonEmpty)
+      TableIO.writePartitioned(
+        rows.toDF(cols: _*).withColumn(partitionCol, col(valueCol))
+          .coalesce(1),
+        path, partitionCol = partitionCol, recluster = false)
+  }
+
   /** Persist per-partition key sketches (one row per (partition, rule)):
     * the membership side of the CROSS-RUN uniqueness gate — the
     * Spark-native stand-in for the reference's global ETag table
@@ -217,31 +232,22 @@ object Checkpoint {
     * a numeric-looking source name would come back as a long). */
   def writeSketches(
       spark: SparkSession, outDir: String,
-      rows: Seq[(String, String, String, String, Array[Byte])]): Unit = {
-    import spark.implicits._
-    if (rows.isEmpty) return
-    graft.sources.TableIO.writePartitioned(
-      rows.toDF("part_value", "snapshot_id", "rule_id", "key_col", "sketch")
-        .withColumn("partition", col("part_value"))
-        .coalesce(1),
-      sketchesPath(outDir), partitionCol = "partition", recluster = false)
-  }
+      rows: Seq[(String, String, String, String, Array[Byte])]): Unit =
+    writeKeyed(spark, rows,
+      Seq("part_value", "snapshot_id", "rule_id", "key_col", "sketch"),
+      sketchesPath(outDir), "partition", "part_value")
 
   /** Sketches for one rule, keyed by exact partition value. */
   def readSketches(
       spark: SparkSession, outDir: String,
-      ruleId: String): Map[String, (String, Array[Byte])] = {
-    val p = new org.apache.hadoop.fs.Path(sketchesPath(outDir))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return Map.empty
-    spark.read.parquet(sketchesPath(outDir))
-      .filter(col("rule_id") === ruleId)
-      .select("part_value", "snapshot_id", "sketch")
-      .collect()
-      .map(r => r.getString(0) ->
-        ((r.getString(1), r.getAs[Array[Byte]]("sketch"))))
-      .toMap
-  }
+      ruleId: String): Map[String, (String, Array[Byte])] =
+    TableIO.readIfExists(spark, sketchesPath(outDir)).map(
+      _.filter(col("rule_id") === ruleId)
+        .select("part_value", "snapshot_id", "sketch")
+        .collect()
+        .map(r => r.getString(0) ->
+          ((r.getString(1), r.getAs[Array[Byte]]("sketch"))))
+        .toMap).getOrElse(Map.empty)
 
   def statsStatePath(outDir: String): String = s"$outDir/_stats_state"
   def inventoryPath(outDir: String): String = s"$outDir/_inventory"
@@ -256,33 +262,24 @@ object Checkpoint {
     * partition column is only the directory key (type-inferred on read). */
   def writeRulesetMap(
       spark: SparkSession, outDir: String, rulesetHash: String,
-      fps: Map[String, String]): Unit = {
-    import spark.implicits._
-    if (fps.isEmpty) return
-    graft.sources.TableIO.writePartitioned(
-      fps.toSeq.toDF("rule_id", "rule_fp")
-        .withColumn("hash_value", lit(rulesetHash))
-        .withColumn("ruleset", lit(rulesetHash))
-        .coalesce(1),
-      rulesetsPath(outDir), partitionCol = "ruleset", recluster = false)
-  }
+      fps: Map[String, String]): Unit =
+    writeKeyed(spark,
+      fps.toSeq.map { case (id, fp) => (id, fp, rulesetHash) },
+      Seq("rule_id", "rule_fp", "hash_value"),
+      rulesetsPath(outDir), "ruleset", "hash_value")
 
   /** rule_id → per-rule fingerprint for one persisted ruleset hash; empty
     * when that hash never ran with map-writing code (pre-feature runs →
     * rule-delta falls back to a full revalidation). */
   def readRulesetMap(
       spark: SparkSession, outDir: String,
-      rulesetHash: String): Map[String, String] = {
-    val p = new org.apache.hadoop.fs.Path(rulesetsPath(outDir))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return Map.empty
-    spark.read.parquet(rulesetsPath(outDir))
-      .filter(col("hash_value") === rulesetHash)
-      .select("rule_id", "rule_fp")
-      .collect()
-      .map(r => r.getString(0) -> r.getString(1))
-      .toMap
-  }
+      rulesetHash: String): Map[String, String] =
+    TableIO.readIfExists(spark, rulesetsPath(outDir)).map(
+      _.filter(col("hash_value") === rulesetHash)
+        .select("rule_id", "rule_fp")
+        .collect()
+        .map(r => r.getString(0) -> r.getString(1))
+        .toMap).getOrElse(Map.empty)
 
   /** For each partition whose CURRENT snapshot id matches some completed
     * checkpoint entry (under ANY ruleset hash): the ruleset hash of the
@@ -306,29 +303,19 @@ object Checkpoint {
     * snapshot_id — the same contract as the key sketches. */
   def writeStatsState(
       spark: SparkSession, outDir: String,
-      rows: Seq[(String, String, Array[Byte])]): Unit = {
-    import spark.implicits._
-    if (rows.isEmpty) return
-    graft.sources.TableIO.writePartitioned(
-      rows.toDF("part_value", "snapshot_id", "state")
-        .withColumn("partition", col("part_value"))
-        .coalesce(1),
-      statsStatePath(outDir), partitionCol = "partition", recluster = false)
-  }
+      rows: Seq[(String, String, Array[Byte])]): Unit =
+    writeKeyed(spark, rows, Seq("part_value", "snapshot_id", "state"),
+      statsStatePath(outDir), "partition", "part_value")
 
   /** partition → (snapshot_id, serialized stats state). */
   def readStatsState(
-      spark: SparkSession, outDir: String): Map[String, (String, Array[Byte])] = {
-    val p = new org.apache.hadoop.fs.Path(statsStatePath(outDir))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return Map.empty
-    spark.read.parquet(statsStatePath(outDir))
-      .select("part_value", "snapshot_id", "state")
-      .collect()
-      .map(r => r.getString(0) ->
-        ((r.getString(1), r.getAs[Array[Byte]]("state"))))
-      .toMap
-  }
+      spark: SparkSession, outDir: String): Map[String, (String, Array[Byte])] =
+    TableIO.readIfExists(spark, statsStatePath(outDir)).map(
+      _.select("part_value", "snapshot_id", "state")
+        .collect()
+        .map(r => r.getString(0) ->
+          ((r.getString(1), r.getAs[Array[Byte]]("state"))))
+        .toMap).getOrElse(Map.empty)
 
   /** Persist each validated partition's `path:length` file inventory —
     * the list a later append-delta run subtracts from the current listing
@@ -338,30 +325,20 @@ object Checkpoint {
     * silently). */
   def writeInventory(
       spark: SparkSession, outDir: String,
-      rows: Seq[(String, String, String)]): Unit = {
-    import spark.implicits._
-    if (rows.isEmpty) return
-    graft.sources.TableIO.writePartitioned(
-      rows.toDF("part_value", "snapshot_id", "file")
-        .withColumn("partition", col("part_value"))
-        .coalesce(1), // metadata volume: one row per data file
-      inventoryPath(outDir), partitionCol = "partition", recluster = false)
-  }
+      rows: Seq[(String, String, String)]): Unit =
+    writeKeyed(spark, rows, Seq("part_value", "snapshot_id", "file"),
+      inventoryPath(outDir), "partition", "part_value")
 
   /** partition → (snapshot_id, file entries). */
   def readInventory(
-      spark: SparkSession, outDir: String): Map[String, (String, Seq[String])] = {
-    val p = new org.apache.hadoop.fs.Path(inventoryPath(outDir))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return Map.empty
-    spark.read.parquet(inventoryPath(outDir))
-      .select("part_value", "snapshot_id", "file")
-      .collect()
-      .groupBy(_.getString(0))
-      .map { case (part, rs) =>
-        part -> ((rs.head.getString(1), rs.map(_.getString(2)).toSeq))
-      }
-  }
+      spark: SparkSession, outDir: String): Map[String, (String, Seq[String])] =
+    TableIO.readIfExists(spark, inventoryPath(outDir)).map(
+      _.select("part_value", "snapshot_id", "file")
+        .collect()
+        .groupBy(_.getString(0))
+        .map { case (part, rs) =>
+          part -> ((rs.head.getString(1), rs.map(_.getString(2)).toSeq))
+        }).getOrElse(Map.empty)
 
   /** Latest checkpointed snapshot id per partition under `rulesetHash` —
     * the "what did the last completed run see" map append-delta

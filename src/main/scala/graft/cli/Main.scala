@@ -382,11 +382,8 @@ object Main {
             s"$outDir/quarantine", s"$outDir/checkpoint",
             rules = rulesFile.getOrElse(graft.rules.Rules.standard))
           q.awaitTermination()
-          def rowsAt(p: String): Long = {
-            val hp = new org.apache.hadoop.fs.Path(p)
-            val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            if (fs.exists(hp)) spark.read.parquet(p).count() else 0L
-          }
+          def rowsAt(p: String): Long =
+            graft.sources.TableIO.readIfExists(spark, p).fold(0L)(_.count())
           println(s"""{"table_rows":${rowsAt(s"$outDir/table")},""" +
             s""""quarantined_rows":${rowsAt(s"$outDir/quarantine")}}""")
 
@@ -410,14 +407,11 @@ object Main {
             indexBuckets = num("--buckets=", 64),
             compactEvery = num("--compact-every=", 64))
           q.awaitTermination()
-          val fp = new org.apache.hadoop.fs.Path(s"$outDir/neardup_flags")
-          val ffs = fp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val nFlags =
-            if (ffs.exists(fp)) spark.read.parquet(fp.toString).count()
-            else 0L
-          val nGens = graft.sources.TableIO
-            .partitionValues(spark, s"$outDir/neardup_index", "batch_id")
-            .map(_.size).getOrElse(0)
+          val nFlags = graft.sources.TableIO
+            .readIfExists(spark, s"$outDir/neardup_flags")
+            .fold(0L)(_.count())
+          val nGens = graft.state.Generations.ids(spark,
+            graft.streaming.StreamingValidation.nearDupStore(outDir)).size
           println(s"""{"flags":$nFlags,"index_generations":$nGens}""")
 
         case "rules" :: rest =>

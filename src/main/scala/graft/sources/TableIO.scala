@@ -48,6 +48,20 @@ object TableIO {
       .parquet(path)
   }
 
+  /** The parquet table at `path`, or None when nothing was written there
+    * yet: the path is missing, or holds no data file or partition dir
+    * (a partitioned write of zero rows leaves just the directory, which
+    * Spark cannot infer a schema from). */
+  def readIfExists(spark: SparkSession, path: String): Option[DataFrame] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val hasData = fs.exists(p) && fs.listStatus(p).exists { st =>
+      val name = st.getPath.getName
+      !name.startsWith("_") && !name.startsWith(".")
+    }
+    if (hasData) Some(spark.read.parquet(path)) else None
+  }
+
   /** Bucketed table write — the co-located-join layout for keyed passes
     * at the 10^12-row shape. A table bucketed by `doc_id` gives every
     * keyed consumer hash-clustered input: per-key aggregation (the

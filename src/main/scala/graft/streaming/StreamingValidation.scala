@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import graft.model.{ManifestEntry, Sequence, Violation}
 import graft.rules.{RuleEngine, RuleSet, Rules}
+import graft.state.Generations
 
 /**
  * Structured-Streaming ingestion path — the Spark-native form of the
@@ -476,87 +477,46 @@ object StreamingValidation {
     val compactions = new java.util.concurrent.atomic.AtomicLong
   }
 
-  /** Monitor-namespaced state/base paths (ADVICE r04 #3): the scalar
-    * drift monitor, the embedding drift monitor, and the heavy-hitter
-    * monitor persist structurally different rows through the SAME
-    * (source, bin, count) schema — pointing two monitors at one outDir
-    * must not silently merge incompatible state, so each monitor owns a
-    * distinct namespace prefix ("drift_", "emb_drift_", "hh_"). */
-  private def driftStatePath(outDir: String, ns: String) =
-    s"$outDir/${ns}state"
-  private def driftBasePath(outDir: String, ns: String) =
-    s"$outDir/${ns}base"
+  /** Monitor-namespaced state (ADVICE r04 #3): the scalar drift monitor,
+    * the embedding drift monitor, and the heavy-hitter monitor persist
+    * structurally different rows through the SAME (source, bin, count)
+    * schema — pointing two monitors at one outDir must not silently merge
+    * incompatible state, so each monitor owns a distinct namespace prefix
+    * ("drift_", "emb_drift_", "hh_"). Layout and crash safety:
+    * [[graft.state.Generations]]. */
+  private def countStore(outDir: String, ns: String) =
+    Generations.Store(s"$outDir/${ns}state", s"$outDir/${ns}base")
 
-  private def pathExists(s: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  /** The compacted BASE generation: (hw, rows) where rows is the summed
-    * histogram of every batch id ≤ hw. Readers take the MAX hw dir and
-    * ignore both older base dirs and state generations ≤ hw — which is
-    * what makes compaction crash-safe without atomic multi-file commits
-    * (a crash between writing the new base and deleting superseded
-    * generations leaves duplicates on disk that no reader ever counts). */
-  private def readBase(
-      s: SparkSession, outDir: String,
-      ns: String): (Long, Seq[(String, Int, Long)]) = {
-    import graft.sources.TableIO
-    val path = driftBasePath(outDir, ns)
-    TableIO.partitionValues(s, path, "hw") match {
-      case None => (-1L, Nil)
-      case Some(hws) =>
-        val hw = hws.map(_.toLong).max
-        val rows = s.read.parquet(path)
-          .filter(col("hw") === hw)
-          .select("source", "bin", "count")
-          .collect()
-          .map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSeq
-        (hw, rows)
+  /** Restart rebuild for the (source, bin, count) monitors, run once per
+    * query run: the live state strictly below `batchId` (a replayed batch
+    * must not count itself), fed row by row to `merge`. */
+  private def rebuild(
+      s: SparkSession, outDir: String, ns: String, batchId: Long,
+      stats: Option[DriftMonitorStats])(
+      merge: (String, Int, Long) => Unit): Unit = {
+    val rows = Generations.live(s, countStore(outDir, ns), batchId)
+      .map(_.select("source", "bin", "count").collect())
+      .getOrElse(Array.empty)
+    rows.foreach(r => merge(r.getString(0), r.getInt(1), r.getLong(2)))
+    stats.foreach { st =>
+      st.rebuilds.incrementAndGet()
+      st.stateRowsRead.addAndGet(rows.length.toLong)
     }
   }
 
-  /** Fold every persisted drift_state generation in (base hw, belowBatchId)
-    * into a new base generation, then drop the superseded files. Safe to
-    * call from inside foreachBatch(belowBatchId): micro-batches commit
-    * serially, so every generation below the running batch is final (a
-    * crash can only replay the CURRENT batch, whose generation is above
-    * the new base's hw). Returns true if anything was compacted. */
-  def compactDriftState(
-      spark: SparkSession, outDir: String, belowBatchId: Long,
-      stats: Option[DriftMonitorStats] = None,
-      ns: String = "drift_"): Boolean = {
-    import graft.sources.TableIO
-    val statePath = driftStatePath(outDir, ns)
-    if (!pathExists(spark, statePath)) return false
-    val (baseHw, baseRows) = readBase(spark, outDir, ns)
-    val gens = spark.read.parquet(statePath)
-      .filter(col("batch_id") > baseHw && col("batch_id") < belowBatchId)
-      .select("source", "bin", "count", "batch_id")
-      .collect()
-    if (gens.isEmpty) return false
-    val genIds = gens.map(_.getAs[Number]("batch_id").longValue).distinct
-    val newHw = genIds.max
-    val merged = (baseRows ++ gens.map(r =>
-        (r.getString(0), r.getInt(1), r.getLong(2))))
-      .groupBy(r => (r._1, r._2))
-      .map { case ((src, bin), rs) => (src, bin, rs.map(_._3).sum) }
-      .toSeq
-    import spark.implicits._
-    TableIO.writePartitioned(
-      merged.toDF("source", "bin", "count")
-        .withColumn("hw", lit(newHw)).coalesce(1),
-      driftBasePath(outDir, ns), partitionCol = "hw", recluster = false)
-    // superseded files are invisible to readers from here on; dropping
-    // them is pure space reclamation, crash-tolerant in any order
-    TableIO.deletePartitions(
-      spark, statePath, "batch_id", genIds.map(_.toString).toIndexedSeq)
-    if (baseHw >= 0)
-      TableIO.deletePartitions(
-        spark, driftBasePath(outDir, ns), "hw", Seq(baseHw.toString))
-    stats.foreach(_.compactions.incrementAndGet())
-    true
-  }
+  private def compactDue(batchId: Long, compactEvery: Int): Boolean =
+    compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0
+
+  /** Every `compactEvery` batches, fold the (source, bin, count)
+    * generations below `batchId` into the base — counts are additive, so
+    * the fold is a distributed per-(source, bin) sum. */
+  private def compactCounts(
+      s: SparkSession, outDir: String, ns: String, batchId: Long,
+      compactEvery: Int, stats: Option[DriftMonitorStats]): Unit =
+    if (compactDue(batchId, compactEvery) &&
+        Generations.compact(s, countStore(outDir, ns), batchId)(
+          _.groupBy("source", "bin").agg(sum("count").as("count"))))
+      stats.foreach(_.compactions.incrementAndGet())
 
   /** Incremental DRIFT monitor — the streaming form of the batch
     * R_DRIFT_NTOK_KS rule: each micro-batch's per-source n_tok histogram
@@ -569,19 +529,14 @@ object StreamingValidation {
     *
     * BOUNDED per-batch work (VERDICT r03 #2): the cumulative histogram
     * lives in driver memory across batches (|sources| × ≤64 bins) and is
-    * rebuilt from disk at most ONCE per query run (stream restart) — a
-    * partition-pruned read of the base generation plus the generations
-    * above it. Steady-state per-batch cost is the batch's own aggregation
-    * plus an O(|sources| × bins) merge, independent of stream age. Every
-    * `compactEvery` batches the persisted generations fold into a single
-    * base generation (`drift_base/hw=<id>`), so on-disk state is ≤
-    * compactEvery generations + 1 base regardless of lifetime.
-    *
-    * Crash-replay idempotence: a replayed micro-batch OVERWRITES its own
-    * histogram + alert generations (batch_id-partitioned dynamic
-    * overwrite) instead of double-counting, and the restart rebuild reads
-    * only generations BELOW the replaying batch — the same contract as
-    * the batch path's run_id-keyed logs. */
+    * rebuilt from disk at most ONCE per query run (stream restart).
+    * Steady-state per-batch cost is the batch's own aggregation plus an
+    * O(|sources| × bins) merge, independent of stream age. Every
+    * `compactEvery` batches the persisted generations fold into one base
+    * (`drift_base/hw=<id>`), so on-disk state is ≤ compactEvery
+    * generations + 1 base regardless of lifetime. State layout, replay
+    * idempotence and crash safety: [[graft.state.Generations]]; the
+    * alert generations are replay-idempotent the same way. */
   def startDriftMonitor(
       spark: SparkSession,
       inputDir: String,
@@ -617,31 +572,10 @@ object StreamingValidation {
         // the batch's OWN histogram: tiny (|sources| × ≤64 bins)
         val batchHist = Drift.ntokHist(batch.toDF()).collect()
           .map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSeq
-        // idempotent own-generation write (replay overwrites itself)
-        TableIO.writePartitioned(
-          batchHist.toDF("source", "bin", "count")
-            .withColumn("batch_id", lit(batchId)).coalesce(1),
-          driftStatePath(outDir, "drift_"), partitionCol = "batch_id",
-          recluster = false)
+        Generations.append(batchHist.toDF("source", "bin", "count"),
+          countStore(outDir, "drift_"), batchId)
         if (!initialized) {
-          // restart rebuild: base generation + every generation STRICTLY
-          // below this batch (a replayed batch must not count itself)
-          val (baseHw, baseRows) = readBase(s, outDir, "drift_")
-          baseRows.foreach { case (src, bin, n) => mergeInto(src, bin, n) }
-          val older =
-            if (pathExists(s, driftStatePath(outDir, "drift_")))
-              s.read.parquet(driftStatePath(outDir, "drift_"))
-                .filter(col("batch_id") > baseHw &&
-                  col("batch_id") < batchId)
-                .select("source", "bin", "count")
-                .collect()
-                .map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSeq
-            else Nil
-          older.foreach { case (src, bin, n) => mergeInto(src, bin, n) }
-          stats.foreach { st =>
-            st.rebuilds.incrementAndGet()
-            st.stateRowsRead.addAndGet(baseRows.size + older.size)
-          }
+          rebuild(s, outDir, "drift_", batchId, stats)(mergeInto)
           initialized = true
         }
         batchHist.foreach { case (src, bin, n) => mergeInto(src, bin, n) }
@@ -657,8 +591,7 @@ object StreamingValidation {
           s.createDataset(alerts).coalesce(1).toDF(),
           s"$outDir/drift_alerts", partitionCol = "batch_id",
           recluster = false)
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          compactDriftState(s, outDir, batchId, stats, "drift_")
+        compactCounts(s, outDir, "drift_", batchId, compactEvery, stats)
         ()
       }
       .option("checkpointLocation", s"$outDir/drift_checkpoint")
@@ -697,12 +630,11 @@ object StreamingValidation {
     * Same bounded-state contract as the scalar monitor (VERDICT r03 #2):
     * the cumulative per-label moment vector lives in driver memory
     * (|labels| × (dims+1) longs), is rebuilt from disk at most once per
-    * query run, each micro-batch persists its OWN generation (replay
-    * overwrites itself — idempotent), and [[compactDriftState]] folds old
-    * generations into a base every `compactEvery` batches — the persisted
-    * schema (source, bin, count) is reused as (label, dim, qsum) with the
-    * group count stored at bin = −1, so the SAME crash-safe compaction
-    * path serves both monitors. */
+    * query run, and each micro-batch persists its OWN generation, folded
+    * into a base every `compactEvery` batches — the persisted schema
+    * (source, bin, count) is reused as (label, dim, qsum) with the group
+    * count stored at bin = −1, so the SAME summing fold serves both
+    * monitors (layout and crash safety: [[graft.state.Generations]]). */
   def startEmbDriftMonitor(
       spark: SparkSession,
       inputDir: String,
@@ -757,28 +689,10 @@ object StreamingValidation {
               Seq(base, (r.getInt(0).toString, -1, r.getLong(3)))
             else Seq(base)
           }.toSeq
-        TableIO.writePartitioned(
-          moments.toDF("source", "bin", "count")
-            .withColumn("batch_id", lit(batchId)).coalesce(1),
-          driftStatePath(outDir, "emb_drift_"), partitionCol = "batch_id",
-          recluster = false)
+        Generations.append(moments.toDF("source", "bin", "count"),
+          countStore(outDir, "emb_drift_"), batchId)
         if (!initialized) {
-          val (baseHw, baseRows) = readBase(s, outDir, "emb_drift_")
-          baseRows.foreach { case (l, d, q) => mergeInto(l, d, q) }
-          val older =
-            if (pathExists(s, driftStatePath(outDir, "emb_drift_")))
-              s.read.parquet(driftStatePath(outDir, "emb_drift_"))
-                .filter(col("batch_id") > baseHw &&
-                  col("batch_id") < batchId)
-                .select("source", "bin", "count")
-                .collect()
-                .map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSeq
-            else Nil
-          older.foreach { case (l, d, q) => mergeInto(l, d, q) }
-          stats.foreach { st =>
-            st.rebuilds.incrementAndGet()
-            st.stateRowsRead.addAndGet(baseRows.size + older.size)
-          }
+          rebuild(s, outDir, "emb_drift_", batchId, stats)(mergeInto)
           initialized = true
         }
         moments.foreach { case (l, d, q) => mergeInto(l, d, q) }
@@ -795,8 +709,7 @@ object StreamingValidation {
           s.createDataset(alerts).coalesce(1).toDF(),
           s"$outDir/emb_drift_alerts", partitionCol = "batch_id",
           recluster = false)
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          compactDriftState(s, outDir, batchId, stats, "emb_drift_")
+        compactCounts(s, outDir, "emb_drift_", batchId, compactEvery, stats)
         ()
       }
       .option("checkpointLocation", s"$outDir/emb_drift_checkpoint")
@@ -845,8 +758,9 @@ object StreamingValidation {
     *      combined — the only shuffle, batch volume);
     *   2. the batch's OWN CMS cells (from those counts) persist as a
     *      batch_id generation in the SHARED drift_state schema
-    *      ((source, bin=cell, count) — additive, so
-    *      [[compactDriftState]]'s summing fold is the correct merge);
+    *      ((source, bin=cell, count) — additive, so the drift monitors'
+    *      summing fold is the correct merge; layout and crash safety:
+    *      [[graft.state.Generations]]);
     *   3. candidates = previous top-k ∪ the batch's own top-`candidateK`
     *      tokens (bounded TopK aggregate); current top-k = best k by
     *      (cumulative CMS estimate desc, token asc) — deterministic given
@@ -913,43 +827,23 @@ object StreamingValidation {
           val sk = r.getSeq[Long](1)
           sk.indices.collect { case i if sk(i) != 0L => (src, i, sk(i)) }
         }.toSeq
-        TableIO.writePartitioned(
-          batchCells.toDF("source", "bin", "count")
-            .withColumn("batch_id", lit(batchId)).coalesce(1),
-          driftStatePath(outDir, "hh_"), partitionCol = "batch_id",
-          recluster = false)
+        Generations.append(batchCells.toDF("source", "bin", "count"),
+          countStore(outDir, "hh_"), batchId)
         if (!initialized) {
-          val (baseHw, baseRows) = readBase(s, outDir, "hh_")
-          baseRows.foreach { case (src, bin, n) => mergeCell(src, bin, n) }
-          val older =
-            if (pathExists(s, driftStatePath(outDir, "hh_")))
-              s.read.parquet(driftStatePath(outDir, "hh_"))
-                .filter(col("batch_id") > baseHw &&
-                  col("batch_id") < batchId)
-                .select("source", "bin", "count")
-                .collect()
-                .map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSeq
-            else Nil
-          older.foreach { case (src, bin, n) => mergeCell(src, bin, n) }
+          rebuild(s, outDir, "hh_", batchId, stats)(mergeCell)
           // candidates: the LATEST persisted top-k below this batch —
           // one generation, ≤ k rows per source
-          if (pathExists(s, s"$outDir/hh_topk")) {
-            val gens = TableIO
-              .partitionValues(s, s"$outDir/hh_topk", "batch_id")
-              .getOrElse(Nil).map(_.toLong).filter(_ < batchId)
-            if (gens.nonEmpty)
-              s.read.parquet(s"$outDir/hh_topk")
-                .filter(col("batch_id") === gens.max)
-                .select("source", "token").collect()
-                .groupBy(_.getString(0))
-                .foreach { case (src, rs) =>
-                  topk.update(src, rs.map(_.getLong(1)).toSeq)
-                }
-          }
-          stats.foreach { st =>
-            st.rebuilds.incrementAndGet()
-            st.stateRowsRead.addAndGet(baseRows.size + older.size)
-          }
+          val gens = TableIO
+            .partitionValues(s, s"$outDir/hh_topk", "batch_id")
+            .getOrElse(Nil).map(_.toLong).filter(_ < batchId)
+          if (gens.nonEmpty)
+            s.read.parquet(s"$outDir/hh_topk")
+              .filter(col("batch_id") === gens.max)
+              .select("source", "token").collect()
+              .groupBy(_.getString(0))
+              .foreach { case (src, rs) =>
+                topk.update(src, rs.map(_.getLong(1)).toSeq)
+              }
           initialized = true
         }
         batchCells.foreach { case (src, bin, n) => mergeCell(src, bin, n) }
@@ -976,8 +870,7 @@ object StreamingValidation {
           s.createDataset(out).coalesce(1).toDF(),
           s"$outDir/hh_topk", partitionCol = "batch_id",
           recluster = false)
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          compactDriftState(s, outDir, batchId, stats, "hh_")
+        compactCounts(s, outDir, "hh_", batchId, compactEvery, stats)
         ()
       }
       .option("checkpointLocation", s"$outDir/hh_checkpoint")
@@ -1002,110 +895,31 @@ object StreamingValidation {
       .parquet(inputDir)
       .select("doc_id", "text", "source")
 
-  private def nearDupIndexPath(outDir: String) = s"$outDir/neardup_index"
-  private def nearDupBasePath(outDir: String) = s"$outDir/neardup_base"
+  /** The near-dup band-bucket index: `neardup_index/batch_id=/bkt=`
+    * generations folded into `neardup_base/hw=/bkt=`. */
+  private[graft] def nearDupStore(outDir: String) = Generations.Store(
+    s"$outDir/neardup_index", s"$outDir/neardup_base", Some("bkt"))
 
-  /** Highest compacted-base generation under `basePath`, or -1 when no
-    * base exists. Readers take the MAX hw dir and ignore everything a
-    * compaction superseded — older base dirs and index generations
-    * ≤ hw — which is what makes [[compactNearDupIndex]] crash-safe
-    * without atomic multi-file commits. */
-  private def nearDupBaseHw(spark: SparkSession, basePath: String): Long =
-    graft.sources.TableIO.partitionValues(spark, basePath, "hw")
-      .map(_.map(_.toLong).max).getOrElse(-1L)
+  /** Index data columns, in the order the base stores them. */
+  private val nearDupCols =
+    Seq("src_batch_id", "band_idx", "band_key", "doc_id", "sig")
 
-  /** Index probe read for [[startNearDupIngest]]: the compacted base (if
-    * one exists) plus the generations STRICTLY between the base and
-    * `batchId` (replay contract), and within both ONLY the band-key
-    * buckets this batch hashes into. Every predicate lands on a partition
+  /** Index probe read for [[startNearDupIngest]]: the live index below
+    * `batchId` (replay contract), restricted to ONLY the band-key buckets
+    * this batch hashes into. Every predicate lands on a partition
     * column, so the scan's PartitionFilters keep the listing + I/O
     * proportional to the batch's bucket set, not the accumulated index
     * (pinned in NearDupStreamSpec). Ordering comes back as
     * `src_batch_id` — the ORIGINAL generation a row was indexed in,
     * preserved across compaction so first-match-wins tie-breaks are
-    * bit-identical whether or not a compaction ran. None when neither
-    * base nor index exists yet (first batch). */
+    * bit-identical whether or not a compaction ran. None when there is
+    * nothing to probe yet (first batch). */
   private[streaming] def prunedIndexRead(
       spark: SparkSession, outDir: String, batchId: Long,
-      bkts: Array[Long]): Option[DataFrame] = {
-    val indexPath = nearDupIndexPath(outDir)
-    val basePath = nearDupBasePath(outDir)
-    val sel = Seq("src_batch_id", "band_idx", "band_key", "doc_id", "sig")
-      .map(col)
-    val inBkts = col("bkt").isin(bkts.map(Long.box).toSeq: _*)
-    val baseHw = nearDupBaseHw(spark, basePath)
-    val base =
-      if (baseHw >= 0)
-        Some(spark.read.parquet(basePath)
-          .filter(col("hw") === baseHw && inBkts).select(sel: _*))
-      else None
-    val gens =
-      if (pathExists(spark, indexPath))
-        Some(spark.read.parquet(indexPath)
-          .filter(col("batch_id") > baseHw &&
-            col("batch_id") < batchId && inBkts)
-          .select(sel: _*))
-      else None
-    (base, gens) match {
-      case (Some(b), Some(g)) => Some(b.union(g))
-      case (b, g) => b.orElse(g)
-    }
-  }
-
-  /** Fold every final index generation (strictly below `belowBatchId`)
-    * together with the previous base into ONE new base generation, then
-    * drop the superseded directories — the space/file-count valve for
-    * [[startNearDupIngest]]: without it a long-lived stream accumulates
-    * O(batches × buckets) directories; with it the layout is bounded by
-    * compactEvery generations + 1 base regardless of lifetime. The fold
-    * is fully DISTRIBUTED (the index is per-doc-band rows, never driver
-    * material): one pruned scan, one clustering exchange on bkt, one
-    * write. Rows keep their original `src_batch_id`, so match ordering
-    * and tie-breaks are unchanged. Crash-safe by the same discipline as
-    * the drift base: readers take only the MAX hw base and generations
-    * above it, so a crash between the base write and the deletes leaves
-    * duplicates no reader counts twice (the probe's candidate set is
-    * distinct()-ed besides). Safe to call from inside
-    * foreachBatch(belowBatchId): micro-batches commit serially, so every
-    * generation below the running batch is final. Returns true if
-    * anything was compacted. */
-  def compactNearDupIndex(
-      spark: SparkSession, outDir: String, belowBatchId: Long,
-      minGenerations: Int = 2): Boolean = {
-    import graft.sources.TableIO
-    val indexPath = nearDupIndexPath(outDir)
-    val basePath = nearDupBasePath(outDir)
-    val baseHw = nearDupBaseHw(spark, basePath)
-    val live = TableIO.partitionValues(spark, indexPath, "batch_id")
-      .getOrElse(Nil).map(_.toLong)
-      .filter(g => g > baseHw && g < belowBatchId)
-    if (live.size < minGenerations) return false
-    val newHw = live.max
-    val sel = Seq("src_batch_id", "band_idx", "band_key", "doc_id",
-      "sig", "bkt").map(col)
-    val genRows = spark.read.parquet(indexPath)
-      .filter(col("batch_id") > baseHw && col("batch_id") <= newHw)
-      .select(sel: _*)
-    val all =
-      if (baseHw >= 0)
-        spark.read.parquet(basePath)
-          .filter(col("hw") === baseHw).select(sel: _*)
-          .union(genRows)
-      else genRows
-    all.withColumn("hw", lit(newHw))
-      .repartition(col("bkt"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("hw", "bkt")
-      .parquet(basePath)
-    // superseded dirs are invisible to readers from here on; dropping
-    // them is pure space reclamation, crash-tolerant in any order
-    TableIO.deletePartitions(
-      spark, indexPath, "batch_id", live.map(_.toString))
-    if (baseHw >= 0)
-      TableIO.deletePartitions(spark, basePath, "hw", Seq(baseHw.toString))
-    true
-  }
+      bkts: Array[Long]): Option[DataFrame] =
+    Generations.live(spark, nearDupStore(outDir), batchId,
+        Some(col("bkt").isin(bkts.map(Long.box).toSeq: _*)))
+      .map(_.select(nearDupCols.map(col): _*))
 
   /** Streaming NEAR-duplicate dedup at ingest — persisted MinHash-LSH
     * band-bucket state (VERDICT r04 #4): the streaming form of the batch
@@ -1147,11 +961,13 @@ object StreamingValidation {
     * ingest O(batch) instead of O(stream age) as the stream grows. The
     * pruning is real partition pruning (PartitionFilters at the scan,
     * pinned in NearDupStreamSpec), not a post-scan row filter. Every
-    * `compactEvery` batches [[compactNearDupIndex]] folds the final
-    * generations into one bucketed base so the directory/file count is
-    * bounded by compactEvery generations + 1 base regardless of stream
-    * lifetime; rows keep their original generation as `src_batch_id`, so
-    * flags and tie-breaks are identical with or without compaction. */
+    * `compactEvery` batches the final generations fold into one bucketed
+    * base (a distributed rewrite: one pruned scan, one clustering
+    * exchange on bkt, one write) so the directory/file count is bounded
+    * by compactEvery generations + 1 base regardless of stream lifetime;
+    * rows keep their original generation as `src_batch_id`, so flags and
+    * tie-breaks are identical with or without compaction. Layout, replay
+    * idempotence and crash safety: [[graft.state.Generations]]. */
   def startNearDupIngest(
       spark: SparkSession,
       inputDir: String,
@@ -1215,22 +1031,15 @@ object StreamingValidation {
             flags.coalesce(1),
             s"$outDir/neardup_flags", partitionCol = "batch_id",
             recluster = false)
-          // index generation: cluster by bucket so each writing task owns
-          // whole buckets (bounds files at max(buckets, partitions) per
-          // generation); dynamic overwrite keeps replays exact — a
-          // replayed batch rewrites precisely its own (batch_id, bkt)
-          // directories, deterministic from the same input rows.
+          // index generation, one file per bucket; a replayed batch
+          // rewrites precisely its own (batch_id, bkt) directories.
           // src_batch_id duplicates the generation as a DATA column so
           // compaction can re-home rows without losing match ordering.
-          banded.withColumn("src_batch_id", lit(batchId))
-            .withColumn("batch_id", lit(batchId))
-            .repartition(col("bkt"))
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id", "bkt")
-            .parquet(nearDupIndexPath(outDir))
-          if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-            compactNearDupIndex(s, outDir, batchId)
+          Generations.append(banded.withColumn("src_batch_id", lit(batchId)),
+            nearDupStore(outDir), batchId)
+          if (compactDue(batchId, compactEvery))
+            Generations.compact(s, nearDupStore(outDir), batchId)(
+              _.select((nearDupCols :+ "bkt").map(col): _*))
           ()
         } finally { banded.unpersist(); () }
       }

@@ -59,6 +59,23 @@ class TableIOSpec extends SparkSpec {
     assert(TableIO.partitionValues(spark, s"$dir/nope", "source").isEmpty)
   }
 
+  test("readIfExists is None for a missing path and for the bare " +
+      "directory a zero-row partitioned write leaves") {
+    val dir = tmpDir("rie")
+    assert(TableIO.readIfExists(spark, s"$dir/nope").isEmpty)
+    val empty = SequenceGen.sequences(spark, 10).toDF().limit(0)
+      .withColumn("batch_id", lit(0L))
+    TableIO.writePartitioned(empty, s"$dir/empty", partitionCol = "batch_id",
+      recluster = false)
+    assert(new java.io.File(s"$dir/empty").isDirectory)
+    assert(TableIO.readIfExists(spark, s"$dir/empty").isEmpty)
+    TableIO.writePartitioned(
+      SequenceGen.sequences(spark, 10).toDF().withColumn("batch_id", lit(0L)),
+      s"$dir/empty", partitionCol = "batch_id", recluster = false)
+    assert(TableIO.readIfExists(spark, s"$dir/empty").map(_.count()) ===
+      Some(10L))
+  }
+
   test("deletePartitions + partitionValues handle Spark-escaped values " +
       "(space, '#', '+'; ADVICE r02: URL encoding targeted 'not+provided')") {
     val dir = tmpDir("esc")
