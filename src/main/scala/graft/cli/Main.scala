@@ -13,7 +13,7 @@ import graft.drift.Drift
  * Commands:
  *   gen <outDir> <nRows> [seed] [badNtokRate] [dupRate] [unknownRate] [driftSrc:shift]
  *     writes input/ manifest/ baseline/ under outDir (seeded, deterministic)
- *   validate <inputDir> <manifestDir> <outDir> [baselineDir] [refSnapshotDir] [--partitions=a,b] [--sketch-items=N] [--sketch-fpp=p] [--append-delta]
+ *   validate <inputDir> <manifestDir> <outDir> [baselineDir] [refSnapshotDir] [--partitions=a,b] [--sketch-items=N] [--sketch-fpp=p] [--append-delta] [--rule-delta] [--rules=path]
  *     runs the rule set, writes violations/ verdicts/ checkpoint/, prints a
  *     one-line JSON run report
  */
@@ -364,19 +364,13 @@ object Main {
           // to outDir/table (manifested), condemned rows land in
           // outDir/quarantine with the rule ids that rejected them.
           // Re-running with no new files admits no batch (checkpoint).
-          import org.apache.spark.sql.Encoders
-          import spark.implicits._
           val rulesFile = rest.collectFirst {
             case a if a.startsWith("--rules=") =>
               graft.rules.RuleConfig.fromJsonFile(a.stripPrefix("--rules="))
           }
-          graft.operators.SchemaCheck.requireCompatible(
-            graft.operators.SchemaCheck.parquetSchema(spark, manifestDir),
-            Encoders.product[graft.model.ManifestEntry].schema,
-            s"manifest table $manifestDir")
-          val manifest = spark.read
-            .schema(Encoders.product[graft.model.ManifestEntry].schema)
-            .parquet(manifestDir).as[graft.model.ManifestEntry]
+          val manifest = graft.operators.SchemaCheck
+            .readTyped[graft.model.ManifestEntry](
+              spark, manifestDir, s"manifest table $manifestDir")
           val q = graft.streaming.StreamingValidation.startSplitIngest(
             spark, input, manifest, s"$outDir/table",
             s"$outDir/quarantine", s"$outDir/checkpoint",

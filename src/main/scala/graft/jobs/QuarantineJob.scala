@@ -119,13 +119,9 @@ object QuarantineJob {
     val nullRowSrcs = vio.filter(col("doc_id").isNull)
       .select("source").distinct().as[String].collect().toSet
 
-    import org.apache.spark.sql.Encoders
-    graft.operators.SchemaCheck.requireCompatible(
-      graft.operators.SchemaCheck.parquetSchema(spark, inputPath),
-      Encoders.product[Sequence].schema, s"input table $inputPath")
-    def scoped: DataFrame = spark.read
-      .schema(Encoders.product[Sequence].schema)
-      .parquet(inputPath)
+    val input = graft.operators.SchemaCheck.readTyped[Sequence](
+      spark, inputPath, s"input table $inputPath")
+    def scoped: DataFrame = input.toDF()
       .filter(col("source").isin(srcs.map(x => x: Any): _*))
     val isNullQuarantined = col("doc_id").isNull &&
       col("source").isin(nullRowSrcs.toSeq.map(x => x: Any): _*)

@@ -27,10 +27,6 @@ object ReportJob {
 
   final case class Rendered(runId: String, text: String)
 
-  private val statusRank: Map[String, Int] = Map(
-    Status.Pass -> 0, Status.PassWithWarnings -> 1,
-    Status.NotCompleted -> 2, Status.Fail -> 3)
-
   /** violations_log on-disk schema: the Violation columns plus run
     * lineage. Declared explicitly so a file-less generation (a run with
     * zero violations) reads as empty instead of aborting inference
@@ -101,9 +97,9 @@ object ReportJob {
       .mapValues(_.length).toMap
     def n(s: String) = statusCounts.getOrElse(s, 0)
     val cleanSources = bySource.count { case (_, rows) =>
-      rows.forall(r => statusRank(r.getString(2)) == 0) }
+      rows.forall(r => Status.rank(r.getString(2)) == 0) }
     val promotable = bySource.count { case (_, rows) =>
-      rows.forall(r => statusRank(r.getString(2)) <= 1) }
+      rows.forall(r => Status.rank(r.getString(2)) <= 1) }
 
     val sb = new StringBuilder
     def line(s: String = ""): Unit = { sb.append(s).append('\n'); () }
@@ -135,7 +131,7 @@ object ReportJob {
     val srcW = math.max(6, bySource.map(_._1.length).max) + 2
     line(pad("source", srcW) + pad("status", 20) + "blocking / warning rules")
     bySource.foreach { case (src, rows) =>
-      val worst = rows.maxBy(r => statusRank(r.getString(2))).getString(2)
+      val worst = rows.maxBy(r => Status.rank(r.getString(2))).getString(2)
       // blocking first (FAIL then NOT_COMPLETED), then warnings; each
       // with its violation count when one exists
       def fmt(r: org.apache.spark.sql.Row): String = {
@@ -144,8 +140,8 @@ object ReportJob {
         s"${r.getString(2)}:$rid$c"
       }
       val noteworthy = rows
-        .filter(r => statusRank(r.getString(2)) > 0)
-        .sortBy(r => (-statusRank(r.getString(2)), r.getString(1)))
+        .filter(r => Status.rank(r.getString(2)) > 0)
+        .sortBy(r => (-Status.rank(r.getString(2)), r.getString(1)))
         .map(fmt)
       line(pad(src, srcW) + pad(worst, 20) +
         (if (noteworthy.isEmpty) "-" else noteworthy.mkString("  ")))

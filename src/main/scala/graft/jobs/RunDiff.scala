@@ -31,9 +31,7 @@ import graft.model.Status
  */
 object RunDiff {
 
-  private val rank = typedLit(Map(
-    Status.Pass -> 0, Status.PassWithWarnings -> 1,
-    Status.NotCompleted -> 2, Status.Fail -> 3))
+  private val rank = typedLit(Status.rank)
 
   /** run_ids ordered oldest -> newest by their recorded completion time
     * (driver-side: one tiny aggregation over the run_log). */

@@ -1,10 +1,12 @@
 package graft.jobs
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.model._
 import graft.rules.{RuleEngine, RuleSet, Rules}
 import graft.checkpoint.Checkpoint
+import graft.operators.SchemaCheck
 import graft.sources.{ManifestTable, TableIO}
 
 /**
@@ -13,6 +15,12 @@ import graft.sources.{ManifestTable, TableIO}
  * sequences table, skip checkpointed partitions, evaluate the rule set,
  * write violations + verdicts (idempotent dynamic-partition overwrite),
  * then append checkpoint entries LAST so a crash replays safely.
+ *
+ * `run` is a fixed list of eight named phases — snapshot, classify, plan,
+ * scan, finish, cross_run, write, checkpoint — each a method below that
+ * takes its inputs as parameters and returns a small immutable result.
+ * Each phase's wall time lands in [[RunReport.phaseMs]] and in the
+ * `phase_ms` object of every checkpoint entry's metrics.
  */
 object ValidationJob {
 
@@ -82,16 +90,7 @@ object ValidationJob {
         * would need one scan per subset, which is the full rescan it was
         * avoiding. Incompatible with appendDelta (changed data vs
         * changed rules — a partition is one or the other). */
-      ruleDelta: Boolean = false,
-      /** Cache the fact table across the rule-family passes. OFF by
-        * default since the r03 fusion: the only repeat reads of the fact
-        * table are two NARROW column scans (uniqueness passes — doc_id
-        * (+source)), so caching full rows (tokens included) trades a
-        * ~25x-larger memory/disk footprint for avoiding ~4% of the bytes —
-        * a pessimization at any scale (measured: the 64M-row CLI run
-        * stalled caching 30 GB; uncached it validates in 42 s). Turn on
-        * only for small inputs queried repeatedly in one session. */
-      cache: Boolean = false)
+      ruleDelta: Boolean = false)
 
   final case class RunReport(
       snapshotId: String,
@@ -109,7 +108,10 @@ object ValidationJob {
       ruleDeltaPartitions: Seq[String] = Nil,
       /** Rule ids actually evaluated this run (the changed subset under
         * rule-delta; the full set otherwise). */
-      rulesEvaluated: Seq[String] = Nil)
+      rulesEvaluated: Seq[String] = Nil,
+      /** Wall ms per phase, in run order. A resume run that finds nothing
+        * to validate stops after snapshot and classify. */
+      phaseMs: Seq[(String, Long)] = Nil)
 
   /** Everything an eligible append-delta partition carries into the run. */
   private final case class DeltaPart(
@@ -118,6 +120,78 @@ object ValidationJob {
       newFiles: Seq[String],
       oldState: Array[Byte])
 
+  /** rule id → partition → (snapshot id, persisted cross-run sketch) */
+  private type Sketches = Map[String, Map[String, (String, Array[Byte])]]
+
+  /** snapshot: the run's lineage and the typed reads of its inputs. */
+  private final case class Snap(
+      filesByPart: Option[Map[String, Seq[String]]],
+      partSnaps: Map[String, String],
+      snapshotId: String,
+      rulesetHash: String,
+      ruleFps: Map[String, String],
+      all: Dataset[Sequence],
+      manifest: Dataset[ManifestEntry],
+      baseline: Option[Dataset[BaselineBin]]) {
+    def snapOf(src: String): String = partSnaps.getOrElse(src, snapshotId)
+  }
+
+  /** classify, first half: the resume set. */
+  private final case class Scope(
+      done: Set[String],
+      allParts: Seq[String],
+      requested: Option[Set[String]]) {
+    // submission scope: a restricted run sees only its requested sources
+    def inScope(src: String): Boolean = requested.forall(_(src))
+    val todo: Seq[String] = allParts.filterNot(done).filter(inScope)
+    /** The sources this run will write: todo, plus — for a restricted
+      * run — any requested manifest-only source its RI reporting covers. */
+    def lockParts: Seq[String] =
+      requested.fold(todo)(ps => (ps -- done).toSeq.sorted)
+  }
+
+  /** classify, second half: which rules run, which partitions scan only
+    * their new files. */
+  private final case class Classified(
+      evalRules: RuleSet,
+      ruleDeltaActive: Boolean,
+      /** rules whose verdicts/violations carry forward untouched */
+      carriedIds: Set[String],
+      deltaInfo: Map[String, DeltaPart]) {
+    def deltaParts: Set[String] = deltaInfo.keySet
+  }
+
+  private final case class Planned(
+      seqs: Dataset[Sequence], staged: RuleEngine.StagedPlan)
+  private final case class Scanned(vio: Dataset[Violation], count: Long)
+  private final case class Finished(fin: RuleEngine.StagedResult,
+      rowsValidated: Long, storageVios: Seq[Violation],
+      storageNotCompleted: Set[(String, String)])
+  private final case class CrossRun(vio: Option[DataFrame], count: Long,
+      notCompleted: Set[(String, String)])
+  private final case class Written(verdicts: Seq[Verdict], violations: Long,
+      runId: String, completedAt: String)
+
+  /** The frames a run persists, released together when the run ends —
+    * on failure too, so a failed run leaves nothing cached. */
+  private final class Persisted {
+    private val frames =
+      scala.collection.mutable.ListBuffer.empty[Dataset[_]]
+    def apply[T](ds: Dataset[T]): Dataset[T] =
+      track(ds.persist(StorageLevel.MEMORY_AND_DISK))
+    /** Track a frame persisted elsewhere. */
+    def track[T](ds: Dataset[T]): Dataset[T] = { frames += ds; ds }
+    def release(): Unit = frames.foreach(_.unpersist(blocking = false))
+  }
+
+  private def inSources(sources: Iterable[String]) =
+    col("source").isin(sources.toSeq: _*)
+
+  /** Clustered by source into the session's shuffle partitions: one tiny
+    * shuffle of a small frame, so the partitioned writes need none. */
+  private def bySource[T](ds: Dataset[T]): Dataset[T] = ds.repartition(
+    ds.sparkSession.sessionState.conf.numShufflePartitions, col("source"))
+
   def violationsPath(outDir: String) = s"$outDir/violations"
   def verdictsPath(outDir: String) = s"$outDir/verdicts"
   def checkpointPath(outDir: String) = s"$outDir/checkpoint"
@@ -125,16 +199,69 @@ object ValidationJob {
   def violationsLogPath(outDir: String) = s"$outDir/violations_log"
 
   def run(spark: SparkSession, cfg: Config): RunReport = {
-    import spark.implicits._
     val t0 = System.nanoTime()
-    var tLast = t0
-    val phaseLog = sys.env.get("GRAFT_PHASE_LOG").contains("1")
-    def phase(name: String): Unit = if (phaseLog) {
-      val now = System.nanoTime()
-      System.err.println(f"[phase] $name%-22s ${(now - tLast) / 1e6}%9.1f ms")
-      tLast = now
+    // Wall ms per phase, by System.nanoTime alone: no Spark job, no
+    // listener. classify runs in two calls either side of the partition
+    // lock, so a repeated name adds to its entry.
+    val phaseMs = scala.collection.mutable.LinkedHashMap.empty[String, Long]
+    def timed[A](name: String)(body: => A): A = {
+      val t = System.nanoTime()
+      try body finally phaseMs(name) =
+        phaseMs.getOrElse(name, 0L) + (System.nanoTime() - t) / 1000000
     }
 
+    val snap = timed("snapshot")(snapshot(spark, cfg))
+    val scope = timed("classify")(resumeScope(spark, cfg, snap))
+    if (scope.todo.isEmpty)
+      return RunReport(snap.snapshotId, snap.rulesetHash, Nil,
+        scope.allParts.filter(scope.inScope), 0L, 0L,
+        (System.nanoTime() - t0) / 1000000, phaseMs = phaseMs.toSeq)
+
+    // PER-PARTITION locks (folder_lock.py:44-164): disjoint submission
+    // scopes proceed concurrently, overlapping scopes refuse each other.
+    // classify's delta reads come AFTER the lock: a concurrent run over
+    // the same partitions rewrites what they read.
+    val lockParts = scope.lockParts
+    require(
+      Checkpoint.acquirePartitionLocks(spark, cfg.outDir, lockParts),
+      s"another validation run holds a partition lock under ${cfg.outDir} " +
+        s"overlapping ${lockParts.mkString(",")} (stale locks under " +
+        "_locks/ reclaim automatically)")
+    val persisted = new Persisted
+    try {
+      // read at most once per cross-run rule: by classify in an
+      // append-delta run, else by cross_run when there is history
+      lazy val sketches: Sketches = cfg.rules.crossRunRules.map(r =>
+        r.id -> Checkpoint.readSketches(spark, cfg.outDir, r.id)).toMap
+      val cls = timed("classify")(classify(spark, cfg, snap, scope, sketches))
+      val planned = timed("plan")(
+        plan(spark, cfg, snap, scope, cls, persisted))
+      val scanned = timed("scan")(scan(spark, scope, planned, persisted))
+      val finished = timed("finish")(finish(spark, cfg, scope, cls, planned))
+      val xrun = timed("cross_run")(crossRun(
+        spark, cfg, snap, scope, cls, planned, sketches, persisted))
+      val written = timed("write")(write(spark, cfg, snap, scope, cls,
+        planned, scanned, finished, xrun, sketches, persisted))
+      val wallMs = timed("checkpoint")(
+        checkpoint(spark, cfg, snap, scope, written, t0, phaseMs.toSeq))
+      RunReport(snap.snapshotId, snap.rulesetHash, scope.todo,
+        scope.done.toSeq.filter(scope.inScope).sorted,
+        finished.rowsValidated, written.violations, wallMs,
+        deltaPartitions = cls.deltaParts.toSeq.sorted,
+        ruleDeltaPartitions =
+          if (cls.ruleDeltaActive) scope.todo.sorted else Nil,
+        rulesEvaluated = cls.evalRules.ruleIds.sorted,
+        phaseMs = phaseMs.toSeq)
+    } finally
+      try persisted.release()
+      finally Checkpoint.releasePartitionLocks(spark, cfg.outDir, lockParts)
+  }
+
+  /** snapshot: per-partition lineage ids, the ruleset hash, and the
+    * schema-gated reads of input, manifest and baseline. Spark jobs: the
+    * table listing (or manifest read), the baseline/reference listings
+    * and one footer read per gated table. */
+  private def snapshot(spark: SparkSession, cfg: Config): Snap = {
     // PER-PARTITION snapshot lineage (BASELINE: "per-Iceberg-partition
     // lineage (snapshot-id, ...)"): each source partition carries its OWN
     // content id, so resume re-validates exactly the partitions whose
@@ -142,9 +269,8 @@ object ValidationJob {
     // the untouched ones. The whole-table id derives from the same single
     // directory walk. Non-hive layouts fall back to table-granular ids.
     // Manifest-first (the Iceberg read path): a committed file manifest
-    // replaces the recursive listing with one pruned parquet read —
-    // the walk is the cost the manifest removes. Unmanifested tables
-    // (every test fixture written directly) fall back to the listing.
+    // replaces the recursive listing with one pruned parquet read;
+    // unmanifested tables (every test fixture) fall back to the listing.
     val filesByPart: Option[Map[String, Seq[String]]] =
       ManifestTable.partitionFiles(spark, cfg.inputPath)
         .orElse(TableIO.partitionFiles(spark, cfg.inputPath, "source"))
@@ -154,23 +280,18 @@ object ValidationJob {
     val snapshotId =
       if (partSnaps.nonEmpty) TableIO.snapshotIdFromPartitions(partSnaps)
       else TableIO.snapshotId(spark, cfg.inputPath)
-    def snapOf(src: String): String = partSnaps.getOrElse(src, snapshotId)
-    phase("snapshot_id")
     // Checkpoint lineage = rule set + rule-INPUT configuration (ADVICE r02):
     // a drift rule with no baseline rolls up NOT_COMPLETED, which does not
-    // block the partition verdict (level 0) — so a PASS checkpoint written
+    // block the partition verdict — so a PASS checkpoint written
     // without a baseline must NOT satisfy a later run that adds one (or
     // changes its content; same for the reference snapshot). Folding the
     // baseline/refSnapshot snapshot ids into the hash re-validates exactly
     // when those inputs change.
-    def md5(s: String): String =
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(s.getBytes("UTF-8")).map(b => f"$b%02x").mkString
     val baselineFp = cfg.baselinePath
       .map(TableIO.snapshotId(spark, _)).getOrElse("none")
     val refSnapshotFp = cfg.refSnapshotPath
       .map(TableIO.snapshotId(spark, _)).getOrElse("none")
-    val rulesetHash = md5(cfg.rules.rulesetHash +
+    val rulesetHash = TableIO.md5Hex(cfg.rules.rulesetHash +
       s"|baseline=$baselineFp|refSnapshot=$refSnapshotFp")
     // PER-RULE lineage fingerprints (the _rulesets map): descriptor plus
     // the rule's OWN input snapshot, so rule-delta re-runs exactly what a
@@ -183,63 +304,45 @@ object ValidationJob {
           s"|refSnapshot=$refSnapshotFp"
         case _ => ""
       }
-      r.id -> md5(r.descriptor + inputFp)
+      r.id -> TableIO.md5Hex(r.descriptor + inputFp)
     }.toMap
+    Snap(filesByPart, partSnaps, snapshotId, rulesetHash, ruleFps,
+      all = SchemaCheck.readTyped[Sequence](
+        spark, cfg.inputPath, s"input table ${cfg.inputPath}"),
+      manifest = SchemaCheck.readTyped[ManifestEntry](
+        spark, cfg.manifestPath, s"manifest table ${cfg.manifestPath}"),
+      baseline = cfg.baselinePath.map(p =>
+        SchemaCheck.readTyped[BaselineBin](spark, p, s"baseline table $p")))
+  }
 
-    // Explicit schemas: parquet schema inference runs a footer-reading
-    // job per table read (~0.5 s of SERIAL driver time per session at the
-    // bench layout) for schemas the engine already owns as case classes.
-    // Partition columns (e.g. hive `source=` dirs) are matched by name
-    // against the declared schema, so partitioned and unpartitioned
-    // layouts both read identically.
-    import org.apache.spark.sql.Encoders
-    // Structural gate BEFORE the enforced-schema read: schema(S).parquet
-    // silently NULLs missing columns and prunes extras, so a renamed or
-    // retyped column would otherwise surface as a wall of row violations
-    // instead of "the table's shape changed". One footer read each.
-    graft.operators.SchemaCheck.requireCompatible(
-      graft.operators.SchemaCheck.parquetSchema(spark, cfg.inputPath),
-      Encoders.product[Sequence].schema, s"input table ${cfg.inputPath}")
-    val all = spark.read.schema(Encoders.product[Sequence].schema)
-      .parquet(cfg.inputPath).as[Sequence]
-    graft.operators.SchemaCheck.requireCompatible(
-      graft.operators.SchemaCheck.parquetSchema(spark, cfg.manifestPath),
-      Encoders.product[ManifestEntry].schema,
-      s"manifest table ${cfg.manifestPath}")
-    val manifest = spark.read.schema(Encoders.product[ManifestEntry].schema)
-      .parquet(cfg.manifestPath).as[ManifestEntry]
-    val baseline = cfg.baselinePath.map { p =>
-      graft.operators.SchemaCheck.requireCompatible(
-        graft.operators.SchemaCheck.parquetSchema(spark, p),
-        Encoders.product[BaselineBin].schema, s"baseline table $p")
-      spark.read.schema(Encoders.product[BaselineBin].schema)
-        .parquet(p).as[BaselineBin]
-    }
-
+  /** classify, before the lock: the resume set. Spark jobs: the
+    * checkpoint read (and a distinct-source scan for a table with no
+    * hive partition dirs). */
+  private def resumeScope(
+      spark: SparkSession, cfg: Config, snap: Snap): Scope = {
+    import spark.implicits._
     // Resume: drop partitions already validated under this exact
     // (snapshot, rule set) lineage. The filter is on the partition column,
     // so Catalyst prunes their files from the scan entirely.
     val done =
-      if (partSnaps.nonEmpty)
-        Checkpoint.completedPartitionsBySnapshot(
-          spark, checkpointPath(cfg.outDir), rulesetHash, partSnaps)
-      else Checkpoint.completedPartitions(
-        spark, checkpointPath(cfg.outDir), snapshotId, rulesetHash)
+      if (snap.partSnaps.nonEmpty)
+        Checkpoint.completedPartitionsBySnapshot(spark,
+          checkpointPath(cfg.outDir), snap.rulesetHash, snap.partSnaps)
+      else Checkpoint.completedPartitions(spark,
+        checkpointPath(cfg.outDir), snap.snapshotId, snap.rulesetHash)
     val allParts = TableIO.partitionValues(spark, cfg.inputPath, "source")
       .getOrElse(
-        all.select("source").distinct().as[String].collect().toSeq.sorted)
-    // submission scope: a restricted run sees only its requested sources
-    val requested = cfg.partitions.map(_.toSet)
-    def inScope(src: String): Boolean = requested.forall(_(src))
-    val todo = allParts.filterNot(done).filter(inScope)
-    phase("checkpoint+parts")
+        snap.all.select("source").distinct().as[String].collect().toSeq.sorted)
+    Scope(done, allParts, cfg.partitions.map(_.toSet))
+  }
 
-    if (todo.isEmpty) {
-      return RunReport(snapshotId, rulesetHash, Nil,
-        allParts.filter(inScope), 0L, 0L,
-        (System.nanoTime() - t0) / 1000000)
-    }
-
+  /** classify, under the lock: rule-delta and append-delta classification
+    * and the delta files' footer gate. Spark jobs: the ruleset-map reads
+    * (rule-delta), the inventory, stats-state, checkpoint and sketch
+    * reads (append-delta), and the merged footer read of the new files. */
+  private def classify(spark: SparkSession, cfg: Config, snap: Snap,
+      scope: Scope, sketches: => Sketches): Classified = {
+    import scope.todo
     // RULE-DELTA classification: every to-validate partition must carry
     // its current snapshot under some completed prior run whose persisted
     // per-rule map exists — then the changed set is the union over
@@ -254,10 +357,10 @@ object ValidationJob {
         "re-validates for changed DATA or changed RULES, never both ways")
     val allIds = cfg.rules.ruleIds.toSet
     val ruleDeltaChanged: Set[String] =
-      if (!cfg.ruleDelta || partSnaps.isEmpty) allIds
+      if (!cfg.ruleDelta || snap.partSnaps.isEmpty) allIds
       else {
         val lastHash = Checkpoint.latestRulesetForSnapshots(
-          spark, checkpointPath(cfg.outDir), partSnaps)
+          spark, checkpointPath(cfg.outDir), snap.partSnaps)
         val maps = lastHash.values.toSet.iterator
           .map((h: String) =>
             h -> Checkpoint.readRulesetMap(spark, cfg.outDir, h))
@@ -267,7 +370,7 @@ object ValidationJob {
             h <- lastHash.get(p)
             old = maps(h)
             if old.nonEmpty
-          } yield allIds.filter(id => !old.get(id).contains(ruleFps(id)))
+          } yield allIds.filter(id => !old.get(id).contains(snap.ruleFps(id)))
         }
         if (perPart.exists(_.isEmpty)) allIds // some partition ineligible
         else perPart.flatten.flatten.toSet
@@ -276,27 +379,8 @@ object ValidationJob {
       ruleDeltaChanged.nonEmpty && ruleDeltaChanged != allIds
     val evalRules =
       if (ruleDeltaActive)
-        graft.rules.RuleSet(cfg.rules.rules.filter(r =>
-          ruleDeltaChanged(r.id)))
+        RuleSet(cfg.rules.rules.filter(r => ruleDeltaChanged(r.id)))
       else cfg.rules
-    // rules whose verdicts/violations carry forward untouched
-    val carriedIds: Set[String] =
-      if (ruleDeltaActive) allIds -- evalRules.ruleIds else Set.empty
-
-    // PER-PARTITION locks on exactly the sources this run will write
-    // (todo, plus — for a restricted run — any requested manifest-only
-    // source its RI reporting covers): disjoint submission scopes proceed
-    // concurrently, overlapping scopes refuse each other. Whole-dir
-    // locking was the r03 shape; the reference's unit is the submission
-    // prefix (folder_lock.py:44-164). Released in the finally below.
-    val lockParts = requested
-      .fold(todo)(ps => (ps -- done).toSeq.sorted)
-    require(
-      Checkpoint.acquirePartitionLocks(spark, cfg.outDir, lockParts),
-      s"another validation run holds a partition lock under ${cfg.outDir} " +
-        s"overlapping ${lockParts.mkString(",")} (stale locks under " +
-        "_locks/ reclaim automatically)")
-    try {
 
     // APPEND-DELTA classification: a todo partition is delta-eligible iff
     // its last completed run (same ruleset) left behind a matching
@@ -304,31 +388,27 @@ object ValidationJob {
     // set strictly extends the old one (same paths, same lengths). Every
     // condition is checked against the OLD snapshot id, which is itself
     // the md5 of the old inventory — the artifacts cannot desync silently.
-    val sketchesByRule: Map[String, Map[String, (String, Array[Byte])]] =
-      if (cfg.appendDelta)
-        cfg.rules.crossRunRules.map(r =>
-          r.id -> Checkpoint.readSketches(spark, cfg.outDir, r.id)).toMap
-      else Map.empty
     val deltaInfo: Map[String, DeltaPart] =
       if (!cfg.appendDelta || cfg.rules.crossRunRules.isEmpty) Map.empty
       else {
         require(cfg.refSnapshotPath.isEmpty,
           "appendDelta cannot run with a reference snapshot: the " +
             "cross-snapshot equality join needs both sides complete")
+        val bySketch = sketches
         val inv = Checkpoint.readInventory(spark, cfg.outDir)
         val states = Checkpoint.readStatsState(spark, cfg.outDir)
         val lastSnap = Checkpoint.latestSnapshotByPartition(
-          spark, checkpointPath(cfg.outDir), rulesetHash)
+          spark, checkpointPath(cfg.outDir), snap.rulesetHash)
         todo.flatMap { part =>
           for {
-            files <- filesByPart.flatMap(_.get(part))
+            files <- snap.filesByPart.flatMap(_.get(part))
             oldSnap <- lastSnap.get(part)
             (invSnap, oldFiles) <- inv.get(part)
             if invSnap == oldSnap
             (stSnap, oldState) <- states.get(part)
             if stSnap == oldSnap
             if cfg.rules.crossRunRules.forall(r =>
-              sketchesByRule(r.id).get(part).exists(_._1 == oldSnap))
+              bySketch(r.id).get(part).exists(_._1 == oldSnap))
             oldSet = oldFiles.toSet
             if oldSet.subsetOf(files.toSet) && files.size > oldFiles.size
           } yield part -> DeltaPart(
@@ -336,415 +416,384 @@ object ValidationJob {
             files.filterNot(oldSet).sorted, oldState)
         }.toMap
       }
-    val deltaParts = deltaInfo.keySet
-    val fullTodo = todo.filterNot(deltaParts)
     // Delta files come from whatever writer appended them — re-gate their
     // OWN footers (merged, all of them) against the contract. The
-    // table-level gate above reads one footer, which the old files
-    // dominate, so a retyped new file would otherwise pass the gate and
-    // kill the scan with a raw executor error.
+    // table-level gate reads one footer, which the old files dominate, so
+    // a retyped new file would otherwise pass the gate and kill the scan
+    // with a raw executor error.
     if (deltaInfo.nonEmpty) {
       val newPaths = deltaInfo.values.flatMap(_.newFiles).toSeq.sorted
         .map(TableIO.inventoryEntryPath)
-      graft.operators.SchemaCheck.requireCompatible(
-        graft.operators.SchemaCheck.parquetSchemaOfFiles(
-          spark, cfg.inputPath, newPaths,
+      SchemaCheck.requireCompatible(
+        SchemaCheck.parquetSchemaOfFiles(spark, cfg.inputPath, newPaths,
           s"delta files of ${cfg.inputPath}"),
         Encoders.product[Sequence].schema,
         s"delta files of ${cfg.inputPath}")
     }
-    phase("delta_classify")
+    Classified(evalRules, ruleDeltaActive,
+      if (ruleDeltaActive) allIds -- evalRules.ruleIds else Set.empty,
+      deltaInfo)
+  }
 
-    def readFiles(entries: Seq[String]) =
-      spark.read.schema(Encoders.product[Sequence].schema)
-        .option("basePath", cfg.inputPath)
-        .parquet(entries.map(TableIO.inventoryEntryPath): _*)
-        .as[Sequence]
+  /** A typed read of exactly these inventory files of the input table. */
+  private def readFiles(spark: SparkSession, cfg: Config,
+      entries: Seq[String]): Dataset[Sequence] =
+    spark.read.schema(Encoders.product[Sequence].schema)
+      .option("basePath", cfg.inputPath)
+      .parquet(entries.map(TableIO.inventoryEntryPath): _*)
+      .as[Sequence](Encoders.product[Sequence])
 
-    val seqs0 =
-      if (deltaParts.isEmpty) {
-        if (done.isEmpty && requested.isEmpty) all
-        else all.filter(col("source").isin(todo.map(x => x: Any): _*))
-      } else {
-        // full partitions read whole; delta partitions read NEW files only
-        val deltaSeqs = readFiles(deltaInfo.values.flatMap(_.newFiles).toSeq)
-        if (fullTodo.isEmpty) deltaSeqs
-        else all.filter(col("source").isin(fullTodo.map(x => x: Any): _*))
-          .unionByName(deltaSeqs)
-      }
-
-    // The three rule-family passes rescan the fact table: cached columnar
-    // when cfg.cache (inputs that fit memory), direct parquet re-scans
-    // otherwise (the 100 TB shape; GRAFT_NO_CACHE=1 also forces it).
-    val useCache = cfg.cache && !sys.env.get("GRAFT_NO_CACHE").contains("1")
+  /** plan: the scan scope (whole partitions, or only the new files of a
+    * delta partition) and the fused staged plan over it. Spark jobs: the
+    * reference snapshot's footer read, and uniqueness pass 1 inside
+    * `planStaged`. */
+  private def plan(spark: SparkSession, cfg: Config, snap: Snap,
+      scope: Scope, cls: Classified, persisted: Persisted): Planned = {
+    import scope.todo
+    val fullTodo = todo.filterNot(cls.deltaParts)
+    // Never cached: the only repeat reads are narrow column scans (the
+    // uniqueness passes), ~4% of the bytes full rows would pin.
     val seqs =
-      if (useCache)
-        seqs0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else seqs0
-    phase("cache_setup")
-
-    val refSnapshot = cfg.refSnapshotPath.map { p =>
-      graft.operators.SchemaCheck.requireCompatible(
-        graft.operators.SchemaCheck.parquetSchema(spark, p),
-        Encoders.product[Sequence].schema, s"reference snapshot $p")
-      spark.read.schema(Encoders.product[Sequence].schema)
-        .parquet(p).as[Sequence]
-    }
+      if (cls.deltaInfo.isEmpty)
+        if (scope.done.isEmpty && scope.requested.isEmpty) snap.all
+        else snap.all.filter(inSources(todo))
+      else {
+        // full partitions read whole; delta partitions read NEW files only
+        val deltaSeqs = readFiles(spark, cfg,
+          cls.deltaInfo.values.flatMap(_.newFiles).toSeq)
+        if (fullTodo.isEmpty) deltaSeqs
+        else snap.all.filter(inSources(fullTodo)).unionByName(deltaSeqs)
+      }
+    val refSnapshot = cfg.refSnapshotPath.map(p =>
+      SchemaCheck.readTyped[Sequence](spark, p, s"reference snapshot $p"))
     // FUSED evaluation (VERDICT r02 #1): the tokens array — ~96% of the
     // table's bytes — is decoded exactly once. The row-rule scan carries
     // the per-source token stats via observe(); the narrow aggregation
-    // pass below reads only (source, doc_id, n_tok).
+    // pass reads only (source, doc_id, n_tok).
     val staged = RuleEngine.planStaged(
-      seqs, manifest, evalRules, baseline, cfg.vocab, refSnapshot,
-      mergeStates =
-        deltaInfo.map { case (p, d) => p -> d.oldState })
-    phase("plan_build")
+      seqs, snap.manifest, cls.evalRules, snap.baseline, cfg.vocab,
+      refSnapshot,
+      mergeStates = cls.deltaInfo.map { case (p, d) => p -> d.oldState })
+    staged.persisted.foreach(persisted.track(_))
+    Planned(seqs, staged)
+  }
 
-    val todoSet = todo.toSet
-    val allPartsSet = allParts.toSet
+  /** scan: materializes the scan violations — row rules + observed token
+    * stats, uniqueness pass 2 and snapshot equality — as one persisted
+    * frame. Spark jobs: the `count` that runs them all. */
+  private def scan(spark: SparkSession, scope: Scope, planned: Planned,
+      persisted: Persisted): Scanned = {
+    // Output is restricted to the partitions being validated, plus
+    // manifest-only sources (RI reporting on sources with no data) for an
+    // unrestricted run or one that REQUESTED them — a submission-scoped
+    // run must not write outside its locked scope. The violations are the
+    // failing slice, so they are persisted: the heavy scans behind them
+    // run ONCE, and the writes, the roll-up and the count reuse the rows
+    // (VERDICT r01 #1). Clustered by source BEFORE the persist, so the
+    // cache holds |shuffle.partitions| partitions rather than one per
+    // input split, which every consumer would pay again.
+    val manifestOnly = !inSources(scope.allParts) &&
+      scope.requested.fold(lit(true))(inSources)
+    val vio = persisted(bySource(planned.staged.scanViolations
+      .filter(inSources(scope.todo) || manifestOnly)))
+    // runs the row-rule (+ observed token stats), unique and snapshot
+    // passes — the materialization planStaged.finish() requires
+    Scanned(vio, vio.count())
+  }
 
-    // Restrict verdict/violation output to partitions being validated
-    // (manifest-only sources surface through RI; those belong to this run
-    // only if not already checkpointed). The violations set is SMALL by
-    // construction (the failing slice of the data), so it is persisted:
-    // the heavy scans behind it run ONCE here, and the write, the verdict
-    // roll-up and the report count all reuse the cached rows instead of
-    // re-reading what was just written — at the prior shape those four
-    // write/re-read round-trips were the dominant serial section of the
-    // scaling bench (VERDICT r01 #1).
-    // Clustered BEFORE the persist: the scan produces one cache partition
-    // per input split (~hundreds), and every downstream consumer of the
-    // cache (count, both violation writes, the verdict roll-up) would pay
-    // that task count again — a per-job fixed cost that taxes the 4N
-    // scaling level 4x harder. One tiny shuffle (violations are the
-    // failing slice) buys |shuffle.partitions| cache partitions, already
-    // clustered by source for the partitioned write.
-    val nPart = spark.sessionState.conf.numShufflePartitions
-    // manifest-only sources (RI reporting on sources with no data) belong
-    // to an unrestricted run, or to a restricted run that REQUESTED them —
-    // a submission-scoped run must not write outside its locked scope.
-    val manifestOnlyScope = requested match {
-      case Some(ps) =>
-        col("source").isin(ps.toSeq.map(x => x: Any): _*)
-      case None => lit(true)
-    }
-    val scanVio = staged.scanViolations
-      .filter(col("source").isin(todo.map(x => x: Any): _*) ||
-        (!col("source").isin(allParts.map(x => x: Any): _*) &&
-          manifestOnlyScope))
-      .repartition(nPart, col("source"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // materializes the row-rule (+ observed token stats), unique and
-    // snapshot passes — the contract planStaged.finish() requires
-    val scanVioCount = scanVio.count()
-    phase("violation_passes")
-
-    val fin = staged.finish() // observed stats + driver-side rule families
+  /** finish: the staged plan's driver tail and the storage-manifest
+    * row-count check. Spark jobs: `finish()` (narrow aggregation pass),
+    * a row count only when the scan observed none, and the table
+    * manifest's row-count read. */
+  private def finish(spark: SparkSession, cfg: Config, scope: Scope,
+      cls: Classified, planned: Planned): Finished = {
+    val fin = planned.staged.finish() // observed stats + driver rules
     // exact per-source counts come free from the observed aggregates; in
     // an append-delta run those are MERGED (whole-partition) counts, so
     // the rows actually scanned = merged total − persisted old totals
     // (both known driver-side, no extra job)
     val oldStateDocs =
-      if (deltaInfo.isEmpty) 0L
+      if (cls.deltaInfo.isEmpty) 0L
       else graft.drift.SourceStatsAggregate
-        .mergeStateBytes(
-          deltaInfo.values.map(_.oldState).toSeq, graft.drift.Drift.tokenBins)
+        .mergeStateBytes(cls.deltaInfo.values.map(_.oldState).toSeq,
+          graft.drift.Drift.tokenBins)
         .values.map(_.nDocs).sum
     val rowsValidated =
-      fin.rowCount.map(_ - oldStateDocs).getOrElse(seqs.count())
-    phase("stats_finish")
+      fin.rowCount.map(_ - oldStateDocs).getOrElse(planned.seqs.count())
 
     // Storage-manifest ROW-COUNT reconciliation (StorageCountRule): the
     // per-partition scanned counts (free — fin.aggregates) against the
-    // table manifest's metadata counts (one |files|-row read). Catches
-    // rows lost or added between ingest-commit and validation — file
-    // truncation, debris a bypassing writer dropped in — as a partition
-    // FAIL instead of silently validating whatever the scan saw. A
-    // partition whose metadata can't answer (no manifest, unstatted
-    // files) rolls up NOT_COMPLETED, never PASS.
-    val storageRules = evalRules.storageCountRules
-    var storageNotCompleted = Set.empty[(String, String)]
-    val storageVios: Seq[Violation] = storageRules.flatMap { rule =>
-      val counts: Map[String, Option[Long]] =
-        ManifestTable.readFull(spark, cfg.inputPath) match {
-          case Some(mf) if mf.columns.contains("row_count") =>
-            mf.groupBy(col("partition"))
-              .agg(sum(col("row_count")).as("rows"),
-                count(lit(1)).as("files"),
-                count(col("row_count")).as("statted"))
-              .collect()
-              .map(r => r.getString(0) ->
-                (if (r.getLong(3) == r.getLong(2)) Some(r.getLong(1))
-                 else None))
-              .toMap
-          case _ => Map.empty
-        }
-      val actualBy = fin.aggregates.map(a => a.source -> a.nDocs).toMap
-      todo.sorted.flatMap { src =>
-        counts.get(src).flatten match {
-          case Some(exp) =>
-            val act = actualBy.getOrElse(src, 0L)
-            if (exp != act)
-              Some(Violation(
-                doc_id = null,
-                rule_id = rule.id,
-                observed =
-                  s"""{"scanned_rows":$act,"manifest_rows":$exp}""",
-                source = src,
-                severity = rule.severity))
-            else None
-          case None =>
-            storageNotCompleted += ((src, rule.id)); None
-        }
+    // table manifest's metadata counts (one |files|-row read). Rows lost
+    // or added between ingest-commit and validation (file truncation,
+    // debris a bypassing writer dropped in) FAIL the partition; one whose
+    // metadata can't answer (no manifest, unstatted files) rolls up
+    // NOT_COMPLETED, never PASS.
+    lazy val manifestRows: Map[String, Option[Long]] =
+      ManifestTable.readFull(spark, cfg.inputPath) match {
+        case Some(mf) if mf.columns.contains("row_count") =>
+          mf.groupBy(col("partition"))
+            .agg(sum(col("row_count")).as("rows"),
+              count(lit(1)).as("files"),
+              count(col("row_count")).as("statted"))
+            .collect()
+            .map(r => r.getString(0) ->
+              (if (r.getLong(3) == r.getLong(2)) Some(r.getLong(1))
+               else None))
+            .toMap
+        case _ => Map.empty
       }
+    val scanned = fin.aggregates.map(a => a.source -> a.nDocs).toMap
+    val checks = for {
+      rule <- cls.evalRules.storageCountRules
+      src <- scope.todo.sorted
+    } yield (rule, src, manifestRows.get(src).flatten)
+    val storageVios = checks.flatMap {
+      case (rule, src, Some(exp)) =>
+        val act = scanned.getOrElse(src, 0L)
+        Option.when(exp != act)(Violation(doc_id = null, rule_id = rule.id,
+          observed = s"""{"scanned_rows":$act,"manifest_rows":$exp}""",
+          source = src, severity = rule.severity))
+      case _ => None
     }
-    phase("storage_rowcount")
+    val notCompleted =
+      checks.collect { case (rule, src, None) => (src, rule.id) }.toSet
+    Finished(fin, rowsValidated, storageVios, notCompleted)
+  }
 
+  /** cross_run: routes the new scope's keys through the persisted sketches
+    * of history and confirms the positives against history's keys.
+    * Spark jobs: the sketch read (unless classify did it), the candidate
+    * count per rule, and the confirm join's count. */
+  private def crossRun(spark: SparkSession, cfg: Config, snap: Snap,
+      scope: Scope, cls: Classified, planned: Planned,
+      sketches: => Sketches, persisted: Persisted): CrossRun = {
     // CROSS-RUN uniqueness (CrossRunUniqueRule): the reference's duplicate
-    // gate is store-GLOBAL — every new upload's key is checked against the
-    // accumulated ETag record (manifest_processor.py:283-305,
-    // dynamodb.py:22-40) — while uniqueViolations evaluates within this
-    // run's scope. The persisted per-partition sketches of previously-
-    // validated partitions route the new scope's keys: bloom-negative keys
-    // (the overwhelming majority) never touch history at all, and bloom
+    // gate is store-GLOBAL (manifest_processor.py:283-305,
+    // dynamodb.py:22-40); uniqueViolations covers only this run's scope.
+    // Bloom-negative keys (the overwhelming majority) never touch history;
     // positives are CONFIRMED against a partition-pruned NARROW scan of
-    // the history key column — reported violations are exact at any fpp.
-    // Skipped entirely on a fresh checkpoint (no history → vacuous PASS,
-    // zero extra work). History partitions with no lineage-matching
-    // sketch make the check NOT_COMPLETED, never a silent partial PASS.
-    val crossRules = evalRules.crossRunRules
-    // delta partitions' OLD content is history too: their persisted
-    // sketches (lineage = the OLD snapshot id, verified at classification)
-    // route delta keys, and the confirm scan reads exactly their OLD
-    // files — new↔old duplicates inside a growing partition surface here.
-    val histSorted = (done.toSeq ++ deltaParts).sorted
+    // history's key column, so violations are exact at any fpp. No history
+    // → no work (vacuous PASS); a history partition with no lineage-
+    // matching sketch → NOT_COMPLETED, never a silent partial PASS. Delta
+    // partitions' OLD files are history too (sketch lineage = the OLD
+    // snapshot id): new↔old duplicates in a growing partition surface here.
+    val hist = (scope.done.toSeq ++ cls.deltaParts).sorted
     def histSnapOf(src: String): String =
-      deltaInfo.get(src).map(_.oldSnapshotId).getOrElse(snapOf(src))
-    var xrunNotCompleted = Set.empty[(String, String)]
-    val xrunCaches =
-      scala.collection.mutable.ListBuffer.empty[Dataset[_]]
-    val xrunVioFrames = crossRules.flatMap { rule =>
-      if (histSorted.isEmpty) None
+      cls.deltaInfo.get(src).map(_.oldSnapshotId).getOrElse(snap.snapOf(src))
+    val rules = if (hist.isEmpty) Nil else cls.evalRules.crossRunRules
+    val (complete, incomplete) = rules.partition(r =>
+      hist.forall(s => sketches(r.id).get(s).exists(_._1 == histSnapOf(s))))
+    val frames = complete.flatMap { rule =>
+      val merged = hist.map(s => sketches(rule.id)(s)._2)
+        .reduce(graft.operators.BloomDedup.merge)
+      val cands = persisted(planned.seqs
+        .select(col("source"), col(rule.key).cast("string").as("xk"))
+        .filter(col("xk").isNotNull &&
+          graft.operators.BloomDedup.mightContain(merged, col("xk"))))
+      // short-circuit: when the sketch fired nothing (the common
+      // incremental case), history is never scanned
+      if (cands.count() == 0) None
       else {
-        val sketches =
-          if (cfg.appendDelta) sketchesByRule(rule.id)
-          else Checkpoint.readSketches(spark, cfg.outDir, rule.id)
-        val covered = histSorted.filter(s =>
-          sketches.get(s).exists(_._1 == histSnapOf(s)))
-        if (covered.size < histSorted.size) {
-          xrunNotCompleted ++= todo.map(s => (s, rule.id))
-          None
-        } else {
-          val merged = covered.map(s => sketches(s)._2)
-            .reduce(graft.operators.BloomDedup.merge)
-          val cands = seqs
-            .select(col("source"), col(rule.key).cast("string").as("xk"))
-            .filter(col("xk").isNotNull &&
-              graft.operators.BloomDedup.mightContain(merged, col("xk")))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          xrunCaches += cands
-          // short-circuit: when the sketch fired nothing (the common
-          // incremental case), history is never scanned
-          if (cands.count() == 0) None
-          else {
-            val coveredDone = covered.filterNot(deltaParts)
-            val coveredDelta = covered.filter(deltaParts)
-            val doneKeys =
-              if (coveredDone.isEmpty) None
-              else Some(all
-                .filter(col("source").isin(coveredDone.map(x => x: Any): _*))
-                .toDF())
-            // delta history = the partition's OLD files only: the current
-            // directory also holds the new files this run is scanning,
-            // which must not self-match
-            val deltaKeys =
-              if (coveredDelta.isEmpty) None
-              else Some(readFiles(
-                coveredDelta.flatMap(s => deltaInfo(s).oldFiles).toSeq).toDF())
-            val histKeys = (doneKeys.toSeq ++ deltaKeys.toSeq)
-              .reduce(_ unionByName _)
-              .select(col(rule.key).cast("string").as("xk"),
-                col("source").as("dup_in"))
-              .filter(col("xk").isNotNull)
-            Some(cands.join(histKeys, Seq("xk"))
-              .groupBy(col("xk"), col("source"))
-              .agg(count(lit(1)).as("n_prior_copies"),
-                slice(sort_array(collect_set(col("dup_in"))), 1,
-                  RuleEngine.DupEvidenceCap).as("dup_in_sources"))
-              .select(
-                col("xk").as("doc_id"),
-                lit(rule.id).as("rule_id"),
-                to_json(struct(col("n_prior_copies"),
-                  col("dup_in_sources"))).as("observed"),
-                col("source"),
-                lit(rule.severity).as("severity")))
-          }
-        }
+        val (histDelta, histDone) = hist.partition(cls.deltaParts)
+        // delta history = the partition's OLD files only: the current
+        // directory also holds the new files this run is scanning,
+        // which must not self-match
+        val histKeys = (Option.when(histDone.nonEmpty)(
+            snap.all.filter(inSources(histDone)).toDF()) ++
+          Option.when(histDelta.nonEmpty)(readFiles(spark, cfg,
+            histDelta.flatMap(s => cls.deltaInfo(s).oldFiles)).toDF()))
+          .reduce(_ unionByName _)
+          .select(col(rule.key).cast("string").as("xk"),
+            col("source").as("dup_in"))
+          .filter(col("xk").isNotNull)
+        Some(cands.join(histKeys, Seq("xk"))
+          .groupBy(col("xk"), col("source"))
+          .agg(count(lit(1)).as("n_prior_copies"),
+            slice(sort_array(collect_set(col("dup_in"))), 1,
+              RuleEngine.DupEvidenceCap).as("dup_in_sources"))
+          .select(
+            col("xk").as("doc_id"),
+            lit(rule.id).as("rule_id"),
+            to_json(struct(col("n_prior_copies"),
+              col("dup_in_sources"))).as("observed"),
+            col("source"),
+            lit(rule.severity).as("severity")))
       }
     }
-    phase("cross_run_unique")
-
-    // driver-derived violations (RI / drift / manifest) obey the same
-    // partition restriction, applied driver-side on the tiny seq.
-    // Coalesced to ONE slice so the union stays clustered enough to write
-    // without re-shuffling (scanVio is already repartitioned by source):
-    // per source dir, <= 1 file from the scan side + 1 from this slice.
-    val driverVios = (fin.driverViolations
-      .filter(v => todoSet(v.source) ||
-        (!allPartsSet(v.source) && inScope(v.source)))) ++ storageVios
     // cross-run duplicates: a small distributed frame (the duplicated
     // slice of the NEW scope only), persisted so the two write chains and
     // the count reuse one materialization of the confirm join
-    val xrunVio = xrunVioFrames.reduceOption(_ unionByName _).map { f =>
-      val p = f.repartition(nPart, col("source"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      xrunCaches += p
-      p
-    }
-    val xrunCount = xrunVio.map(_.count()).getOrElse(0L)
+    val vio = frames.reduceOption(_ unionByName _)
+      .map(f => persisted(bySource(f)))
+    CrossRun(vio, vio.map(_.count()).getOrElse(0L),
+      (for (r <- incomplete; s <- scope.todo) yield (s, r.id)).toSet)
+  }
 
-    val doneSources = done.toSet
-    // fin.sources = data sources (already todo-filtered) ∪ ALL manifest
-    // sources; a restricted run reports (and deletes stale partitions!)
-    // only inside its locked scope — without the inScope filter a
-    // submission-scoped run would delete violations partitions a
-    // CONCURRENT run over the other sources is writing.
-    val runSources = fin.sources.filterNot(doneSources).filter(inScope)
-
-    // PRESERVED violations (materialized EAGERLY — the violations chain
-    // deletes these partitions before rewriting them):
-    //  · append-delta: OLD files' per-doc violations (row rules,
-    //    uniqueness, prior cross-run hits) remain true for the delta
-    //    partitions — only the driver-rule families (stats / RI / drift /
-    //    manifest) are dropped, since they re-derive from the merged
-    //    aggregates.
-    //  · rule-delta: every violation of a CARRIED (unchanged) rule remains
-    //    true — the data did not change — across the whole rewrite scope
-    //    (runSources, so a carried RI violation on a manifest-only source
-    //    survives the partition rewrite too); changed rules' old rows drop
-    //    and re-derive, removed rules' rows drop for good.
-    val (preserveSources, preserveIds): (Seq[String], Seq[String]) =
-      if (ruleDeltaActive) (runSources, carriedIds.toSeq.sorted)
-      else if (deltaParts.nonEmpty)
-        (deltaParts.toSeq.sorted,
-          evalRules.rowRules.map(_.id) ++ evalRules.uniqueRules.map(_.id) ++
-            evalRules.crossRunRules.map(_.id))
+  /** Violations a partial re-validation keeps from the current table,
+    * persisted EAGERLY — the violations chain deletes these partitions
+    * before rewriting them:
+    *  · append-delta: OLD files' per-doc violations (row rules,
+    *    uniqueness, prior cross-run hits) remain true for the delta
+    *    partitions — only the driver-rule families (stats / RI / drift /
+    *    manifest) are dropped, since they re-derive from the merged
+    *    aggregates.
+    *  · rule-delta: every violation of a CARRIED (unchanged) rule remains
+    *    true — the data did not change — across the whole rewrite scope
+    *    (runSources, so a carried RI violation on a manifest-only source
+    *    survives the partition rewrite too); changed rules' old rows drop
+    *    and re-derive, removed rules' rows drop for good.
+    * A prior run with zero violations leaves no data file: nothing to
+    * keep. */
+  private def preservedViolations(spark: SparkSession, cfg: Config,
+      cls: Classified, runSources: Seq[String],
+      persisted: Persisted): Option[DataFrame] = {
+    val rules = cls.evalRules
+    val (sources, ids): (Seq[String], Seq[String]) =
+      if (cls.ruleDeltaActive) (runSources, cls.carriedIds.toSeq.sorted)
+      else if (cls.deltaParts.nonEmpty)
+        (cls.deltaParts.toSeq.sorted,
+          rules.rowRules.map(_.id) ++ rules.uniqueRules.map(_.id) ++
+            rules.crossRunRules.map(_.id))
       else (Nil, Nil)
-    val preservedVio: Option[DataFrame] =
-      if (preserveSources.isEmpty || preserveIds.isEmpty) None
-      else {
-        val vp = new org.apache.hadoop.fs.Path(violationsPath(cfg.outDir))
-        val fs = vp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        // a prior run with ZERO violations leaves the table dir present but
-        // file-less; schema inference on an empty parquet dir aborts the read
-        def hasDataFiles: Boolean = {
-          val it = fs.listFiles(vp, true)
-          var found = false
-          while (!found && it.hasNext)
-            found = it.next().getPath.getName.endsWith(".parquet")
-          found
+    if (sources.isEmpty || ids.isEmpty) None
+    else TableIO.readIfExists(spark, violationsPath(cfg.outDir)).map(v =>
+      persisted(bySource(v
+        .filter(inSources(sources) && col("rule_id").isin(ids: _*))
+        .select("doc_id", "rule_id", "observed", "source", "severity"))))
+  }
+
+  /** Rule-delta carried verdicts, collected driver-side BEFORE the write
+    * chains run (the verdict chain overwrites the table they come from).
+    * The domain is runSources × carriedIds; pairs the prior run never
+    * produced (a source newly in the manifest) synthesize NOT_COMPLETED,
+    * never a silent PASS. */
+  private def carriedVerdicts(spark: SparkSession, cfg: Config,
+      cls: Classified, runSources: Seq[String]): Seq[Verdict] = {
+    import spark.implicits._
+    if (!cls.ruleDeltaActive || cls.carriedIds.isEmpty) Nil
+    else {
+      val carried = cls.carriedIds.toSeq.sorted
+      val prior: Map[(String, String), Verdict] =
+        TableIO.readIfExists(spark, verdictsPath(cfg.outDir)).fold(
+          Map.empty[(String, String), Verdict])(_
+          .filter(inSources(runSources) && col("rule_id").isin(carried: _*))
+          .select("source", "rule_id", "status", "severity", "metrics")
+          .as[Verdict]
+          .collect()
+          .map(v => (v.source, v.rule_id) -> v)
+          .toMap)
+      val sevOf = cfg.rules.rules.map(r => r.id -> r.severity).toMap
+      for (src <- runSources; id <- carried)
+        yield prior.getOrElse((src, id), Verdict(
+          source = src, rule_id = id, status = Status.NotCompleted,
+          severity = sevOf(id), metrics = """{"carried":"no_prior_row"}"""))
+    }
+  }
+
+  /** Per-partition key sketches for FUTURE runs' cross-run gate: one
+    * narrow (source, key) scan of the new scope, one small row per
+    * (partition, rule). A delta partition's refreshed sketch must cover
+    * old + new keys — Bloom sketches OR together, so the old sketch folds
+    * in (and is carried alone if the delta files held no non-null keys:
+    * the snapshot id still advanced). */
+  private def refreshedSketches(cfg: Config, snap: Snap, cls: Classified,
+      seqs: Dataset[Sequence], sketches: => Sketches)
+      : Seq[(String, String, String, String, Array[Byte])] =
+    cls.evalRules.crossRunRules.flatMap { rule =>
+      val fresh = seqs.filter(col(rule.key).isNotNull)
+        .groupBy(col("source"))
+        .agg(graft.operators.BloomDedup.sketchAgg(
+          col(rule.key).cast("string"),
+          cfg.sketchExpectedItems, cfg.sketchFpp).as("sk"))
+        .collect()
+        .map(r => r.getString(0) -> r.getAs[Array[Byte]]("sk"))
+        .toMap
+      (fresh.keySet ++ cls.deltaParts).toSeq.sorted.map { s =>
+        val old =
+          if (cls.deltaInfo.contains(s)) Some(sketches(rule.id)(s)._2)
+          else None
+        val sk = (fresh.get(s), old) match {
+          case (Some(f), Some(o)) => graft.operators.BloomDedup.merge(o, f)
+          case (Some(f), None) => f
+          case (None, Some(o)) => o
+          case (None, None) =>
+            throw new IllegalStateException(s"no sketch material for $s")
         }
-        if (!fs.exists(vp) || !hasDataFiles) None
-        else {
-          val p = spark.read.parquet(violationsPath(cfg.outDir))
-            .filter(col("source").isin(preserveSources.map(x => x: Any): _*)
-              && col("rule_id").isin(preserveIds.map(x => x: Any): _*))
-            .select("doc_id", "rule_id", "observed", "source", "severity")
-            .repartition(nPart, col("source"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          xrunCaches += p
-          Some(p)
-        }
+        (s, snap.snapOf(s), rule.id, rule.key, sk)
       }
-    val preservedCount = preservedVio.map(_.count()).getOrElse(0L)
+    }
+
+  /** write: every output table but the checkpoint, in four concurrent
+    * chains — violations + violations log, verdicts + run log, cross-run
+    * sketches, stats state + inventory + ruleset map. Spark jobs: the
+    * preserved-violations read and count, the carried-verdicts collect,
+    * the verdict roll-up, the sketch-refresh scan and every write. */
+  private def write(spark: SparkSession, cfg: Config, snap: Snap,
+      scope: Scope, cls: Classified, planned: Planned, scanned: Scanned,
+      finished: Finished, xrun: CrossRun, sketches: => Sketches,
+      persisted: Persisted): Written = {
+    import spark.implicits._
+    import finished.fin
+    import snap.{rulesetHash, snapshotId}
+    val todoSet = scope.todo.toSet
+    val allPartsSet = scope.allParts.toSet
+    // driver-derived violations (RI / drift / manifest) obey the same
+    // partition restriction; coalesced to ONE slice below, so each source
+    // dir gets at most one more file than the clustered scan side writes.
+    val driverVios = fin.driverViolations.filter(v => todoSet(v.source) ||
+      (!allPartsSet(v.source) && scope.inScope(v.source))) ++
+      finished.storageVios
+    // fin.sources = data sources (todo) ∪ ALL manifest sources; a
+    // restricted run reports (and deletes stale partitions!) only inside
+    // its locked scope, never under a CONCURRENT run over other sources.
+    val runSources = fin.sources.filterNot(scope.done).filter(scope.inScope)
+    val preserved =
+      preservedViolations(spark, cfg, cls, runSources, persisted)
+    val preservedCount = preserved.map(_.count()).getOrElse(0L)
     val vio = Seq(
-        Some(scanVio.toDF()), xrunVio, preservedVio,
+        Some(scanned.vio.toDF()), xrun.vio, preserved,
         Some(spark.createDataset(driverVios).coalesce(1).toDF()))
       .flatten
       .reduce(_ unionByName _)
       .as[Violation]
     // NOTE (ADVICE r02): `violations` counts EVERY violation attributable
     // to this run — including manifest-only sources that never appear in
-    // the data (the `!isin(allParts)` clause above) — not just rows from
-    // `todo` partitions. Consumers diffing this count across engine
-    // versions should compare under this (widened, r02+) definition.
-    val vioCount = scanVioCount + xrunCount + preservedCount + driverVios.size
+    // the data — not just rows from `todo` partitions.
+    val vioCount =
+      scanned.count + xrun.count + preservedCount + driverVios.size
 
     val completedAt = java.time.Instant.now().toString
     // run lineage id: restricted runs fold their scope in, so two
     // concurrent disjoint-scope runs write DISTINCT run_id generations of
     // the violations/run logs (and distinct checkpoint segments) while a
     // crash replay of either still overwrites exactly its own generation.
-    val scopeSuffix = requested.fold("") { ps =>
-      val md = java.security.MessageDigest.getInstance("MD5")
-      "-" + md.digest(ps.toSeq.sorted.mkString(",").getBytes("UTF-8"))
-        .map(b => f"$b%02x").mkString.take(8)
-    }
-    val runId =
-      s"${snapshotId.take(12)}-${rulesetHash.take(12)}$scopeSuffix"
+    val scopeSuffix = scope.requested.fold("")(ps =>
+      "-" + TableIO.md5Hex(ps.toSeq.sorted.mkString(",")).take(8))
+    val runId = s"${snapshotId.take(12)}-${rulesetHash.take(12)}$scopeSuffix"
+    val carried = carriedVerdicts(spark, cfg, cls, runSources)
 
-    // Rule-delta carried verdicts: collected driver-side BEFORE the write
-    // chains run (the verdict chain overwrites the table they come from).
-    // The domain is runSources × carriedIds; pairs the prior run never
-    // produced (a source newly in the manifest) synthesize NOT_COMPLETED.
-    val carriedVerdicts: Seq[Verdict] =
-      if (!ruleDeltaActive || carriedIds.isEmpty) Nil
-      else {
-        val vp = new org.apache.hadoop.fs.Path(verdictsPath(cfg.outDir))
-        val fs = vp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val prior: Map[(String, String), Verdict] =
-          if (!fs.exists(vp)) Map.empty
-          else spark.read.parquet(verdictsPath(cfg.outDir))
-            .filter(col("source").isin(runSources.map(x => x: Any): _*) &&
-              col("rule_id").isin(carriedIds.toSeq.map(x => x: Any): _*))
-            .select("source", "rule_id", "status", "severity", "metrics")
-            .as[Verdict]
-            .collect()
-            .map(v => (v.source, v.rule_id) -> v)
-            .toMap
-        val sevOf = cfg.rules.rules.map(r => r.id -> r.severity).toMap
-        for {
-          src <- runSources
-          id <- carriedIds.toSeq.sorted
-        } yield prior.getOrElse((src, id), Verdict(
-          source = src, rule_id = id, status = Status.NotCompleted,
-          severity = sevOf(id), metrics = """{"carried":"no_prior_row"}"""))
-      }
-
-    // The two write CHAINS below are independent of each other (both read
-    // only the materialized violations cache + collected driver facts), so
-    // they run CONCURRENTLY — the write tail is a fixed serial cost that
-    // taxes the 4N scaling level 4x harder, and overlapping the chains
-    // roughly halves it. The crash-replay contract orders the CHECKPOINT
-    // strictly after ALL writes (below, after both chains join); order
-    // between the chains themselves is free — a crash before the
-    // checkpoint replays the whole run idempotently either way.
+    // The chains read only the materialized violations and driver facts,
+    // so they run CONCURRENTLY (the serial write tail taxes the 4N scaling
+    // level 4x harder). Crash replay needs only the CHECKPOINT after ALL
+    // of them; their mutual order is free.
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
-
+    import scala.concurrent.duration.Duration
     val vioChain = Future {
       // Dynamic overwrite only replaces partitions PRESENT in the output:
       // a re-validated source that is now clean writes zero rows, so its
       // stale violations must be dropped explicitly (ADVICE r01).
       TableIO.deletePartitions(
         spark, violationsPath(cfg.outDir), "source", runSources)
-      // already clustered by source (the repartition before the persist) —
-      // no re-shuffle on the way out
+      // already clustered by source — no re-shuffle on the way out
       TableIO.writePartitioned(vio.toDF(), violationsPath(cfg.outDir),
         recluster = false)
-
-      // K2 completion (VERDICT r02 #5): the dynamic overwrite above keeps
-      // the CURRENT violations queryable; the audit log below keeps EVERY
-      // generation, keyed by run lineage — the reference mirrors every
-      // record type into archive tables (dynamodb.py:518-532), violations
-      // included, not just verdicts. Written as a run_id-partitioned
-      // dynamic overwrite, NOT a blind append: a crash after this write
-      // but before the checkpoint replays the run with the same derived
-      // run_id, and the replay must overwrite its own generation instead
-      // of duplicating it (the crash-replay idempotence contract,
-      // Checkpoint.scala doc). recluster=false: the cache partitions
-      // already spread the single run_id dir over several writers (the
-      // job the salt used to do, minus the shuffle).
+      // K2 completion (VERDICT r02 #5): the audit log keeps EVERY
+      // generation, keyed by run lineage (the reference mirrors every
+      // record type into archive tables, dynamodb.py:518-532). A run_id-
+      // partitioned dynamic overwrite, NOT a blind append: a crash replay
+      // derives the same run_id and must overwrite its own generation
+      // (the crash-replay idempotence contract, Checkpoint.scala doc).
       TableIO.writePartitioned(
         vio.toDF()
           .withColumn("run_id", lit(runId))
@@ -755,28 +804,19 @@ object ValidationJob {
         partitionCol = "run_id",
         recluster = false)
     }
-
     val verdictChain = Future {
       // Verdicts are |sources| x |rules| rows: roll up from the cached
-      // violations, collect once, and reuse the collected rows for the
-      // write, the run log, AND the checkpoint — zero re-reads.
-      // Rule-delta: evaluated-rule verdicts roll up fresh; CARRIED rules'
-      // verdicts copy forward from the current verdicts table (the data
-      // is unchanged, so they still hold — metrics included). A carried
-      // (source, rule) pair with no prior row (a source new to the
-      // manifest) rolls up NOT_COMPLETED, never a silent PASS.
-      val rows = {
-        val fresh = RuleEngine.rollUpVerdicts(
-            spark, runSources, evalRules, vio, fin.stats,
-            fin.notCompleted ++ xrunNotCompleted ++ storageNotCompleted)
-          .collect().toSeq
-        if (!ruleDeltaActive) fresh
-        else fresh ++ carriedVerdicts
-      }
+      // violations, collect once, and reuse the rows for the write, the
+      // run log AND the checkpoint. Rule-delta: CARRIED rules' verdicts
+      // copy forward (the data is unchanged, so they still hold).
+      val rows = RuleEngine.rollUpVerdicts(
+          spark, runSources, cls.evalRules, vio, fin.stats,
+          fin.notCompleted ++ xrun.notCompleted ++
+            finished.storageNotCompleted)
+        .collect().toSeq ++ carried
       TableIO.writePartitioned(
         spark.createDataset(rows).coalesce(1).toDF(),
         verdictsPath(cfg.outDir), recluster = false)
-
       // K2 audit trail: every run appends its verdict generation to the
       // run log (reference archive-table semantics, dynamodb.py:518-532).
       TableIO.writePartitioned(
@@ -787,125 +827,71 @@ object ValidationJob {
         runLogPath(cfg.outDir), partitionCol = "run_id", recluster = false)
       rows
     }
-
-    // Per-partition key sketches for FUTURE runs' cross-run gate: one
-    // narrow (source, key) scan of the new scope, one small row per
-    // (partition, rule). Written before the checkpoint like every other
-    // output — a crash replay overwrites its own partitions (dynamic
-    // overwrite), and a partition's sketch travels with its snapshot id
-    // so staleness is detectable.
-    val sketchChain = Future {
-      val rows = crossRules.flatMap { rule =>
-        val fresh = seqs.filter(col(rule.key).isNotNull)
-          .groupBy(col("source"))
-          .agg(graft.operators.BloomDedup.sketchAgg(
-            col(rule.key).cast("string"),
-            cfg.sketchExpectedItems, cfg.sketchFpp).as("sk"))
-          .collect()
-          .map(r => r.getString(0) -> r.getAs[Array[Byte]]("sk"))
-          .toMap
-        // delta partitions: the refreshed sketch must cover old + new
-        // keys — Bloom sketches OR together, so fold the old sketch in
-        // (and carry it alone if the delta files held no non-null keys:
-        // the snapshot id still advanced)
-        val oldOf = (s: String) =>
-          if (deltaInfo.contains(s)) Some(sketchesByRule(rule.id)(s)._2)
-          else None
-        (fresh.keySet ++ deltaParts).toSeq.sorted.map { s =>
-          val sk = (fresh.get(s), oldOf(s)) match {
-            case (Some(f), Some(o)) => graft.operators.BloomDedup.merge(o, f)
-            case (Some(f), None) => f
-            case (None, Some(o)) => o
-            case (None, None) =>
-              throw new IllegalStateException(s"no sketch material for $s")
-          }
-          (s, snapOf(s), rule.id, rule.key, sk)
-        }
-      }
-      Checkpoint.writeSketches(spark, cfg.outDir, rows)
-    }
-
-    // Persist the merged per-source stats state + the current file
-    // inventory for every validated partition — the material the NEXT
-    // append-delta run starts from. Written before the checkpoint like
-    // every other output (dynamic overwrite per partition; lineage =
-    // the partition's new snapshot id).
+    // Written before the checkpoint like every other output — a crash
+    // replay overwrites its own partitions (dynamic overwrite), and each
+    // row travels with its partition's snapshot id so staleness is
+    // detectable.
+    val sketchChain = Future(Checkpoint.writeSketches(spark, cfg.outDir,
+      refreshedSketches(cfg, snap, cls, planned.seqs, sketches)))
+    // The merged stats state + current file inventory of every validated
+    // partition: the material the NEXT append-delta run starts from.
     val stateChain = Future {
-      val stateRows = fin.aggregates
+      Checkpoint.writeStatsState(spark, cfg.outDir, fin.aggregates
         .filter(a => todoSet(a.source) && a.stateBytes.nonEmpty)
-        .map(a => (a.source, snapOf(a.source), a.stateBytes))
-      Checkpoint.writeStatsState(spark, cfg.outDir, stateRows)
-      filesByPart.foreach { m =>
-        val invRows = todo.flatMap(p =>
-          m.getOrElse(p, Nil).map(f => (p, snapOf(p), f)))
-        Checkpoint.writeInventory(spark, cfg.outDir, invRows)
+        .map(a => (a.source, snap.snapOf(a.source), a.stateBytes)))
+      snap.filesByPart.foreach { m =>
+        Checkpoint.writeInventory(spark, cfg.outDir, scope.todo.flatMap(p =>
+          m.getOrElse(p, Nil).map(f => (p, snap.snapOf(p), f))))
       }
       // per-rule fingerprints of the FULL rule set under this run's hash —
       // written by every run (delta or not) so any FUTURE rule edit can
       // diff against what this lineage actually meant
-      Checkpoint.writeRulesetMap(spark, cfg.outDir, rulesetHash, ruleFps)
+      Checkpoint.writeRulesetMap(spark, cfg.outDir, rulesetHash, snap.ruleFps)
     }
-
-    import scala.concurrent.duration.Duration
     // Join ALL chains before anything can unwind: if one chain fails
     // while another is mid-write, bailing out immediately would abandon
     // the in-flight write after its stale partitions were already deleted
     // (and swallow its error). All outcomes are observed; the violations
     // chain's error wins (table integrity first).
-    val vioOutcome = scala.util.Try(Await.result(vioChain, Duration.Inf))
-    val verdictOutcome = scala.util.Try(Await.result(verdictChain, Duration.Inf))
-    val sketchOutcome = scala.util.Try(Await.result(sketchChain, Duration.Inf))
-    val stateOutcome = scala.util.Try(Await.result(stateChain, Duration.Inf))
-    vioOutcome.get
-    val verdictRows = verdictOutcome.get
-    sketchOutcome.get
-    stateOutcome.get
-    phase("write_violations+verdicts")
+    Seq(vioChain, verdictChain, sketchChain, stateChain)
+      .map(f => scala.util.Try(Await.result(f, Duration.Inf)))
+      .foreach(_.get)
+    Written(Await.result(verdictChain, Duration.Inf), vioCount, runId,
+      completedAt)
+  }
 
-    val wallMs = (System.nanoTime() - t0) / 1000000
-    // NOT_COMPLETED rules (e.g. drift with no baseline configured) record
-    // their status per rule but do not block the partition verdict — they
-    // would otherwise block resume forever on a permanent configuration.
-    val perPartStatus = verdictRows
-      .filter(v => todoSet(v.source))
+  /** checkpoint: one entry per validated partition, appended LAST so a
+    * crash before it replays the run. Returns the run's wall ms at the
+    * point the entries are built. Spark jobs: the checkpoint append. */
+  private def checkpoint(spark: SparkSession, cfg: Config, snap: Snap,
+      scope: Scope, written: Written, t0: Long,
+      phasesBefore: Seq[(String, Long)]): Long = {
+    import spark.implicits._
+    val start = System.nanoTime()
+    val todoSet = scope.todo.toSet
+    val perPart = written.verdicts.filter(v => todoSet(v.source))
       .groupBy(_.source).toSeq
-      .map { case (src, vs) =>
-        val lvl = vs.map(_.status match {
-          case Status.Fail => 2
-          case Status.PassWithWarnings => 1
-          case _ => 0
-        }).max
-        val verdict = lvl match {
-          case 2 => Status.Fail
-          case 1 => Status.PassWithWarnings
-          case _ => Status.Pass
-        }
-        CheckpointEntry(
-          partition = src,
-          // the partition's OWN snapshot id: resume and the transfer
-          // lineage gate both compare per partition
-          snapshot_id = snapOf(src),
-          ruleset_hash = rulesetHash,
-          verdict = verdict,
-          metrics = s"""{"n_rules":${vs.size},"wall_ms":$wallMs}""",
-          completed_at = completedAt)
-      }
-
-    Checkpoint.appendRun(
-      spark.createDataset(perPartStatus), checkpointPath(cfg.outDir), runId)
-    phase("checkpoint_write")
-
-    scanVio.unpersist(blocking = false)
-    xrunCaches.foreach(_.unpersist(blocking = false))
-    if (useCache) seqs.unpersist(blocking = false)
-    RunReport(snapshotId, rulesetHash, todo,
-      done.toSeq.filter(inScope).sorted,
-      rowsValidated, vioCount, wallMs,
-      deltaPartitions = deltaParts.toSeq.sorted,
-      ruleDeltaPartitions = if (ruleDeltaActive) todo.sorted else Nil,
-      rulesEvaluated = evalRules.ruleIds.sorted)
-
-    } finally
-      Checkpoint.releasePartitionLocks(spark, cfg.outDir, lockParts)
+    // An entry cannot time the append that writes it: its checkpoint
+    // figure, like wall_ms, stops where the entries are built.
+    val now = System.nanoTime()
+    val wallMs = (now - t0) / 1000000
+    val phaseJson = (phasesBefore :+ ("checkpoint" -> (now - start) / 1000000))
+      .map { case (name, ms) => s""""$name":$ms""" }.mkString("{", ",", "}")
+    val entries = perPart.map { case (src, vs) =>
+      // NOT_COMPLETED rules (e.g. drift with no baseline configured)
+      // record their status per rule but do not block the partition
+      // verdict — they would otherwise block resume forever on a
+      // permanent configuration.
+      val verdict = vs.map(_.status).filterNot(_ == Status.NotCompleted)
+        .maxByOption(Status.rank).getOrElse(Status.Pass)
+      // the partition's OWN snapshot id: resume and the transfer
+      // lineage gate both compare per partition
+      CheckpointEntry(src, snap.snapOf(src), snap.rulesetHash, verdict,
+        s"""{"n_rules":${vs.size},"wall_ms":$wallMs,"phase_ms":$phaseJson}""",
+        written.completedAt)
+    }
+    Checkpoint.appendRun(spark.createDataset(entries),
+      checkpointPath(cfg.outDir), written.runId)
+    wallMs
   }
 }

@@ -104,6 +104,11 @@ object Status {
   val Fail = "FAIL"
   val PassWithWarnings = "PASS_WITH_WARNINGS"
   val NotCompleted = "NOT_COMPLETED"
+
+  /** Statuses ordered best to worst. A check that could not run ranks
+    * above both passes (it is no pass) and below FAIL. */
+  val rank: Map[String, Int] = Map(
+    Pass -> 0, PassWithWarnings -> 1, NotCompleted -> 2, Fail -> 3)
 }
 
 object Severity {

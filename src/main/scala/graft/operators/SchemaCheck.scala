@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.types._
+import scala.reflect.runtime.universe.TypeTag
 
 /**
  * Structural (schema-level) validation between a table's actual parquet
@@ -127,6 +128,21 @@ object SchemaCheck {
     * One footer read — metadata only. */
   def parquetSchema(spark: SparkSession, path: String): StructType =
     probeSession(spark).read.parquet(path).schema
+
+  /** The typed read of a table whose contract is the case class `T`,
+    * gated first: `schema(S).parquet` silently NULLs missing columns and
+    * prunes extras, so a renamed or retyped column would otherwise show
+    * as a wall of row violations, not as "the table's shape changed".
+    * The contract schema is given explicitly because inference would run
+    * a footer-reading job per read (~0.5 s of serial driver time per
+    * session at the bench layout); partition columns (hive `source=`
+    * dirs) match it by name. One footer read. */
+  def readTyped[T <: Product : TypeTag](
+      spark: SparkSession, path: String, what: String): Dataset[T] = {
+    val contract = Encoders.product[T]
+    requireCompatible(parquetSchema(spark, path), contract.schema, what)
+    spark.read.schema(contract.schema).parquet(path).as[T](contract)
+  }
 
   /** Merged footer schema across an EXPLICIT file list. The table-level
     * probe above reads one footer, so a single retyped file hiding among

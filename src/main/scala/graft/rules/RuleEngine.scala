@@ -137,10 +137,13 @@ object RuleEngine {
     * ONLY after an action has materialized `scanViolations` — collects the
     * observed token stats, runs the narrow aggregation pass, and returns
     * the driver-derived violations (RI / drift / manifest) + roll-up
-    * facts. */
+    * facts. `persisted` lists the frames the plan persisted (uniqueness
+    * candidate hashes); the caller unpersists them when it is done with
+    * the plan. */
   final case class StagedPlan(
       scanViolations: Dataset[Violation],
-      finish: () => StagedResult)
+      finish: () => StagedResult,
+      persisted: Seq[Dataset[_]] = Nil)
 
   /** The FUSED evaluation plan (the 100 TB shape) and the engine's one
     * entry point: the ENTIRE stats pass — both drift histograms,
@@ -187,9 +190,9 @@ object RuleEngine {
       case None => enriched0
     }
 
+    val unique = rules.uniqueRules.map(r => uniquePasses(seqs.toDF(), r))
     val scanParts: Seq[Dataset[Violation]] =
-      Seq(rowViolations(enriched, rules.rowRules)) ++
-        rules.uniqueRules.map(r => uniqueViolations(seqs.toDF(), r)) ++
+      Seq(rowViolations(enriched, rules.rowRules)) ++ unique.map(_._1) ++
         refSnapshot.toSeq.flatMap(ref =>
           rules.snapshotRules.map(r =>
             snapshotViolations(seqs.toDF(), ref.toDF(), r)))
@@ -219,7 +222,7 @@ object RuleEngine {
         needAgg)
     }
 
-    StagedPlan(scanParts.reduce(_ unionByName _), finish)
+    StagedPlan(scanParts.reduce(_ unionByName _), finish, unique.map(_._2))
   }
 
   /** Driver-side tail of [[planStaged]]'s `finish()`: RI /
@@ -555,7 +558,13 @@ object RuleEngine {
     * evidence is capped (the reference reports all duplicate locations,
     * manifest_processor.py:293-305 — complete up to the cap, which any
     * real duplicate group at validation scale fits). */
-  def uniqueViolations(seqs: DataFrame, rule: UniqueRule): Dataset[Violation] = {
+  def uniqueViolations(seqs: DataFrame, rule: UniqueRule): Dataset[Violation] =
+    uniquePasses(seqs, rule)._1
+
+  /** [[uniqueViolations]] plus the persisted pass-1 candidate hashes,
+    * for a caller that unpersists them. */
+  private def uniquePasses(seqs: DataFrame, rule: UniqueRule)
+      : (Dataset[Violation], Dataset[_]) = {
     val spark = seqs.sparkSession
     import spark.implicits._
     val k = rule.key
@@ -624,7 +633,7 @@ object RuleEngine {
       // the exact count>1 filter the hash pass could not provide
       .filter(col("dup_count") > 1)
 
-    groups
+    (groups
       .select(
         col(k).cast(StringType).as("doc_id"),
         lit(rule.id).as("rule_id"),
@@ -634,7 +643,7 @@ object RuleEngine {
         // attribute the violation to every member partition
         explode(col("member_sources")).as("source"),
         lit(rule.severity).as("severity"))
-      .as[Violation]
+      .as[Violation], dupHashes)
   }
 
   /** Verdict roll-up (A9): for every (source, rule) in the domain —

@@ -168,12 +168,8 @@ final case class RuleSet(rules: Seq[RuleSpec]) {
   /** Stable content hash of the rule set — part of checkpoint lineage:
     * changing any rule invalidates prior checkpoints (mirrors the
     * reference's re-validation reset, validation_manager.py:224-253). */
-  def rulesetHash: String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val bytes = md.digest(
-      rules.map(_.descriptor).sorted.mkString("\n").getBytes("UTF-8"))
-    bytes.map(b => f"$b%02x").mkString
-  }
+  def rulesetHash: String =
+    graft.sources.TableIO.md5Hex(rules.map(_.descriptor).sorted.mkString("\n"))
 }
 
 object Rules {

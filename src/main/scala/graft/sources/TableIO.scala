@@ -307,7 +307,9 @@ object TableIO {
     Some(files.toSeq)
   }
 
-  private def md5Hex(s: String): String = {
+  /** Lowercase hex MD5 of a string's UTF-8 bytes: every lineage id
+    * (snapshot ids, ruleset hashes, run ids) is one of these. */
+  def md5Hex(s: String): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
     md.digest(s.getBytes("UTF-8")).map(b => f"$b%02x").mkString
   }
@@ -319,8 +321,5 @@ object TableIO {
     md5Hex(partSnaps.toSeq.sorted
       .map { case (k, v) => s"$k=$v" }.mkString("\n"))
 
-  private def emptyListingId: String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    md.digest(Array.emptyByteArray).map(b => f"$b%02x").mkString
-  }
+  private def emptyListingId: String = md5Hex("")
 }

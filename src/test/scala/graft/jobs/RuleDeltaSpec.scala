@@ -185,4 +185,32 @@ class RuleDeltaSpec extends SparkSpec {
     assert(!vioSet(s"$dir/out").exists(_._2 == Rules.RConsistentNtok))
     assert(!verdictSet(s"$dir/out").exists(_._2 == Rules.RConsistentNtok))
   }
+
+  test("rule-delta after a run with ZERO violations: nothing to preserve, " +
+      "the added rule's violations land, tables equal a full run") {
+    val dir = tmpDir("rdelta_zero")
+    writeInput(dir, Knobs.clean)
+    val nonNeg = RuleSet(Seq(RowRule(
+      "R_NTOK_NONNEG", Severity.Error,
+      valid = col("n_tok") >= 0,
+      observed = to_json(struct(col("n_tok"))))))
+    def cfgOf(out: String, rules: RuleSet, ruleDelta: Boolean = false) =
+      ValidationJob.Config(s"$dir/input", s"$dir/manifest", s"$dir/$out",
+        rules = rules, ruleDelta = ruleDelta)
+
+    val r1 = ValidationJob.run(spark, cfgOf("out", nonNeg))
+    assert(r1.validatedPartitions.nonEmpty && r1.violations === 0L)
+    assert(vioSet(s"$dir/out").isEmpty)
+
+    val extended = RuleSet(nonNeg.rules :+ capRule)
+    val r2 = ValidationJob.run(spark, cfgOf("out", extended, ruleDelta = true))
+    assert(r2.ruleDeltaPartitions === r1.validatedPartitions.sorted)
+    assert(r2.rulesEvaluated === Seq("R_NTOK_CAP"))
+    val vio2 = vioSet(s"$dir/out")
+    assert(vio2.nonEmpty && vio2.forall(_._2 == "R_NTOK_CAP"))
+
+    ValidationJob.run(spark, cfgOf("out_full", extended))
+    assert(vioSet(s"$dir/out_full") === vio2)
+    assert(verdictSet(s"$dir/out_full") === verdictSet(s"$dir/out"))
+  }
 }

@@ -459,4 +459,60 @@ class ValidationJobSpec extends SparkSpec {
       .parquet(ValidationJob.violationsLogPath(s"$dir/out"))
     assert(vioLog.select("run_id").distinct().count() === 2)
   }
+
+  private val Phases = Seq("snapshot", "classify", "plan", "scan", "finish",
+    "cross_run", "write", "checkpoint")
+
+  test("phaseMs names a full run's eight phases in order (also in every " +
+      "checkpoint entry, summing to at most wall_ms); a resume run " +
+      "reports only snapshot and classify") {
+    val dir = tmpDir("vjob_phases")
+    writeInput(dir, Knobs(badNtokRate = 0.04))
+    val cfg = ValidationJob.Config(s"$dir/input", s"$dir/manifest", s"$dir/out")
+    val r1 = ValidationJob.run(spark, cfg)
+    assert(r1.phaseMs.map(_._1) === Phases)
+    assert(r1.phaseMs.forall(_._2 >= 0))
+
+    val PhaseMs = """"phase_ms":\{([^}]*)\}""".r.unanchored
+    val WallMs = """"wall_ms":(\d+)""".r.unanchored
+    val Entry = """"([a-z_]+)":(\d+)""".r
+    val metrics = spark.read.parquet(ValidationJob.checkpointPath(cfg.outDir))
+      .select("metrics").as[String].collect()
+    assert(metrics.length === r1.validatedPartitions.size)
+    metrics.foreach { m =>
+      val PhaseMs(body) = m: @unchecked
+      val WallMs(wall) = m: @unchecked
+      val entries = Entry.findAllMatchIn(body)
+        .map(e => e.group(1) -> e.group(2).toLong).toSeq
+      assert(entries.map(_._1) === Phases, m)
+      assert(entries.map(_._2).sum <= wall.toLong, m)
+    }
+
+    val r2 = ValidationJob.run(spark, cfg)
+    assert(r2.validatedPartitions.isEmpty)
+    assert(r2.phaseMs.map(_._1) === Seq("snapshot", "classify"))
+  }
+
+  test("a run that fails after persisting its violations releases them " +
+      "(and its locks)") {
+    val dir = tmpDir("vjob_fail")
+    writeInput(dir, Knobs(badNtokRate = 0.04))
+    val cfg = ValidationJob.Config(s"$dir/input", s"$dir/manifest", s"$dir/out")
+    // a regular file where the verdicts table goes: the verdict write
+    // throws after the scan violations are persisted
+    val verdicts = new java.io.File(ValidationJob.verdictsPath(cfg.outDir))
+    verdicts.getParentFile.mkdirs()
+    java.nio.file.Files.write(verdicts.toPath, "not a table".getBytes)
+    def cached = org.apache.spark.sql.execution.CachedPlans.count(spark)
+    val before = cached
+    intercept[Exception](ValidationJob.run(spark, cfg))
+    assert(cached === before)
+
+    // the failed run left no lock behind: once the path is clear, the
+    // same run validates everything
+    verdicts.delete()
+    val r = ValidationJob.run(spark, cfg)
+    assert(r.rowsValidated === N)
+    assert(cached === before)
+  }
 }
