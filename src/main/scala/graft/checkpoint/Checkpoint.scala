@@ -1,7 +1,8 @@
 package graft.checkpoint
 
-import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import scala.reflect.runtime.universe.TypeTag
 import graft.model.CheckpointEntry
 import graft.sources.TableIO
@@ -220,34 +221,101 @@ object Checkpoint {
         path, partitionCol = partitionCol, recluster = false)
   }
 
-  /** Persist per-partition key sketches (one row per (partition, rule)):
-    * the membership side of the CROSS-RUN uniqueness gate — the
-    * Spark-native stand-in for the reference's global ETag table
-    * (dynamodb.py:22-40). Dynamic overwrite per partition: a re-validated
-    * partition replaces exactly its own sketch (content lineage travels in
+  /** Persist per-partition key sketches as key-hash shards (one row per
+    * (partition, rule, shard); see [[graft.operators.ShardedBloom]]): the
+    * membership side of the CROSS-RUN uniqueness gate — the Spark-native
+    * stand-in for the reference's global ETag table (dynamodb.py:22-40).
+    * `shards` holds `part_value, snapshot_id, rule_id, key_col, shard,
+    * nshards, sketch` and is written straight from the executors that
+    * built it. Dynamic overwrite per partition: a re-validated partition
+    * replaces exactly its own shards (content lineage travels in
     * snapshot_id, so stale sketches are detectable), and two concurrent
     * disjoint-scope runs commit disjoint partitions safely. `part_value`
     * carries the exact partition string — the hive partition column is
     * only the directory key (partition columns are TYPE-INFERRED on read;
     * a numeric-looking source name would come back as a long). */
-  def writeSketches(
-      spark: SparkSession, outDir: String,
-      rows: Seq[(String, String, String, String, Array[Byte])]): Unit =
-    writeKeyed(spark, rows,
-      Seq("part_value", "snapshot_id", "rule_id", "key_col", "sketch"),
-      sketchesPath(outDir), "partition", "part_value")
+  def writeSketches(shards: DataFrame, outDir: String): Unit =
+    TableIO.writePartitioned(
+      shards.withColumn("partition", col("part_value")),
+      sketchesPath(outDir), partitionCol = "partition", recluster = false)
 
-  /** Sketches for one rule, keyed by exact partition value. */
+  /** Read schema of `_sketches`: tables written before sharding lack
+    * `shard` and `nshards`, which then read as null. */
+  private val sketchSchema = StructType(Seq(
+    StructField("part_value", StringType), StructField("snapshot_id", StringType),
+    StructField("rule_id", StringType), StructField("key_col", StringType),
+    StructField("shard", IntegerType), StructField("nshards", IntegerType),
+    StructField("sketch", BinaryType), StructField("partition", StringType)))
+
+  /** One rule's shard rows `(part_value, snapshot_id, shard, nshards,
+    * sketch)` in `partitions`, read by executors only; the caller knows
+    * from [[readSketchMeta]] that the table exists. A row of the
+    * unsharded layout reads as shard 0 with a null `nshards`. */
+  def readShards(spark: SparkSession, outDir: String, ruleId: String,
+      partitions: Seq[String]): DataFrame =
+    spark.read.schema(sketchSchema).parquet(sketchesPath(outDir))
+      .filter(col("partition").isin(partitions: _*) &&
+        col("rule_id") === ruleId)
+      .select(col("part_value"), col("snapshot_id"),
+        coalesce(col("shard"), lit(0)).as("shard"), col("nshards"),
+        col("sketch"))
+
+  /** What a run needs to know of one partition's sketch for one rule:
+    * its lineage, its shard count (None = the unsharded layout), and how
+    * many shard rows and bytes it holds. */
+  final case class SketchMeta(snapshotId: String, nshards: Option[Int],
+      shardRows: Long, bytes: Long)
+
+  /** rule id → partition → [[SketchMeta]]. Each task sums its own shard
+    * rows per (rule, partition) and the driver adds up those partial
+    * rows: one job with no shuffle, no sketch bytes collected, and at most
+    * (tasks × partitions) rows reaching the driver. */
+  def readSketchMeta(spark: SparkSession,
+      outDir: String): Map[String, Map[String, SketchMeta]] =
+    if (!TableIO.hasData(spark, sketchesPath(outDir))) Map.empty
+    else {
+      type Key = (String, String, String, Option[Int])
+      def add(m: Map[Key, (Long, Long)], k: Key, n: Long, b: Long) =
+        m.updated(k, m.get(k).fold((n, b)) { case (n0, b0) => (n0 + n, b0 + b) })
+      spark.read.schema(sketchSchema).parquet(sketchesPath(outDir))
+        .select(col("rule_id"), col("part_value"), col("snapshot_id"),
+          col("nshards"), octet_length(col("sketch")))
+        .rdd
+        .mapPartitions(rows => rows.foldLeft(Map.empty[Key, (Long, Long)])(
+          (m, r) => add(m, (r.getString(0), r.getString(1), r.getString(2),
+            Option.when(!r.isNullAt(3))(r.getInt(3))), 1L, r.getInt(4)))
+          .iterator)
+        .collect()
+        .foldLeft(Map.empty[Key, (Long, Long)]) { case (m, (k, (n, b))) =>
+          add(m, k, n, b) }
+        .toSeq
+        .groupBy(_._1._1)
+        .map { case (rule, rs) => rule -> rs.map {
+          case ((_, part, snap, n), (rows, bytes)) =>
+            part -> SketchMeta(snap, n, rows, bytes) }.toMap }
+    }
+
+  /** Diagnostic view the job does not use: one rule's sketch per
+    * partition as (snapshot id, the OR of the partition's shards). Every
+    * shard has the same size, so the values merge with
+    * [[graft.operators.BloomDedup.merge]]. */
   def readSketches(
       spark: SparkSession, outDir: String,
-      ruleId: String): Map[String, (String, Array[Byte])] =
-    TableIO.readIfExists(spark, sketchesPath(outDir)).map(
-      _.filter(col("rule_id") === ruleId)
+      ruleId: String): Map[String, (String, Array[Byte])] = {
+    import spark.implicits._
+    if (!TableIO.hasData(spark, sketchesPath(outDir))) Map.empty
+    else
+      spark.read.schema(sketchSchema).parquet(sketchesPath(outDir))
+        .filter(col("rule_id") === ruleId)
         .select("part_value", "snapshot_id", "sketch")
+        .as[(String, String, Array[Byte])]
+        .groupByKey(_._1)
+        .reduceGroups((a, b) =>
+          (a._1, a._2, graft.operators.BloomDedup.merge(a._3, b._3)))
         .collect()
-        .map(r => r.getString(0) ->
-          ((r.getString(1), r.getAs[Array[Byte]]("sketch"))))
-        .toMap).getOrElse(Map.empty)
+        .map { case (p, (_, snap, sk)) => p -> ((snap, sk)) }
+        .toMap
+  }
 
   def statsStatePath(outDir: String): String = s"$outDir/_stats_state"
   def inventoryPath(outDir: String): String = s"$outDir/_inventory"

@@ -13,7 +13,7 @@ import graft.drift.Drift
  * Commands:
  *   gen <outDir> <nRows> [seed] [badNtokRate] [dupRate] [unknownRate] [driftSrc:shift]
  *     writes input/ manifest/ baseline/ under outDir (seeded, deterministic)
- *   validate <inputDir> <manifestDir> <outDir> [baselineDir] [refSnapshotDir] [--partitions=a,b] [--sketch-items=N] [--sketch-fpp=p] [--append-delta] [--rule-delta] [--rules=path]
+ *   validate <inputDir> <manifestDir> <outDir> [baselineDir] [refSnapshotDir] [--partitions=a,b] [--sketch-fpp=p] [--append-delta] [--rule-delta] [--rules=path]
  *     runs the rule set, writes violations/ verdicts/ checkpoint/, prints a
  *     one-line JSON run report
  */
@@ -80,14 +80,10 @@ object Main {
             case a if a.startsWith("--partitions=") =>
               a.stripPrefix("--partitions=").split(",").toSeq
           }
-          // --sketch-items=N / --sketch-fpp=p size the cross-run
-          // uniqueness sketches (per-partition expected key count;
-          // over-filling only raises confirm-scan traffic, never
-          // correctness — ValidationJob.Config doc)
-          val sketchItems = rest0.collectFirst {
-            case a if a.startsWith("--sketch-items=") =>
-              a.stripPrefix("--sketch-items=").toLong
-          }
+          // --sketch-fpp=p sets the false-positive rate of each cross-run
+          // uniqueness sketch shard (shards are sized to the data; a false
+          // positive only costs confirm-scan traffic, never correctness —
+          // ValidationJob.Config doc)
           val sketchFpp = rest0.collectFirst {
             case a if a.startsWith("--sketch-fpp=") =>
               a.stripPrefix("--sketch-fpp=").toDouble
@@ -119,7 +115,6 @@ object Main {
             baselinePath = rest.headOption,
             refSnapshotPath = refSnap,
             partitions = scope,
-            sketchExpectedItems = sketchItems.getOrElse(1000000L),
             sketchFpp = sketchFpp.getOrElse(0.001),
             appendDelta = appendDelta,
             ruleDelta = ruleDelta,
@@ -143,7 +138,8 @@ object Main {
               s""""skipped_partitions":${report.skippedPartitions.size},""" +
               s""""rows_validated":${report.rowsValidated},""" +
               s""""violations":${report.violations},""" +
-              s""""wall_ms":${report.wallMs}}""")
+              s""""wall_ms":${report.wallMs},""" +
+              s""""xrun":${report.xrun.json}}""")
 
         case "transfer" :: input :: valOut :: store :: manifestTxt :: Nil =>
           val r = graft.jobs.TransferJob.run(spark, graft.jobs.TransferJob

@@ -6,7 +6,7 @@ import org.apache.spark.storage.StorageLevel
 import graft.model._
 import graft.rules.{RuleEngine, RuleSet, Rules}
 import graft.checkpoint.Checkpoint
-import graft.operators.SchemaCheck
+import graft.operators.{SchemaCheck, ShardedBloom}
 import graft.sources.{ManifestTable, TableIO}
 
 /**
@@ -47,13 +47,12 @@ object ValidationJob {
         * gate is submission-local (manifest_processor.py:283-305); run
         * unrestricted on a fresh checkpoint for global uniqueness. */
       partitions: Option[Seq[String]] = None,
-      /** Per-partition capacity of the cross-run uniqueness sketches
-        * (CrossRunUniqueRule). Size to the expected partition row count;
-        * ~1.2 MB of sketch per 10^6 keys at fpp=0.001. Over-filled
-        * sketches only RAISE the false-positive rate — the confirm join
-        * keeps the reported violations exact regardless, at the cost of
-        * more confirm-scan traffic. */
-      sketchExpectedItems: Long = 1000000L,
+      /** False-positive rate of each cross-run uniqueness sketch shard
+        * (CrossRunUniqueRule). A partition's sketch is as many shards of
+        * [[graft.operators.ShardedBloom.ShardKeys]] keys as its row count
+        * needs (~115 KiB each at 0.001), so the rate holds at any size.
+        * A false positive costs confirm-scan traffic only: the confirm
+        * join keeps the reported violations exact. */
       sketchFpp: Double = 0.001,
       /** APPEND-DELTA mode: a changed partition whose current file set is
         * a strict superset of its last-validated inventory (same paths,
@@ -111,17 +110,31 @@ object ValidationJob {
       rulesEvaluated: Seq[String] = Nil,
       /** Wall ms per phase, in run order. A resume run that finds nothing
         * to validate stops after snapshot and classify. */
-      phaseMs: Seq[(String, Long)] = Nil)
+      phaseMs: Seq[(String, Long)] = Nil,
+      /** What the cross-run gate probed and found. */
+      xrun: CrossRunStats = CrossRunStats())
+
+  /** The cross-run gate's figures: `candidates` = (key row, history
+    * partition) pairs its sketch shards let through to the confirm join,
+    * `confirmed` = the duplicates that join booked, and the shard rows and
+    * KiB of the history sketches probed (from the sketch metadata read). */
+  final case class CrossRunStats(candidates: Long = 0L, confirmed: Long = 0L,
+      shardRows: Long = 0L, sketchKib: Long = 0L) {
+    def json: String = s"""{"candidates":$candidates,"confirmed":$confirmed,""" +
+      s""""shard_rows":$shardRows,"sketch_kib":$sketchKib}"""
+  }
 
   /** Everything an eligible append-delta partition carries into the run. */
   private final case class DeltaPart(
       oldSnapshotId: String,
       oldFiles: Seq[String],
       newFiles: Seq[String],
-      oldState: Array[Byte])
+      oldState: Array[Byte],
+      /** shard count of the partition's persisted sketch, kept on refresh */
+      nshards: Int)
 
-  /** rule id → partition → (snapshot id, persisted cross-run sketch) */
-  private type Sketches = Map[String, Map[String, (String, Array[Byte])]]
+  /** rule id → partition → its persisted cross-run sketch's metadata */
+  private type Sketches = Map[String, Map[String, Checkpoint.SketchMeta]]
 
   /** snapshot: the run's lineage and the typed reads of its inputs. */
   private final case class Snap(
@@ -166,9 +179,11 @@ object ValidationJob {
   private final case class Scanned(vio: Dataset[Violation], count: Long)
   private final case class Finished(fin: RuleEngine.StagedResult,
       rowsValidated: Long, storageVios: Seq[Violation],
-      storageNotCompleted: Set[(String, String)])
-  private final case class CrossRun(vio: Option[DataFrame], count: Long,
-      notCompleted: Set[(String, String)])
+      storageNotCompleted: Set[(String, String)],
+      /** rows per scanned source (whole-partition in append-delta) */
+      nDocs: Map[String, Long])
+  private final case class CrossRun(vio: Option[DataFrame],
+      notCompleted: Set[(String, String)], stats: CrossRunStats)
   private final case class Written(verdicts: Seq[Verdict], violations: Long,
       runId: String, completedAt: String)
 
@@ -229,10 +244,13 @@ object ValidationJob {
         "_locks/ reclaim automatically)")
     val persisted = new Persisted
     try {
-      // read at most once per cross-run rule: by classify in an
-      // append-delta run, else by cross_run when there is history
-      lazy val sketches: Sketches = cfg.rules.crossRunRules.map(r =>
-        r.id -> Checkpoint.readSketches(spark, cfg.outDir, r.id)).toMap
+      // read at most once: by classify in an append-delta run, else by
+      // cross_run when there is history
+      lazy val sketches: Sketches = {
+        val meta = Checkpoint.readSketchMeta(spark, cfg.outDir)
+        cfg.rules.crossRunRules.map(r =>
+          r.id -> meta.getOrElse(r.id, Map.empty)).toMap
+      }
       val cls = timed("classify")(classify(spark, cfg, snap, scope, sketches))
       val planned = timed("plan")(
         plan(spark, cfg, snap, scope, cls, persisted))
@@ -241,9 +259,9 @@ object ValidationJob {
       val xrun = timed("cross_run")(crossRun(
         spark, cfg, snap, scope, cls, planned, sketches, persisted))
       val written = timed("write")(write(spark, cfg, snap, scope, cls,
-        planned, scanned, finished, xrun, sketches, persisted))
-      val wallMs = timed("checkpoint")(
-        checkpoint(spark, cfg, snap, scope, written, t0, phaseMs.toSeq))
+        planned, scanned, finished, xrun, persisted))
+      val wallMs = timed("checkpoint")(checkpoint(
+        spark, cfg, snap, scope, written, t0, phaseMs.toSeq, xrun.stats))
       RunReport(snap.snapshotId, snap.rulesetHash, scope.todo,
         scope.done.toSeq.filter(scope.inScope).sorted,
         finished.rowsValidated, written.violations, wallMs,
@@ -251,7 +269,7 @@ object ValidationJob {
         ruleDeltaPartitions =
           if (cls.ruleDeltaActive) scope.todo.sorted else Nil,
         rulesEvaluated = cls.evalRules.ruleIds.sorted,
-        phaseMs = phaseMs.toSeq)
+        phaseMs = phaseMs.toSeq, xrun = xrun.stats)
     } finally
       try persisted.release()
       finally Checkpoint.releasePartitionLocks(spark, cfg.outDir, lockParts)
@@ -384,10 +402,14 @@ object ValidationJob {
 
     // APPEND-DELTA classification: a todo partition is delta-eligible iff
     // its last completed run (same ruleset) left behind a matching
-    // inventory, stats state, and cross-run sketch, and the current file
-    // set strictly extends the old one (same paths, same lengths). Every
-    // condition is checked against the OLD snapshot id, which is itself
-    // the md5 of the old inventory — the artifacts cannot desync silently.
+    // inventory, stats state, and sharded cross-run sketch, the current
+    // file set strictly extends the old one (same paths, same lengths),
+    // and old + new rows still fit the sketch's shards. Every condition
+    // is checked against the OLD snapshot id, which is itself the md5 of
+    // the old inventory — the artifacts cannot desync silently. A
+    // partition that outgrew its shards (or still has an unsharded
+    // sketch) takes the full rescan, which re-shards it; capacity at
+    // least doubles each time, so those rescans amortize.
     val deltaInfo: Map[String, DeltaPart] =
       if (!cfg.appendDelta || cfg.rules.crossRunRules.isEmpty) Map.empty
       else {
@@ -407,13 +429,20 @@ object ValidationJob {
             if invSnap == oldSnap
             (stSnap, oldState) <- states.get(part)
             if stSnap == oldSnap
-            if cfg.rules.crossRunRules.forall(r =>
-              bySketch(r.id).get(part).exists(_._1 == oldSnap))
+            metas = cfg.rules.crossRunRules.flatMap(r =>
+              bySketch(r.id).get(part).filter(_.snapshotId == oldSnap))
+            if metas.size == cfg.rules.crossRunRules.size
+            nshards <- metas.map(_.nshards).distinct match {
+              case Seq(Some(n)) => Some(n)
+              case _ => None
+            }
             oldSet = oldFiles.toSet
             if oldSet.subsetOf(files.toSet) && files.size > oldFiles.size
+            newFiles = files.filterNot(oldSet).sorted
+            if ShardedBloom.fits(stateDocs(oldState) + TableIO.parquetRowCount(
+              spark, newFiles.map(TableIO.inventoryEntryPath)), nshards)
           } yield part -> DeltaPart(
-            oldSnap, oldFiles,
-            files.filterNot(oldSet).sorted, oldState)
+            oldSnap, oldFiles, newFiles, oldState, nshards)
         }.toMap
       }
     // Delta files come from whatever writer appended them — re-gate their
@@ -434,6 +463,12 @@ object ValidationJob {
       if (ruleDeltaActive) allIds -- evalRules.ruleIds else Set.empty,
       deltaInfo)
   }
+
+  /** Rows a persisted stats state covers. */
+  private def stateDocs(state: Array[Byte]): Long =
+    graft.drift.SourceStatsAggregate
+      .mergeStateBytes(Seq(state), graft.drift.Drift.tokenBins)
+      .values.map(_.nDocs).sum
 
   /** A typed read of exactly these inventory files of the input table. */
   private def readFiles(spark: SparkSession, cfg: Config,
@@ -512,14 +547,15 @@ object ValidationJob {
     // an append-delta run those are MERGED (whole-partition) counts, so
     // the rows actually scanned = merged total − persisted old totals
     // (both known driver-side, no extra job)
-    val oldStateDocs =
-      if (cls.deltaInfo.isEmpty) 0L
-      else graft.drift.SourceStatsAggregate
-        .mergeStateBytes(cls.deltaInfo.values.map(_.oldState).toSeq,
-          graft.drift.Drift.tokenBins)
-        .values.map(_.nDocs).sum
-    val rowsValidated =
-      fin.rowCount.map(_ - oldStateDocs).getOrElse(planned.seqs.count())
+    val oldStateDocs = cls.deltaInfo.values.map(d => stateDocs(d.oldState)).sum
+    // with no aggregates to ride (a rule set without stats-family rules)
+    // one per-source count stands in, which also sizes the sketches
+    val nDocs: Map[String, Long] =
+      if (fin.rowCount.isDefined)
+        fin.aggregates.map(a => a.source -> a.nDocs).toMap
+      else planned.seqs.groupBy(col("source")).count()
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val rowsValidated = nDocs.values.sum - oldStateDocs
 
     // Storage-manifest ROW-COUNT reconciliation (StorageCountRule): the
     // per-partition scanned counts (free — fin.aggregates) against the
@@ -557,42 +593,51 @@ object ValidationJob {
     }
     val notCompleted =
       checks.collect { case (rule, src, None) => (src, rule.id) }.toSet
-    Finished(fin, rowsValidated, storageVios, notCompleted)
+    Finished(fin, rowsValidated, storageVios, notCompleted, nDocs)
   }
 
-  /** cross_run: routes the new scope's keys through the persisted sketches
-    * of history and confirms the positives against history's keys.
-    * Spark jobs: the sketch read (unless classify did it), the candidate
-    * count per rule, and the confirm join's count. */
+  /** cross_run: routes the new scope's keys through the persisted sketch
+    * shards of history and confirms the positives against history's keys.
+    * Spark jobs: the sketch metadata read (unless classify did it), the
+    * probe join's count per rule, and the confirm join's count. */
   private def crossRun(spark: SparkSession, cfg: Config, snap: Snap,
       scope: Scope, cls: Classified, planned: Planned,
       sketches: => Sketches, persisted: Persisted): CrossRun = {
+    import spark.implicits._
     // CROSS-RUN uniqueness (CrossRunUniqueRule): the reference's duplicate
     // gate is store-GLOBAL (manifest_processor.py:283-305,
-    // dynamodb.py:22-40); uniqueViolations covers only this run's scope.
-    // Bloom-negative keys (the overwhelming majority) never touch history;
-    // positives are CONFIRMED against a partition-pruned NARROW scan of
-    // history's key column, so violations are exact at any fpp. No history
-    // → no work (vacuous PASS); a history partition with no lineage-
-    // matching sketch → NOT_COMPLETED, never a silent partial PASS. Delta
-    // partitions' OLD files are history too (sketch lineage = the OLD
-    // snapshot id): new↔old duplicates in a growing partition surface here.
+    // dynamodb.py:22-40); the uniqueness passes cover only this run's
+    // scope. Each key is joined to the one shard it routes to in every
+    // history partition, so Bloom-negative keys (the overwhelming
+    // majority) never touch history's keys; positives are CONFIRMED
+    // against a partition-pruned NARROW scan of history's key column, so
+    // violations are exact at any fpp. No history → no work (vacuous
+    // PASS); a history partition with no lineage-matching sketch →
+    // NOT_COMPLETED, never a silent partial PASS. Delta partitions' OLD
+    // files are history too (sketch lineage = the OLD snapshot id):
+    // new↔old duplicates in a growing partition surface here.
     val hist = (scope.done.toSeq ++ cls.deltaParts).sorted
     def histSnapOf(src: String): String =
       cls.deltaInfo.get(src).map(_.oldSnapshotId).getOrElse(snap.snapOf(src))
     val rules = if (hist.isEmpty) Nil else cls.evalRules.crossRunRules
-    val (complete, incomplete) = rules.partition(r =>
-      hist.forall(s => sketches(r.id).get(s).exists(_._1 == histSnapOf(s))))
-    val frames = complete.flatMap { rule =>
-      val merged = hist.map(s => sketches(rule.id)(s)._2)
-        .reduce(graft.operators.BloomDedup.merge)
-      val cands = persisted(planned.seqs
-        .select(col("source"), col(rule.key).cast("string").as("xk"))
-        .filter(col("xk").isNotNull &&
-          graft.operators.BloomDedup.mightContain(merged, col("xk"))))
-      // short-circuit: when the sketch fired nothing (the common
-      // incremental case), history is never scanned
-      if (cands.count() == 0) None
+    val (complete, incomplete) = rules.partition(r => hist.forall(s =>
+      sketches(r.id).get(s).exists(_.snapshotId == histSnapOf(s))))
+    val probed = complete.map { rule =>
+      val metas = hist.map(s => s -> sketches(rule.id)(s))
+      val meta = metas.map { case (s, m) =>
+          (s, m.snapshotId, m.nshards.getOrElse(1)) }
+        .toDF("part_value", "snapshot_id", "nshards")
+      // one (source, key, history partition) row per shard that fires:
+      // its lineage-matching history partitions all have shard rows
+      val cands = persisted(ShardedBloom.probe(
+        planned.seqs.select(col("source"),
+            col(rule.key).cast("string").as("xk"))
+          .filter(col("xk").isNotNull),
+        meta, Checkpoint.readShards(spark, cfg.outDir, rule.id, hist)))
+      val nCands = cands.count()
+      // short-circuit: when no shard fired (the common incremental case),
+      // history is never scanned
+      if (nCands == 0) (None, nCands, metas.map(_._2))
       else {
         val (histDelta, histDone) = hist.partition(cls.deltaParts)
         // delta history = the partition's OLD files only: the current
@@ -606,8 +651,11 @@ object ValidationJob {
           .select(col(rule.key).cast("string").as("xk"),
             col("source").as("dup_in"))
           .filter(col("xk").isNotNull)
-        Some(cands.join(histKeys, Seq("xk"))
-          .groupBy(col("xk"), col("source"))
+        // a candidate meets only its fired partition's copies; every
+        // partition holding a copy fires, so the counts are exact
+        (Some(cands.join(histKeys, cands("xk") === histKeys("xk") &&
+            cands("hist_part") === histKeys("dup_in"))
+          .groupBy(cands("xk"), col("source"))
           .agg(count(lit(1)).as("n_prior_copies"),
             slice(sort_array(collect_set(col("dup_in"))), 1,
               RuleEngine.DupEvidenceCap).as("dup_in_sources"))
@@ -617,16 +665,20 @@ object ValidationJob {
             to_json(struct(col("n_prior_copies"),
               col("dup_in_sources"))).as("observed"),
             col("source"),
-            lit(rule.severity).as("severity")))
+            lit(rule.severity).as("severity"))), nCands, metas.map(_._2))
       }
     }
     // cross-run duplicates: a small distributed frame (the duplicated
     // slice of the NEW scope only), persisted so the two write chains and
     // the count reuse one materialization of the confirm join
-    val vio = frames.reduceOption(_ unionByName _)
+    val vio = probed.flatMap(_._1).reduceOption(_ unionByName _)
       .map(f => persisted(bySource(f)))
-    CrossRun(vio, vio.map(_.count()).getOrElse(0L),
-      (for (r <- incomplete; s <- scope.todo) yield (s, r.id)).toSet)
+    val probedShards = probed.flatMap(_._3)
+    CrossRun(vio,
+      (for (r <- incomplete; s <- scope.todo) yield (s, r.id)).toSet,
+      CrossRunStats(probed.map(_._2).sum, vio.map(_.count()).getOrElse(0L),
+        probedShards.map(_.shardRows).sum,
+        probedShards.map(_.bytes).sum / 1024))
   }
 
   /** Violations a partial re-validation keeps from the current table,
@@ -690,38 +742,40 @@ object ValidationJob {
     }
   }
 
-  /** Per-partition key sketches for FUTURE runs' cross-run gate: one
-    * narrow (source, key) scan of the new scope, one small row per
-    * (partition, rule). A delta partition's refreshed sketch must cover
-    * old + new keys — Bloom sketches OR together, so the old sketch folds
-    * in (and is carried alone if the delta files held no non-null keys:
-    * the snapshot id still advanced). */
-  private def refreshedSketches(cfg: Config, snap: Snap, cls: Classified,
-      seqs: Dataset[Sequence], sketches: => Sketches)
-      : Seq[(String, String, String, String, Array[Byte])] =
-    cls.evalRules.crossRunRules.flatMap { rule =>
-      val fresh = seqs.filter(col(rule.key).isNotNull)
-        .groupBy(col("source"))
-        .agg(graft.operators.BloomDedup.sketchAgg(
-          col(rule.key).cast("string"),
-          cfg.sketchExpectedItems, cfg.sketchFpp).as("sk"))
-        .collect()
-        .map(r => r.getString(0) -> r.getAs[Array[Byte]]("sk"))
-        .toMap
-      (fresh.keySet ++ cls.deltaParts).toSeq.sorted.map { s =>
-        val old =
-          if (cls.deltaInfo.contains(s)) Some(sketches(rule.id)(s)._2)
-          else None
-        val sk = (fresh.get(s), old) match {
-          case (Some(f), Some(o)) => graft.operators.BloomDedup.merge(o, f)
-          case (Some(f), None) => f
-          case (None, Some(o)) => o
-          case (None, None) =>
-            throw new IllegalStateException(s"no sketch material for $s")
-        }
-        (s, snap.snapOf(s), rule.id, rule.key, sk)
-      }
-    }
+  /** Per-partition key sketch shards for FUTURE runs' cross-run gate,
+    * built and written by executors: one narrow (source, key) scan of the
+    * new scope, one row per (partition, rule, shard). A full partition
+    * gets the shards its row count needs; a delta partition keeps its
+    * shard count, and its carried shards OR into the fresh ones — Bloom
+    * filters OR together, so the refreshed sketch covers old + new keys
+    * (and the carried shards stand alone if the delta files held no
+    * non-null keys: the snapshot id still advanced). */
+  private def refreshedSketches(spark: SparkSession, cfg: Config, snap: Snap,
+      cls: Classified, seqs: Dataset[Sequence],
+      nDocs: Map[String, Long]): Option[DataFrame] = {
+    val deltaParts = cls.deltaParts.toSeq.sorted
+    val nshards = nDocs.map { case (s, n) => s -> ShardedBloom.shardsFor(n) } ++
+      cls.deltaInfo.map { case (s, d) => s -> d.nshards }
+    val snapOf = typedLit(nshards.keys.map(s => s -> snap.snapOf(s)).toMap)
+    val nOf = typedLit(nshards)
+    cls.evalRules.crossRunRules.map { rule =>
+      val carried = Option.when(deltaParts.nonEmpty)(
+        Checkpoint.readShards(spark, cfg.outDir, rule.id, deltaParts)
+          .filter(deltaParts.map(s => col("part_value") === s &&
+              col("snapshot_id") === cls.deltaInfo(s).oldSnapshotId)
+            .reduce(_ || _)))
+      ShardedBloom.build(seqs
+          .select(col("source").as("part_value"),
+            col(rule.key).cast("string").as("xk"))
+          .filter(col("xk").isNotNull),
+        nshards, cfg.sketchFpp, carried)
+        .select(col("part_value"),
+          element_at(snapOf, col("part_value")).as("snapshot_id"),
+          lit(rule.id).as("rule_id"), lit(rule.key).as("key_col"),
+          col("shard"), element_at(nOf, col("part_value")).as("nshards"),
+          col("sketch"))
+    }.reduceOption(_ unionByName _)
+  }
 
   /** write: every output table but the checkpoint, in four concurrent
     * chains — violations + violations log, verdicts + run log, cross-run
@@ -730,8 +784,7 @@ object ValidationJob {
     * the verdict roll-up, the sketch-refresh scan and every write. */
   private def write(spark: SparkSession, cfg: Config, snap: Snap,
       scope: Scope, cls: Classified, planned: Planned, scanned: Scanned,
-      finished: Finished, xrun: CrossRun, sketches: => Sketches,
-      persisted: Persisted): Written = {
+      finished: Finished, xrun: CrossRun, persisted: Persisted): Written = {
     import spark.implicits._
     import finished.fin
     import snap.{rulesetHash, snapshotId}
@@ -760,7 +813,7 @@ object ValidationJob {
     // to this run — including manifest-only sources that never appear in
     // the data — not just rows from `todo` partitions.
     val vioCount =
-      scanned.count + xrun.count + preservedCount + driverVios.size
+      scanned.count + xrun.stats.confirmed + preservedCount + driverVios.size
 
     val completedAt = java.time.Instant.now().toString
     // run lineage id: restricted runs fold their scope in, so two
@@ -831,8 +884,9 @@ object ValidationJob {
     // replay overwrites its own partitions (dynamic overwrite), and each
     // row travels with its partition's snapshot id so staleness is
     // detectable.
-    val sketchChain = Future(Checkpoint.writeSketches(spark, cfg.outDir,
-      refreshedSketches(cfg, snap, cls, planned.seqs, sketches)))
+    val sketchChain = Future(
+      refreshedSketches(spark, cfg, snap, cls, planned.seqs, finished.nDocs)
+        .foreach(Checkpoint.writeSketches(_, cfg.outDir)))
     // The merged stats state + current file inventory of every validated
     // partition: the material the NEXT append-delta run starts from.
     val stateChain = Future {
@@ -865,7 +919,7 @@ object ValidationJob {
     * point the entries are built. Spark jobs: the checkpoint append. */
   private def checkpoint(spark: SparkSession, cfg: Config, snap: Snap,
       scope: Scope, written: Written, t0: Long,
-      phasesBefore: Seq[(String, Long)]): Long = {
+      phasesBefore: Seq[(String, Long)], xrun: CrossRunStats): Long = {
     import spark.implicits._
     val start = System.nanoTime()
     val todoSet = scope.todo.toSet
@@ -887,7 +941,8 @@ object ValidationJob {
       // the partition's OWN snapshot id: resume and the transfer
       // lineage gate both compare per partition
       CheckpointEntry(src, snap.snapOf(src), snap.rulesetHash, verdict,
-        s"""{"n_rules":${vs.size},"wall_ms":$wallMs,"phase_ms":$phaseJson}""",
+        s"""{"n_rules":${vs.size},"wall_ms":$wallMs,"phase_ms":$phaseJson,""" +
+          s""""xrun":${xrun.json}}""",
         written.completedAt)
     }
     Checkpoint.appendRun(spark.createDataset(entries),

@@ -194,7 +194,7 @@ object RelationalQueries {
     // A8: group-to-map / capped evidence collection — per group, the
     // FIRST-k ordered member ids plus the exact total (duplicate-location
     // evidence capped at k, manifest_processor.py:293-305; engine form:
-    // RuleEngine.uniqueViolations' capped collect). Emitted as a "|"-joined
+    // RuleEngine.uniquePasses' capped collect). Emitted as a "|"-joined
     // scalar, not an array: the evidence payload is a display string (the
     // reference stores it as a message field), and scalars keep the row
     // sortable/hashable by any downstream consumer.

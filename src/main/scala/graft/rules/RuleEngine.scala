@@ -557,13 +557,11 @@ object RuleEngine {
     * unbounded member list. Counts stay EXACT; the member-location
     * evidence is capped (the reference reports all duplicate locations,
     * manifest_processor.py:293-305 — complete up to the cap, which any
-    * real duplicate group at validation scale fits). */
-  def uniqueViolations(seqs: DataFrame, rule: UniqueRule): Dataset[Violation] =
-    uniquePasses(seqs, rule)._1
-
-  /** [[uniqueViolations]] plus the persisted pass-1 candidate hashes,
-    * for a caller that unpersists them. */
-  private def uniquePasses(seqs: DataFrame, rule: UniqueRule)
+    * real duplicate group at validation scale fits).
+    *
+    * Returns the violations and the persisted pass-1 candidate hashes,
+    * which the caller unpersists once it is done with the violations. */
+  private[rules] def uniquePasses(seqs: DataFrame, rule: UniqueRule)
       : (Dataset[Violation], Dataset[_]) = {
     val spark = seqs.sparkSession
     import spark.implicits._

@@ -52,14 +52,29 @@ object TableIO {
     * yet: the path is missing, or holds no data file or partition dir
     * (a partitioned write of zero rows leaves just the directory, which
     * Spark cannot infer a schema from). */
-  def readIfExists(spark: SparkSession, path: String): Option[DataFrame] = {
+  def readIfExists(spark: SparkSession, path: String): Option[DataFrame] =
+    Option.when(hasData(spark, path))(spark.read.parquet(path))
+
+  /** Whether [[readIfExists]] would find a table at `path`. */
+  def hasData(spark: SparkSession, path: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasData = fs.exists(p) && fs.listStatus(p).exists { st =>
+    fs.exists(p) && fs.listStatus(p).exists { st =>
       val name = st.getPath.getName
       !name.startsWith("_") && !name.startsWith(".")
     }
-    if (hasData) Some(spark.read.parquet(path)) else None
+  }
+
+  /** Rows in these parquet files, summed from their footers on the
+    * driver: no Spark job, no data page read. */
+  def parquetRowCount(spark: SparkSession, paths: Seq[String]): Long = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    paths.map { p =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(p), conf))
+      try r.getRecordCount finally r.close()
+    }.sum
   }
 
   /** Bucketed table write — the co-located-join layout for keyed passes

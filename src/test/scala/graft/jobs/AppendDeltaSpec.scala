@@ -213,4 +213,105 @@ class AppendDeltaSpec extends SparkSpec {
     assert(r2.deltaPartitions.isEmpty, r2.toString)
     assert(r2.rowsValidated > 0)
   }
+
+  test("a full run then an append-delta run with planted old-new " +
+      "duplicates ship no oversized task") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{LoggerConfig, Property}
+    val big = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender(
+        "task-size-probe", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = {
+        val m = e.getMessage.getFormattedMessage
+        if (m.contains("very large size")) big.add(m)
+      }
+    }
+    appender.start()
+    val logger = "org.apache.spark.scheduler.TaskSetManager"
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val conf = ctx.getConfiguration
+    val prior = Option(conf.getLoggers.get(logger))
+    val lc = new LoggerConfig(logger, Level.WARN, true)
+    lc.addAppender(appender, Level.WARN, null)
+    conf.removeLogger(logger)
+    conf.addLogger(logger, lc)
+    ctx.updateLoggers()
+    try {
+      val dir = tmpDir("adelta_tasks")
+      writeInput(dir)
+      val cfg = ValidationJob.Config(
+        s"$dir/input", s"$dir/manifest", s"$dir/out", appendDelta = true)
+      ValidationJob.run(spark, cfg)
+      val old = spark.read.parquet(s"$dir/input").as[Sequence].collect()
+      val dups = Seq(old.head, old.find(_.source != "mito").get).map(_.doc_id)
+      (dups.map(d => Sequence(d, Array(1), 1, "mito")) :+
+        Sequence("D999999999960", Array(2), 1, "mito"))
+        .toDS().write.mode("append").partitionBy("source")
+        .parquet(s"$dir/input")
+      val r2 = ValidationJob.run(spark, cfg)
+      assert(r2.deltaPartitions === Seq("mito"), r2.toString)
+      assert(spark.read.parquet(ValidationJob.violationsPath(cfg.outDir))
+        .filter($"rule_id" === "R_CROSS_RUN_UNIQUE")
+        .select("doc_id").as[String].collect().toSet === dups.toSet)
+    } finally {
+      conf.removeLogger(logger)
+      prior.foreach(conf.addLogger(logger, _))
+      ctx.updateLoggers()
+      appender.stop()
+    }
+    assert(big.isEmpty, big.toString)
+  }
+
+  test("a partition that outgrows its sketch shards falls back to a full " +
+      "rescan that re-shards it, with a full run's violations") {
+    import graft.operators.ShardedBloom.{ShardKeys, fits, shardsFor}
+    val dir = tmpDir("adelta_grow")
+    SequenceGen.manifest(spark, N).write.parquet(s"$dir/manifest")
+    // one partition at exactly one shard's capacity
+    def big(ids: Seq[Long]) = ids.map(i =>
+      Sequence(f"B$i%012d", Array(1, 2), 2, "big")).toDS()
+    spark.range(ShardKeys).as[Long].map(i =>
+        Sequence(f"B$i%012d", Array(1, 2), 2, "big"))
+      .write.partitionBy("source").parquet(s"$dir/input")
+    def cfg(out: String, delta: Boolean) = ValidationJob.Config(
+      s"$dir/input", s"$dir/manifest", s"$dir/out_$out", appendDelta = delta)
+    def nshards(out: String) = graft.checkpoint.Checkpoint
+      .readSketchMeta(spark, s"$dir/out_$out")("R_CROSS_RUN_UNIQUE")("big")
+      .nshards
+    ValidationJob.run(spark, cfg("d", delta = true))
+    assert(nshards("d") === Some(1))
+
+    // two more rows, one a copy of an old key: past capacity
+    big(Seq(ShardKeys, 7L)).write.mode("append").partitionBy("source")
+      .parquet(s"$dir/input")
+    assert(!fits(ShardKeys + 2, 1) && shardsFor(ShardKeys + 2) === 2)
+    val r2 = ValidationJob.run(spark, cfg("d", delta = true))
+    assert(r2.validatedPartitions === Seq("big"))
+    assert(r2.deltaPartitions.isEmpty, r2.toString)
+    assert(r2.rowsValidated === ShardKeys + 2)
+    assert(nshards("d") === Some(2))
+
+    // control: a full run of the same table in a fresh outDir
+    ValidationJob.run(spark, cfg("full", delta = false))
+    def table(out: String, path: String => String, cols: String*) =
+      spark.read.parquet(path(s"$dir/out_$out")).select(cols.map(col): _*)
+        .collect().map(_.toSeq).toSet
+    assert(table("d", ValidationJob.violationsPath, "doc_id", "rule_id",
+      "source", "severity", "observed") === table("full",
+      ValidationJob.violationsPath, "doc_id", "rule_id", "source",
+      "severity", "observed"))
+    assert(table("d", ValidationJob.verdictsPath, "source", "rule_id",
+      "status") === table("full", ValidationJob.verdictsPath, "source",
+      "rule_id", "status"))
+    assert(table("d", ValidationJob.violationsPath, "doc_id", "rule_id")
+      .contains(Seq(f"B${7}%012d", "R_UNIQUE_DOC_ID")))
+
+    // re-sharded, the partition takes the delta path again
+    big(Seq(ShardKeys + 1)).write.mode("append").partitionBy("source")
+      .parquet(s"$dir/input")
+    val r3 = ValidationJob.run(spark, cfg("d", delta = true))
+    assert(r3.deltaPartitions === Seq("big") && r3.rowsValidated === 1L)
+  }
 }

@@ -515,4 +515,36 @@ class ValidationJobSpec extends SparkSpec {
     assert(r.rowsValidated === N)
     assert(cached === before)
   }
+
+  test("xrun metrics: a planted cross-run duplicate run reports its " +
+      "candidates, confirmed duplicates and the shards it probed, in the " +
+      "report and in every checkpoint entry") {
+    val dir = tmpDir("vjob_xrun_metrics")
+    writeInput(dir)
+    val cfg = ValidationJob.Config(s"$dir/input", s"$dir/manifest",
+      s"$dir/out")
+    // no history: nothing probed, no sketch read
+    assert(ValidationJob.run(spark, cfg).xrun === ValidationJob.CrossRunStats())
+
+    val hist = spark.read.parquet(s"$dir/input").as[Sequence].collect()
+    val dupA = hist.head
+    val dupB = hist.find(_.source != dupA.source).get
+    Seq(
+      Sequence(dupA.doc_id, Array(1, 2), 2, "newsrc"),
+      Sequence(dupB.doc_id, Array(3), 1, "newsrc"),
+      Sequence("D999999999998", Array(4), 1, "newsrc"))
+      .toDS().write.mode("append").partitionBy("source").parquet(s"$dir/input")
+    val r2 = ValidationJob.run(spark, cfg)
+    // eight one-shard history partitions of 117,800 bytes each (65,536
+    // keys at fpp 0.001); each planted key fires in its own partition only
+    assert(r2.xrun === ValidationJob.CrossRunStats(candidates = 2,
+      confirmed = 2, shardRows = 8, sketchKib = 8 * 117800 / 1024))
+    assert(r2.xrun.json ===
+      """{"candidates":2,"confirmed":2,"shard_rows":8,"sketch_kib":920}""")
+    val metrics = graft.checkpoint.Checkpoint
+      .read(spark, ValidationJob.checkpointPath(cfg.outDir))
+      .filter($"partition" === "newsrc").select("metrics").as[String].collect()
+    assert(metrics.length === 1)
+    assert(metrics.head.endsWith(s""","xrun":${r2.xrun.json}}"""), metrics.head)
+  }
 }

@@ -17,6 +17,14 @@ class PropertySpec extends SparkSpec {
   private def samples[A](g: Gen[A], n: Int): Seq[A] =
     (1 to n).flatMap(i => g(Gen.Parameters.default, Seed(42L + i)))
 
+  /** The uniqueness violations of `seqs`, collected; the pass-1 hashes
+    * `uniquePasses` persists are released before this returns. */
+  private def uniqueViolations(
+      seqs: org.apache.spark.sql.DataFrame, rule: UniqueRule): Array[Violation] = {
+    val (vios, hashes) = RuleEngine.uniquePasses(seqs, rule)
+    try vios.collect() finally hashes.unpersist(blocking = true)
+  }
+
   test("property: verdict is PASS iff zero error violations for (source, rule)") {
     val params = samples(Gen.zip(Gen.choose(1L, 100000L),
       Gen.choose(0.0, 0.2)), 4)
@@ -72,8 +80,8 @@ class PropertySpec extends SparkSpec {
       "array(CAST(id % 7 AS INT)) AS tokens",
       "1 AS n_tok",
       "'cardiac' AS source")
-    val vios = RuleEngine.uniqueViolations(hot,
-      UniqueRule(Rules.RUniqueDocId, Severity.Error, "doc_id")).collect()
+    val vios = uniqueViolations(hot,
+      UniqueRule(Rules.RUniqueDocId, Severity.Error, "doc_id"))
     assert(vios.length === 1) // one member source => one attributed row
     assert(vios.head.observed.contains(s""""dup_count":$n"""))
     assert(vios.head.observed.contains(""""member_sources":["cardiac"]"""))
@@ -84,8 +92,8 @@ class PropertySpec extends SparkSpec {
     val rows = spark.range(4).selectExpr(
       "CAST(NULL AS STRING) AS doc_id",
       "array(1) AS tokens", "1 AS n_tok", "'cardiac' AS source")
-    val vios = RuleEngine.uniqueViolations(rows,
-      UniqueRule(Rules.RUniqueDocId, Severity.Error, "doc_id")).collect()
+    val vios = uniqueViolations(rows,
+      UniqueRule(Rules.RUniqueDocId, Severity.Error, "doc_id"))
     assert(vios.isEmpty)
   }
 
@@ -93,8 +101,8 @@ class PropertySpec extends SparkSpec {
     val n = 3000
     val hot = (1 to n).map(i =>
       Sequence("D000000000042", Array(i), 1, s"src${i % 7}")).toDS()
-    val vios = RuleEngine.uniqueViolations(hot.toDF(),
-      UniqueRule(Rules.RUniqueDocId, Severity.Error, "doc_id")).collect()
+    val vios = uniqueViolations(hot.toDF(),
+      UniqueRule(Rules.RUniqueDocId, Severity.Error, "doc_id"))
     assert(vios.nonEmpty)
     // exact count survives the salted two-stage aggregation
     assert(vios.head.observed.contains(s""""dup_count":$n"""))
@@ -102,5 +110,16 @@ class PropertySpec extends SparkSpec {
     val members = vios.head.observed
       .split("member_sources\":\\[")(1).split("]")(0).split(",")
     assert(members.length <= RuleEngine.DupEvidenceCap)
+  }
+
+  test("the uniqueness passes leave no cached plan behind once their " +
+      "caller releases the pass-1 hashes") {
+    def cached = org.apache.spark.sql.execution.CachedPlans.count(spark)
+    val before = cached
+    val dups = Seq(Sequence("D1", Array(1), 1, "a"),
+      Sequence("D1", Array(2), 1, "b")).toDS().toDF()
+    assert(uniqueViolations(dups,
+      UniqueRule(Rules.RUniqueDocId, Severity.Error, "doc_id")).nonEmpty)
+    assert(cached === before)
   }
 }
