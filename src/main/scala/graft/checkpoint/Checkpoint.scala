@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import scala.reflect.runtime.universe.TypeTag
-import graft.model.CheckpointEntry
+import graft.model.{CheckpointEntry, CompletedAt}
 import graft.sources.TableIO
 
 /**
@@ -16,17 +16,80 @@ import graft.sources.TableIO
  * (snapshot_id, ruleset_hash) already completed; any change to input data
  * or rule set re-validates exactly the affected partitions.
  *
+ * Every lineage decision reads the table once, through [[lineage]]: a
+ * collected view of (partition, snapshot_id, ruleset_hash, completed_at)
+ * whose lookups — the resume set, rule-delta's base ruleset, the latest
+ * snapshot under a hash or under any — share one order, completed_at as
+ * an Instant (see [[graft.model.CompletedAt]]). [[compact]] keeps its own
+ * segment read.
+ *
  * Crash safety: jobs write violations → verdicts → checkpoint LAST, and
  * every data write is an idempotent dynamic-partition overwrite, so a replay
  * after a crash reproduces identical output (SURVEY.md §7.5 risk 3).
  */
 object Checkpoint {
 
+  /** Every entry in full (verdict and metrics too), for inspection. No
+    * lineage decision reads through here: they all use [[lineage]]. */
   def read(spark: SparkSession, path: String): Dataset[CheckpointEntry] = {
     import spark.implicits._
     TableIO.readIfExists(spark, path)
       .fold(spark.emptyDataset[CheckpointEntry])(_.as[CheckpointEntry])
   }
+
+  /** One checkpoint entry's lineage: which data (`snapshotId`) of which
+    * partition completed under which rule set, and when. */
+  final case class LineageEntry(partition: String, snapshotId: String,
+      rulesetHash: String, completedAt: java.time.Instant)
+
+  /** The checkpoint's LINEAGE VIEW, the one answer to "which entry is
+    * latest?": resume, rule-delta, append-delta and the transfer and
+    * cleanup gates all look up here, so they share one definition of
+    * latest — the greatest (completed_at as an Instant, snapshot_id,
+    * ruleset_hash). Duplicate entries (a compaction that crashed before
+    * its deletes) change no answer. */
+  final case class Lineage(entries: Seq[LineageEntry]) {
+    private def latest[A](keep: LineageEntry => Boolean)(
+        pick: LineageEntry => A): Map[String, A] =
+      entries.filter(keep).groupBy(_.partition).map { case (p, es) =>
+        p -> pick(es.maxBy(e => (e.completedAt, (e.snapshotId, e.rulesetHash)))(
+          CompletedAt.ordering[(String, String)]))
+      }
+
+    /** The resume set: partitions that some entry under `hash` completed
+      * for their CURRENT snapshot id `snapOf(partition)`. */
+    def done(hash: String, snapOf: String => String): Set[String] =
+      entries.iterator.filter(e => e.rulesetHash == hash &&
+        e.snapshotId == snapOf(e.partition)).map(_.partition).toSet
+
+    /** Per partition whose current data `snapOf` some entry carries: the
+      * ruleset hash of the latest such entry ("this exact data was last
+      * validated under THAT rule set"), which rule-delta diffs against. */
+    def latestHash(snapOf: String => String): Map[String, String] =
+      latest(e => e.snapshotId == snapOf(e.partition))(_.rulesetHash)
+
+    /** Per partition: the snapshot id of its latest entry under `hash`
+      * (append-delta: what the last run under this rule set saw), or
+      * under any hash (the transfer gate: what was last validated). */
+    def latestSnapshot(hash: Option[String]): Map[String, String] =
+      latest(e => hash.forall(_ == e.rulesetHash))(_.snapshotId)
+  }
+
+  private val lineageSchema = StructType(
+    Seq("partition", "snapshot_id", "ruleset_hash", "completed_at")
+      .map(StructField(_, StringType)))
+
+  /** Read the [[Lineage]] view: the four lineage columns of every entry,
+    * with an explicit schema (no inference job), collected in one Spark
+    * job — |runs × partitions| small rows, bounded by [[compact]]. */
+  def lineage(spark: SparkSession, path: String): Lineage =
+    Lineage(
+      if (!TableIO.hasData(spark, path)) Nil
+      else spark.read.schema(lineageSchema).parquet(path)
+        .select(lineageSchema.fieldNames.toIndexedSeq.map(col): _*)
+        .collect().toSeq
+        .map(r => LineageEntry(r.getString(0), r.getString(1),
+          r.getString(2), java.time.Instant.parse(r.getString(3)))))
 
   /** Write one run's checkpoint entries as that run's OWN generation
     * (`run_seg=<runId>` hive partition, dynamic overwrite). Two properties
@@ -57,10 +120,9 @@ object Checkpoint {
     * but distinct lineages all survive), then deletes exactly the
     * segments that were read. Crash-safe without atomic directory swaps:
     * base is written FIRST, so a crash between write and deletes leaves
-    * duplicate entries — harmless to every reader (completedPartitions*
-    * are distinct/filter lookups) — and the next compaction collapses
-    * them. Concurrent appendRun is safe: a new run writes a fresh
-    * run_seg this call never read and never deletes.
+    * duplicate entries — harmless to every [[Lineage]] lookup — and the
+    * next compaction collapses them. Concurrent appendRun is safe: a new
+    * run writes a fresh run_seg this call never read and never deletes.
     * Returns the number of segments folded (0 = nothing to do; with
     * dryRun: the count that WOULD fold, nothing touched). */
   def compact(
@@ -349,20 +411,6 @@ object Checkpoint {
         .map(r => r.getString(0) -> r.getString(1))
         .toMap).getOrElse(Map.empty)
 
-  /** For each partition whose CURRENT snapshot id matches some completed
-    * checkpoint entry (under ANY ruleset hash): the ruleset hash of the
-    * latest such entry — i.e. "this exact data was last fully validated
-    * under THAT rule set". The rule-delta classifier starts here. */
-  def latestRulesetForSnapshots(
-      spark: SparkSession, path: String,
-      partitionSnapshots: Map[String, String]): Map[String, String] = {
-    read(spark, path)
-      .collect()
-      .filter(e => partitionSnapshots.get(e.partition).contains(e.snapshot_id))
-      .groupBy(_.partition)
-      .map { case (p, es) => p -> es.maxBy(_.completed_at).ruleset_hash }
-  }
-
   /** Persist each validated partition's mergeable per-source stats state
     * (see [[graft.drift.SourceStatsAggregate.serializeStates]]) — the
     * material an APPEND-DELTA run folds a new-files-only scan into, so
@@ -408,58 +456,11 @@ object Checkpoint {
           part -> ((rs.head.getString(1), rs.map(_.getString(2)).toSeq))
         }).getOrElse(Map.empty)
 
-  /** Latest checkpointed snapshot id per partition under `rulesetHash` —
-    * the "what did the last completed run see" map append-delta
-    * classification starts from. */
-  def latestSnapshotByPartition(
-      spark: SparkSession,
-      path: String,
-      rulesetHash: String): Map[String, String] = {
-    read(spark, path)
-      .filter(col("ruleset_hash") === rulesetHash)
-      .collect()
-      .groupBy(_.partition)
-      .map { case (part, es) =>
-        part -> es.maxBy(_.completed_at).snapshot_id
-      }
-  }
-
-  /** Partitions already validated for (snapshotId, rulesetHash) — the skip
-    * set for a resumed run. Latest entry wins per partition. */
-  def completedPartitions(
-      spark: SparkSession,
-      path: String,
-      snapshotId: String,
-      rulesetHash: String): Set[String] = {
-    val cp = read(spark, path)
-    cp.filter(
-        col("snapshot_id") === snapshotId &&
-          col("ruleset_hash") === rulesetHash)
-      .select("partition")
-      .distinct()
-      .collect()
-      .map(_.getString(0))
-      .toSet
-  }
-
-  /** PER-PARTITION-lineage skip set: a partition is done iff some
-    * checkpoint entry under `rulesetHash` carries that partition's OWN
-    * current snapshot id (BASELINE's "per-partition lineage" taken
-    * literally — a new or re-uploaded partition re-validates exactly
-    * itself; every untouched partition keeps its checkpoint). */
-  def completedPartitionsBySnapshot(
-      spark: SparkSession,
-      path: String,
-      rulesetHash: String,
-      partitionSnapshots: Map[String, String]): Set[String] = {
-    val cp = read(spark, path)
-    cp.filter(col("ruleset_hash") === rulesetHash)
-      .select("partition", "snapshot_id")
-      .distinct()
-      .collect()
-      .filter(r => partitionSnapshots.get(r.getString(0))
-        .contains(r.getString(1)))
-      .map(_.getString(0))
-      .toSet
-  }
+  /** The resume set for one ruleset hash and a partition → snapshot id map
+    * (a partition missing from the map matches no entry): a one-line
+    * delegate to [[Lineage.done]], kept because `perfbench`'s
+    * `FullScan.directCalls` times it. */
+  def completedPartitionsBySnapshot(spark: SparkSession, path: String,
+      rulesetHash: String, partitionSnapshots: Map[String, String]): Set[String] =
+    lineage(spark, path).done(rulesetHash, partitionSnapshots.getOrElse(_, ""))
 }

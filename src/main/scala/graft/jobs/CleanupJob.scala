@@ -1,6 +1,7 @@
 package graft.jobs
 
 import org.apache.spark.sql.SparkSession
+import graft.model.CompletedAt
 import graft.sources.TableIO
 
 /**
@@ -55,17 +56,12 @@ object CleanupJob {
       .select("run_id", "source", "completed_at")
       .distinct()
       .collect()
-      // parse, don't string-sort: Instant.toString trims trailing zeros,
-      // so "…:00Z" would sort AFTER "…:00.5Z" lexicographically
-      .map(r => (r.getString(0), r.getString(1),
-        java.time.Instant.parse(r.getString(2)).toEpochMilli))
+      .map(r => (r.getString(0), r.getString(1), r.getString(2)))
     val keep: Set[String] = rows
       .groupBy(_._2)
       .valuesIterator
-      .flatMap(_.map(r => (r._3, r._1)).distinct.toSeq
-        .sorted(Ordering[(Long, String)].reverse)
-        .take(keepRuns)
-        .map(_._2))
+      .flatMap(rs => CompletedAt.byTime(rs.toSeq.map(r => r._1 -> r._3))
+        .takeRight(keepRuns))
       .toSet
     val drop = rows.map(_._1).distinct.filterNot(keep).toSeq.sorted
     if (drop.nonEmpty && !dryRun) {

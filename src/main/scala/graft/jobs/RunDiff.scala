@@ -2,7 +2,7 @@ package graft.jobs
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.model.Status
+import graft.model.{CompletedAt, Status}
 
 /**
  * Cross-run verdict REGRESSION diff: "what changed since the last run"
@@ -33,13 +33,13 @@ object RunDiff {
 
   private val rank = typedLit(Status.rank)
 
-  /** run_ids ordered oldest -> newest by their recorded completion time
-    * (driver-side: one tiny aggregation over the run_log). */
+  /** run_ids ordered oldest -> newest by their recorded completion time,
+    * run_id breaking ties (the distinct (run_id, completed_at) pairs of
+    * the run_log, ordered on the driver by [[CompletedAt]]). */
   def runIdsByTime(spark: SparkSession, outDir: String): Seq[String] =
-    spark.read.parquet(ValidationJob.runLogPath(outDir))
-      .groupBy("run_id").agg(max("completed_at").as("t"))
-      .orderBy(col("t").asc, col("run_id").asc)
-      .select("run_id").collect().map(_.getString(0)).toSeq
+    CompletedAt.byTime(spark.read.parquet(ValidationJob.runLogPath(outDir))
+      .select("run_id", "completed_at").distinct()
+      .collect().map(r => r.getString(0) -> r.getString(1)))
 
   /** Verdict transitions from `beforeRun` to `afterRun`. */
   def diff(

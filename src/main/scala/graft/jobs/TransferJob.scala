@@ -75,25 +75,6 @@ object TransferJob {
       }
   }
 
-  /** Latest checkpointed snapshot id per partition. "Latest" compares
-    * completed_at as a TIMESTAMP — Instant.toString emits a variable
-    * number of fractional-second digits, so a lexical string max can
-    * mis-order entries written within the same second. */
-  private[jobs] def latestCheckpointSnapshots(
-      spark: SparkSession, validationOutDir: String): Map[String, String] =
-    Checkpoint
-      .read(spark, ValidationJob.checkpointPath(validationOutDir))
-      .groupBy(col("partition"))
-      .agg(max(struct(col("completed_at").cast("timestamp").as("ts"),
-        col("snapshot_id"))).as("m"))
-      .select(col("partition"), col("m.snapshot_id"))
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-
-  /** Per-source lineage block reason vs the CURRENT input snapshot — THE
-    * single implementation of the lineage half of the promotion gate,
-    * shared by [[run]] and [[promotableWithLineage]] so the transfer gate
-    * and the cleanup authorization cannot drift apart (they authorize
-    * destructive actions). */
   /** Current lineage id per source: the partition's OWN snapshot id for
     * hive layouts (so an unrelated new submission does not stale-block
     * every other source), the whole-table id otherwise. */
@@ -106,19 +87,22 @@ object TransferJob {
     s => partSnaps.flatMap(_.get(s)).getOrElse(global)
   }
 
-  private[jobs] def lineageBlocks(
-      spark: SparkSession,
-      inputPath: String,
-      validationOutDir: String): String => Option[String] = {
-    val latest = latestCheckpointSnapshots(spark, validationOutDir)
+  /** Per-source lineage block reason: each source's latest checkpoint
+    * snapshot id (under any rule set) against its CURRENT one. THE single
+    * implementation of the lineage half of the promotion gate, shared by
+    * [[run]] and [[promotableWithLineage]] so the transfer gate and the
+    * cleanup authorization cannot drift apart (they authorize destructive
+    * actions). `currentSnapOf` walks the input listing: it is forced at
+    * most once, and only when the checkpoint has entries. */
+  private[jobs] def lineageBlocks(lineage: Checkpoint.Lineage,
+      currentSnapOf: => String => String): String => Option[String] = {
+    val latest = lineage.latestSnapshot(None)
+    lazy val snapOf = currentSnapOf
     if (latest.isEmpty) _ => None // no checkpoint manifest: verdict gate only
-    else {
-      val snapOf = currentSnapOf(spark, inputPath)
-      s => latest.get(s) match {
-        case Some(sid) if sid == snapOf(s) => None
-        case Some(_) => Some("STALE_LINEAGE")
-        case None => Some("NO_LINEAGE")
-      }
+    else s => latest.get(s) match {
+      case Some(sid) if sid == snapOf(s) => None
+      case Some(_) => Some("STALE_LINEAGE")
+      case None => Some("NO_LINEAGE")
     }
   }
 
@@ -132,7 +116,8 @@ object TransferJob {
       spark: SparkSession,
       inputPath: String,
       validationOutDir: String): Seq[String] = {
-    val block = lineageBlocks(spark, inputPath, validationOutDir)
+    val block = lineageBlocks(Checkpoint.lineage(spark,
+      ValidationJob.checkpointPath(validationOutDir)), currentSnapOf(spark, inputPath))
     promotableSources(spark, validationOutDir).filter(block(_).isEmpty)
   }
 
@@ -157,7 +142,11 @@ object TransferJob {
     // promotes the input snapshot it validated. The latest checkpoint entry
     // per partition must carry the CURRENT input's snapshot id — a
     // changed-but-not-revalidated input stays blocked as STALE_LINEAGE.
-    val lineageBlock = lineageBlocks(spark, cfg.inputPath, cfg.validationOutDir)
+    // The input listing is walked at most once, for the gate and the
+    // promotions log alike.
+    lazy val snapOf = currentSnapOf(spark, cfg.inputPath)
+    val lineageBlock = lineageBlocks(Checkpoint.lineage(spark,
+      ValidationJob.checkpointPath(cfg.validationOutDir)), snapOf)
 
     val pass = verdictPass.filter(lineageBlock(_).isEmpty)
     val passSet = pass.toSet
@@ -203,7 +192,6 @@ object TransferJob {
       // staging (a count comparison cannot distinguish generations).
       // Per-SOURCE ids: a later unrelated upload must not make this
       // promotion look stale to cleanup.
-      val snapOf = currentSnapOf(spark, cfg.inputPath)
       val promotedAt = java.time.Instant.now().toString
       TableIO.writePartitioned(
         pass.map(s => (s, snapOf(s), promotedAt))

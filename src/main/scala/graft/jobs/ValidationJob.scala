@@ -334,20 +334,18 @@ object ValidationJob {
   }
 
   /** classify, before the lock: the resume set. Spark jobs: the
-    * checkpoint read (and a distinct-source scan for a table with no
-    * hive partition dirs). */
+    * checkpoint lineage read (and a distinct-source scan for a table with
+    * no hive partition dirs). */
   private def resumeScope(
       spark: SparkSession, cfg: Config, snap: Snap): Scope = {
     import spark.implicits._
     // Resume: drop partitions already validated under this exact
-    // (snapshot, rule set) lineage. The filter is on the partition column,
-    // so Catalyst prunes their files from the scan entirely.
-    val done =
-      if (snap.partSnaps.nonEmpty)
-        Checkpoint.completedPartitionsBySnapshot(spark,
-          checkpointPath(cfg.outDir), snap.rulesetHash, snap.partSnaps)
-      else Checkpoint.completedPartitions(spark,
-        checkpointPath(cfg.outDir), snap.snapshotId, snap.rulesetHash)
+    // (snapshot, rule set) lineage. Entries carry snap.snapOf(partition),
+    // the whole-table id on a flat layout, so one lookup serves both.
+    // The later filter is on the partition column, so Catalyst prunes
+    // the done partitions' files from the scan entirely.
+    val done = Checkpoint.lineage(spark, checkpointPath(cfg.outDir))
+      .done(snap.rulesetHash, snap.snapOf)
     val allParts = TableIO.partitionValues(spark, cfg.inputPath, "source")
       .getOrElse(
         snap.all.select("source").distinct().as[String].collect().toSeq.sorted)
@@ -355,12 +353,17 @@ object ValidationJob {
   }
 
   /** classify, under the lock: rule-delta and append-delta classification
-    * and the delta files' footer gate. Spark jobs: the ruleset-map reads
-    * (rule-delta), the inventory, stats-state, checkpoint and sketch
-    * reads (append-delta), and the merged footer read of the new files. */
+    * and the delta files' footer gate. Spark jobs: the checkpoint lineage
+    * read and the ruleset-map reads (rule-delta), the lineage, inventory,
+    * stats-state and sketch reads (append-delta), and the merged footer
+    * read of the new files. */
   private def classify(spark: SparkSession, cfg: Config, snap: Snap,
       scope: Scope, sketches: => Sketches): Classified = {
     import scope.todo
+    // Read again under the lock, and only by a delta mode: a run that
+    // finished after resumeScope's read may have rewritten the verdicts
+    // and side tables whose lineage this read must match.
+    lazy val lineage = Checkpoint.lineage(spark, checkpointPath(cfg.outDir))
     // RULE-DELTA classification: every to-validate partition must carry
     // its current snapshot under some completed prior run whose persisted
     // per-rule map exists — then the changed set is the union over
@@ -377,8 +380,7 @@ object ValidationJob {
     val ruleDeltaChanged: Set[String] =
       if (!cfg.ruleDelta || snap.partSnaps.isEmpty) allIds
       else {
-        val lastHash = Checkpoint.latestRulesetForSnapshots(
-          spark, checkpointPath(cfg.outDir), snap.partSnaps)
+        val lastHash = lineage.latestHash(snap.snapOf)
         val maps = lastHash.values.toSet.iterator
           .map((h: String) =>
             h -> Checkpoint.readRulesetMap(spark, cfg.outDir, h))
@@ -419,8 +421,7 @@ object ValidationJob {
         val bySketch = sketches
         val inv = Checkpoint.readInventory(spark, cfg.outDir)
         val states = Checkpoint.readStatsState(spark, cfg.outDir)
-        val lastSnap = Checkpoint.latestSnapshotByPartition(
-          spark, checkpointPath(cfg.outDir), snap.rulesetHash)
+        val lastSnap = lineage.latestSnapshot(Some(snap.rulesetHash))
         todo.flatMap { part =>
           for {
             files <- snap.filesByPart.flatMap(_.get(part))
@@ -558,12 +559,13 @@ object ValidationJob {
     val rowsValidated = nDocs.values.sum - oldStateDocs
 
     // Storage-manifest ROW-COUNT reconciliation (StorageCountRule): the
-    // per-partition scanned counts (free — fin.aggregates) against the
-    // table manifest's metadata counts (one |files|-row read). Rows lost
-    // or added between ingest-commit and validation (file truncation,
-    // debris a bypassing writer dropped in) FAIL the partition; one whose
-    // metadata can't answer (no manifest, unstatted files) rolls up
-    // NOT_COMPLETED, never PASS.
+    // per-partition counts (nDocs, whole-partition in append-delta, so
+    // with or without a stats-family rule) against the table manifest's
+    // metadata counts (one |files|-row read). Rows lost or added between
+    // ingest-commit and validation (file truncation, debris a bypassing
+    // writer dropped in) FAIL the partition; one whose metadata can't
+    // answer (no manifest, unstatted files) rolls up NOT_COMPLETED, never
+    // PASS.
     lazy val manifestRows: Map[String, Option[Long]] =
       ManifestTable.readFull(spark, cfg.inputPath) match {
         case Some(mf) if mf.columns.contains("row_count") =>
@@ -578,14 +580,13 @@ object ValidationJob {
             .toMap
         case _ => Map.empty
       }
-    val scanned = fin.aggregates.map(a => a.source -> a.nDocs).toMap
     val checks = for {
       rule <- cls.evalRules.storageCountRules
       src <- scope.todo.sorted
     } yield (rule, src, manifestRows.get(src).flatten)
     val storageVios = checks.flatMap {
       case (rule, src, Some(exp)) =>
-        val act = scanned.getOrElse(src, 0L)
+        val act = nDocs.getOrElse(src, 0L)
         Option.when(exp != act)(Violation(doc_id = null, rule_id = rule.id,
           observed = s"""{"scanned_rows":$act,"manifest_rows":$exp}""",
           source = src, severity = rule.severity))

@@ -83,6 +83,21 @@ case class RunLogRecord(
     metrics: String,
     completed_at: String)
 
+/** The one order on `completed_at` stamps (checkpoint entries, run-log
+  * records): parsed to an Instant, never compared as text —
+  * `Instant.toString` trims trailing zero digits, so "…:01Z" sorts after
+  * the later "…:01.500Z" as a string. Ties break on the caller's key. */
+object CompletedAt {
+  def ordering[K: Ordering]: Ordering[(java.time.Instant, K)] =
+    Ordering.Tuple2(Ordering.fromLessThan[java.time.Instant](_ isBefore _), Ordering[K])
+
+  /** Each key once, oldest first by its latest stamp. */
+  def byTime[K: Ordering](rows: Iterable[(K, String)]): Seq[K] =
+    rows.groupMapReduce(_._1)(r => java.time.Instant.parse(r._2))(
+        (a, b) => if (a.isAfter(b)) a else b)
+      .toSeq.map(_.swap).sorted(ordering[K]).map(_._2)
+}
+
 /** One bin of a persisted baseline histogram used by drift rules.
   * kind in {ntok_hist, token_hist}; one histogram per (source, kind). */
 case class BaselineBin(

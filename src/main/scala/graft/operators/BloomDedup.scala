@@ -30,11 +30,6 @@ import org.apache.spark.util.sketch.BloomFilter
  *    entirely; only bloom-positive candidates — true dups + an `fpp`
  *    fraction of false positives — shuffle into the exact anti-join. At
  *    a 1% batch-vs-history overlap, ~99% of the batch never shuffles.
- *  - [[newKeysApprox]] drops the confirmation join too (membership from
- *    the sketch alone — no history access at all): exact on dups, loses
- *    an `fpp` fraction of genuinely-new rows. The right trade when the
- *    history table is offline (the reference's Lambda-side gate has the
- *    same one-sided error profile in reverse).
  *
  * Determinism: the sketch hashes `xxhash64(key)` with Spark's fixed seed,
  * so a sketch is a pure function of (keys, expectedItems, fpp) and
@@ -98,10 +93,4 @@ object BloomDedup {
       .join(history.select(col(keyCol)).distinct(), Seq(keyCol), "left_anti")
     definitelyNew.unionByName(confirmed)
   }
-
-  /** Sketch-only variant: no history access at all. Never passes a true
-    * duplicate; loses an `fpp` fraction of genuinely-new rows. */
-  def newKeysApprox(batch: DataFrame, keyCol: String,
-      sketchBytes: Array[Byte]): DataFrame =
-    batch.filter(!mightContain(sketchBytes, col(keyCol)))
 }

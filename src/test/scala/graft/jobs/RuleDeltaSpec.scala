@@ -213,4 +213,29 @@ class RuleDeltaSpec extends SparkSpec {
     assert(vioSet(s"$dir/out_full") === vio2)
     assert(verdictSet(s"$dir/out_full") === verdictSet(s"$dir/out"))
   }
+
+  test("adding the storage row-count rule by rule-delta evaluates only it " +
+      "and lands the same verdicts as a full run") {
+    import graft.sources.ManifestTable
+    val dir = tmpDir("rdelta_storage")
+    Drift.histograms(
+        SequenceGen.sequences(spark, N).toDF(), SequenceGen.vocabSize, "base")
+      .write.mode("overwrite").parquet(s"$dir/baseline")
+    writeInput(dir, Knobs.clean)
+    ManifestTable.commit(spark, s"$dir/input", statsCols = Seq("n_tok"))
+    val r1 = ValidationJob.run(spark, cfg(dir, "out", Rules.standard))
+    assert(r1.validatedPartitions.nonEmpty)
+
+    val withCount = Rules.withStorageCount(Rules.standard)
+    val r2 = ValidationJob.run(spark,
+      cfg(dir, "out", withCount, ruleDelta = true))
+    assert(r2.ruleDeltaPartitions === r1.validatedPartitions.sorted)
+    assert(r2.rulesEvaluated === Seq(Rules.RStorageCount))
+
+    ValidationJob.run(spark, cfg(dir, "out_full", withCount))
+    assert(verdictSet(s"$dir/out").filter(_._2 == Rules.RStorageCount)
+      .map(_._3) === Set(Status.Pass))
+    assert(verdictSet(s"$dir/out_full") === verdictSet(s"$dir/out"))
+    assert(vioSet(s"$dir/out_full") === vioSet(s"$dir/out"))
+  }
 }

@@ -119,4 +119,23 @@ class RunDiffSpec extends SparkSpec {
     val flat = t.values.find(v => v._5 == "PASS>PASS>PASS")
     assert(flat.isDefined && flat.get._6 === "flat" && flat.get._4 === 0L)
   }
+
+  test("runs order by completion instant, not by the stamp's text: " +
+      ":01Z precedes :01.500Z") {
+    val dir = tmpDir("rundiff_order")
+    // Instant.toString trims trailing zero digits, so the earlier stamp
+    // is the lexically LARGER one ('Z' > '.')
+    def rec(run: String, at: String) = RunLogRecord(run, "snap", "hash",
+      "mito", "R_CONSISTENT_NTOK", Status.Pass, Severity.Error, "{}", at)
+    Seq(rec("run_early", "2026-01-01T00:00:01Z"),
+        rec("run_late", "2026-01-01T00:00:01.500Z")).toDS()
+      .write.partitionBy("run_id").parquet(ValidationJob.runLogPath(s"$dir/out"))
+    assert(RunDiff.runIdsByTime(spark, s"$dir/out") ===
+      Seq("run_early", "run_late"))
+    assert(RunDiff.diffLatest(spark, s"$dir/out").map(d => (d._1, d._2)) ===
+      Some(("run_early", "run_late")))
+    // audit-log retention keeps the later run
+    assert(CleanupJob.pruneRunLogs(spark, s"$dir/out", keepRuns = 1,
+      dryRun = true) === Seq("run_early"))
+  }
 }

@@ -72,6 +72,17 @@ class ValidationJobSpec extends SparkSpec {
     assert(ver.filter($"rule_id" === Rules.RStorageCount &&
       $"status" =!= Status.Pass).count() === 0)
 
+    // a rule set with no stats-family rule collects no aggregates: the
+    // check reconciles against the per-source row count instead
+    val cfgRows = cfg.copy(outDir = s"$dir/out_rows",
+      rules = Rules.withStorageCount(Rules.rowOnly))
+    val rRows = ValidationJob.run(spark, cfgRows)
+    val verRows = spark.read.parquet(ValidationJob.verdictsPath(cfgRows.outDir))
+      .filter($"rule_id" === Rules.RStorageCount)
+    assert(verRows.count() === rRows.validatedPartitions.size.toLong)
+    assert(verRows.filter($"status" =!= Status.Pass).count() === 0,
+      verRows.collect().mkString("\n"))
+
     // a bypassing writer drops an extra file into ONE partition: the scan
     // sees more rows than the manifest's metadata count. NOTE the write is
     // also invisible to the manifest-first snapshot lineage (as in
@@ -269,6 +280,33 @@ class ValidationJobSpec extends SparkSpec {
       .write.mode("append").partitionBy("source").parquet(s"$dir/input")
     val r3 = ValidationJob.run(spark, cfg)
     assert(r3.validatedPartitions === Seq("cardiac"), r3.toString)
+  }
+
+  test("flat (non-hive) input: every source carries the whole-table id, " +
+      "so a resume validates nothing and a changed file re-validates all") {
+    val dir = tmpDir("vjob_flat")
+    SequenceGen.sequences(spark, N).write.mode("overwrite")
+      .parquet(s"$dir/input")
+    SequenceGen.manifest(spark, N)
+      .write.mode("overwrite").parquet(s"$dir/manifest")
+    val cfg = ValidationJob.Config(s"$dir/input", s"$dir/manifest", s"$dir/out")
+    val r1 = ValidationJob.run(spark, cfg)
+    assert(r1.validatedPartitions.size > 1 && r1.skippedPartitions.isEmpty)
+    assert(r1.rowsValidated === N)
+
+    val r2 = ValidationJob.run(spark, cfg)
+    assert(r2.validatedPartitions.isEmpty, r2.toString)
+    assert(r2.skippedPartitions === r1.validatedPartitions)
+    assert(r2.rowsValidated === 0L)
+
+    // one more file: the table's id changes, so every source re-validates
+    Seq(Sequence("D999999999990", Array(1, 2), 2, "mito"))
+      .toDS().write.mode("append").parquet(s"$dir/input")
+    val r3 = ValidationJob.run(spark, cfg)
+    assert(r3.validatedPartitions === r1.validatedPartitions, r3.toString)
+    assert(r3.snapshotId !== r1.snapshotId)
+    assert(r3.rowsValidated === N + 1)
+    assert(ValidationJob.run(spark, cfg).validatedPartitions.isEmpty)
   }
 
   test("cross-run uniqueness: a new partition duplicating history keys " +
