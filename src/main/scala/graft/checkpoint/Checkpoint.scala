@@ -3,7 +3,6 @@ package graft.checkpoint
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import scala.reflect.runtime.universe.TypeTag
 import graft.model.{CheckpointEntry, CompletedAt}
 import graft.sources.TableIO
 
@@ -18,24 +17,22 @@ import graft.sources.TableIO
  *
  * Every lineage decision reads the table once, through [[lineage]]: a
  * collected view of (partition, snapshot_id, ruleset_hash, completed_at)
- * whose lookups — the resume set, rule-delta's base ruleset, the latest
- * snapshot under a hash or under any — share one order, completed_at as
- * an Instant (see [[graft.model.CompletedAt]]). [[compact]] keeps its own
- * segment read.
+ * whose lookups — the resume set and each partition's latest entry —
+ * share one order, completed_at as an Instant (see
+ * [[graft.model.CompletedAt]]). [[compact]] keeps its own segment read.
+ * What a delta run starts from is one [[PartitionState]] row per
+ * partition, usable only while it matches that partition's latest entry.
  *
- * Crash safety: jobs write violations → verdicts → checkpoint LAST, and
- * every data write is an idempotent dynamic-partition overwrite, so a replay
- * after a crash reproduces identical output (SURVEY.md §7.5 risk 3).
+ * Crash safety: jobs write the partition-state rows FIRST, then
+ * violations, verdicts and sketches, and the checkpoint LAST; every data
+ * write is an idempotent dynamic-partition overwrite, so a replay after a
+ * crash reproduces identical output (SURVEY.md §7.5 risk 3). A crash
+ * anywhere after the state write leaves rows whose (snapshot_id,
+ * ruleset_hash) the checkpoint's latest entries do not carry, so the next
+ * delta run rescans those partitions in full instead of trusting
+ * half-rewritten violations or verdicts.
  */
 object Checkpoint {
-
-  /** Every entry in full (verdict and metrics too), for inspection. No
-    * lineage decision reads through here: they all use [[lineage]]. */
-  def read(spark: SparkSession, path: String): Dataset[CheckpointEntry] = {
-    import spark.implicits._
-    TableIO.readIfExists(spark, path)
-      .fold(spark.emptyDataset[CheckpointEntry])(_.as[CheckpointEntry])
-  }
 
   /** One checkpoint entry's lineage: which data (`snapshotId`) of which
     * partition completed under which rule set, and when. */
@@ -49,30 +46,20 @@ object Checkpoint {
     * ruleset_hash). Duplicate entries (a compaction that crashed before
     * its deletes) change no answer. */
   final case class Lineage(entries: Seq[LineageEntry]) {
-    private def latest[A](keep: LineageEntry => Boolean)(
-        pick: LineageEntry => A): Map[String, A] =
-      entries.filter(keep).groupBy(_.partition).map { case (p, es) =>
-        p -> pick(es.maxBy(e => (e.completedAt, (e.snapshotId, e.rulesetHash)))(
-          CompletedAt.ordering[(String, String)]))
-      }
-
     /** The resume set: partitions that some entry under `hash` completed
       * for their CURRENT snapshot id `snapOf(partition)`. */
     def done(hash: String, snapOf: String => String): Set[String] =
       entries.iterator.filter(e => e.rulesetHash == hash &&
         e.snapshotId == snapOf(e.partition)).map(_.partition).toSet
 
-    /** Per partition whose current data `snapOf` some entry carries: the
-      * ruleset hash of the latest such entry ("this exact data was last
-      * validated under THAT rule set"), which rule-delta diffs against. */
-    def latestHash(snapOf: String => String): Map[String, String] =
-      latest(e => e.snapshotId == snapOf(e.partition))(_.rulesetHash)
-
-    /** Per partition: the snapshot id of its latest entry under `hash`
-      * (append-delta: what the last run under this rule set saw), or
-      * under any hash (the transfer gate: what was last validated). */
-    def latestSnapshot(hash: Option[String]): Map[String, String] =
-      latest(e => hash.forall(_ == e.rulesetHash))(_.snapshotId)
+    /** Each partition's latest entry: the lineage its last completed run
+      * left, which a delta run's [[PartitionState]] row must carry and
+      * the transfer gate compares with the current data. */
+    lazy val latest: Map[String, LineageEntry] =
+      entries.groupBy(_.partition).map { case (p, es) =>
+        p -> es.maxBy(e => (e.completedAt, (e.snapshotId, e.rulesetHash)))(
+          CompletedAt.ordering[(String, String)])
+      }
   }
 
   private val lineageSchema = StructType(
@@ -154,8 +141,8 @@ object Checkpoint {
     segs.size
   }
 
-  /** Atomic create-if-absent on a single lock file, with stale reclaim.
-    * Shared by the whole-dir run lock and the per-partition locks. */
+  /** Atomic create-if-absent on a single lock file, with stale reclaim:
+    * the body of [[acquirePartitionLocks]], one call per partition. */
   private def tryLockFile(
       fs: org.apache.hadoop.fs.FileSystem,
       p: org.apache.hadoop.fs.Path,
@@ -191,28 +178,6 @@ object Checkpoint {
           retry()
         } else false
     }
-  }
-
-  /** Whole-dir run lock — an atomically-created marker file under the
-    * output dir. A second concurrent run on the same outDir fails to
-    * create it and aborts instead of double-writing. Stale locks (crashed
-    * runs) are reclaimed after `staleMs`. Jobs whose write unit is the
-    * whole output dir (TransferJob's store+manifest regeneration) use
-    * this; ValidationJob locks at PARTITION granularity below. */
-  def acquireRunLock(
-      spark: SparkSession, outDir: String,
-      staleMs: Long = 6 * 3600 * 1000L,
-      attempts: Int = 5): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$outDir/_running")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(p.getParent)
-    tryLockFile(fs, p, staleMs, attempts)
-  }
-
-  def releaseRunLock(spark: SparkSession, outDir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$outDir/_running")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, false)
   }
 
   /** Lock-file path for one partition value (URL-encoded so any partition
@@ -268,21 +233,6 @@ object Checkpoint {
 
   def sketchesPath(outDir: String): String = s"$outDir/_sketches"
 
-  /** Shared body of the side-table writers: `rows` as columns `cols`,
-    * hive-partitioned by `partitionCol` = the exact value `valueCol`
-    * carries (partition columns are TYPE-INFERRED on read, so readers key
-    * on `valueCol`), one file per partition dir, dynamic overwrite. */
-  private def writeKeyed[T <: Product : TypeTag](
-      spark: SparkSession, rows: Seq[T], cols: Seq[String], path: String,
-      partitionCol: String, valueCol: String): Unit = {
-    import spark.implicits._
-    if (rows.nonEmpty)
-      TableIO.writePartitioned(
-        rows.toDF(cols: _*).withColumn(partitionCol, col(valueCol))
-          .coalesce(1),
-        path, partitionCol = partitionCol, recluster = false)
-  }
-
   /** Persist per-partition key sketches as key-hash shards (one row per
     * (partition, rule, shard); see [[graft.operators.ShardedBloom]]): the
     * membership side of the CROSS-RUN uniqueness gate — the Spark-native
@@ -328,34 +278,22 @@ object Checkpoint {
   final case class SketchMeta(snapshotId: String, nshards: Option[Int],
       shardRows: Long, bytes: Long)
 
-  /** rule id → partition → [[SketchMeta]]. Each task sums its own shard
-    * rows per (rule, partition) and the driver adds up those partial
-    * rows: one job with no shuffle, no sketch bytes collected, and at most
-    * (tasks × partitions) rows reaching the driver. */
+  /** rule id → partition → [[SketchMeta]]: one aggregation over the
+    * shard rows' lineage columns and byte lengths, collected once — no
+    * sketch bytes reach the driver, only one row per (rule, partition). */
   def readSketchMeta(spark: SparkSession,
       outDir: String): Map[String, Map[String, SketchMeta]] =
     if (!TableIO.hasData(spark, sketchesPath(outDir))) Map.empty
-    else {
-      type Key = (String, String, String, Option[Int])
-      def add(m: Map[Key, (Long, Long)], k: Key, n: Long, b: Long) =
-        m.updated(k, m.get(k).fold((n, b)) { case (n0, b0) => (n0 + n, b0 + b) })
+    else
       spark.read.schema(sketchSchema).parquet(sketchesPath(outDir))
-        .select(col("rule_id"), col("part_value"), col("snapshot_id"),
-          col("nshards"), octet_length(col("sketch")))
-        .rdd
-        .mapPartitions(rows => rows.foldLeft(Map.empty[Key, (Long, Long)])(
-          (m, r) => add(m, (r.getString(0), r.getString(1), r.getString(2),
-            Option.when(!r.isNullAt(3))(r.getInt(3))), 1L, r.getInt(4)))
-          .iterator)
-        .collect()
-        .foldLeft(Map.empty[Key, (Long, Long)]) { case (m, (k, (n, b))) =>
-          add(m, k, n, b) }
-        .toSeq
-        .groupBy(_._1._1)
-        .map { case (rule, rs) => rule -> rs.map {
-          case ((_, part, snap, n), (rows, bytes)) =>
-            part -> SketchMeta(snap, n, rows, bytes) }.toMap }
-    }
+        .groupBy(col("rule_id"), col("part_value"), col("snapshot_id"),
+          col("nshards"))
+        .agg(count(lit(1)), sum(octet_length(col("sketch"))))
+        .collect().toSeq
+        .groupBy(_.getString(0))
+        .map { case (rule, rs) => rule -> rs.map(r => r.getString(1) ->
+          SketchMeta(r.getString(2), Option.when(!r.isNullAt(3))(r.getInt(3)),
+            r.getLong(4), r.getLong(5))).toMap }
 
   /** Diagnostic view the job does not use: one rule's sketch per
     * partition as (snapshot id, the OR of the partition's shards). Every
@@ -379,82 +317,74 @@ object Checkpoint {
         .toMap
   }
 
-  def statsStatePath(outDir: String): String = s"$outDir/_stats_state"
-  def inventoryPath(outDir: String): String = s"$outDir/_inventory"
-  def rulesetsPath(outDir: String): String = s"$outDir/_rulesets"
+  def partitionStatePath(outDir: String): String = s"$outDir/_partition_state"
 
-  /** Persist the PER-RULE fingerprint map of one ruleset hash — the
-    * lookup table rule-delta revalidation diffs against: a later run whose
-    * ruleset hash differs finds out WHICH rules changed (vs. today's
-    * all-or-nothing hash compare) and re-evaluates only those. One row per
-    * rule; dynamic overwrite of the hash's own partition (idempotent
-    * across replays). `hash_value` carries the exact hash — the hive
-    * partition column is only the directory key (type-inferred on read). */
-  def writeRulesetMap(
-      spark: SparkSession, outDir: String, rulesetHash: String,
-      fps: Map[String, String]): Unit =
-    writeKeyed(spark,
-      fps.toSeq.map { case (id, fp) => (id, fp, rulesetHash) },
-      Seq("rule_id", "rule_fp", "hash_value"),
-      rulesetsPath(outDir), "ruleset", "hash_value")
+  /** One validated partition's run state, as its last run left it: the
+    * data (`snapshotId`, the md5 of `files`, its `path:length` inventory)
+    * and rule set (`rulesetHash`, with `ruleFps` its per-rule
+    * fingerprints) it ran under, and its mergeable per-source stats state
+    * (see [[graft.drift.SourceStatsAggregate.serializeStates]]; None when
+    * no stats-family rule ran). Everything a later run needs to validate
+    * the partition incrementally: append-delta scans the files beyond
+    * `files` and folds `state` in, rule-delta re-runs the rules whose
+    * fingerprint moved. The row is usable only while its (snapshotId,
+    * rulesetHash) is the partition's latest checkpoint entry. */
+  final case class PartitionState(partValue: String, snapshotId: String,
+      rulesetHash: String, files: Seq[String], state: Option[Array[Byte]],
+      ruleFps: Map[String, String])
 
-  /** rule_id → per-rule fingerprint for one persisted ruleset hash; empty
-    * when that hash never ran with map-writing code (pre-feature runs →
-    * rule-delta falls back to a full revalidation). */
-  def readRulesetMap(
-      spark: SparkSession, outDir: String,
-      rulesetHash: String): Map[String, String] =
-    TableIO.readIfExists(spark, rulesetsPath(outDir)).map(
-      _.filter(col("hash_value") === rulesetHash)
-        .select("rule_id", "rule_fp")
-        .collect()
-        .map(r => r.getString(0) -> r.getString(1))
-        .toMap).getOrElse(Map.empty)
+  private val partitionStateSchema = StructType(Seq(
+    StructField("part_value", StringType),
+    StructField("snapshot_id", StringType),
+    StructField("ruleset_hash", StringType),
+    StructField("files", ArrayType(StringType)),
+    StructField("state", BinaryType),
+    StructField("rule_fps", MapType(StringType, StringType))))
 
-  /** Persist each validated partition's mergeable per-source stats state
-    * (see [[graft.drift.SourceStatsAggregate.serializeStates]]) — the
-    * material an APPEND-DELTA run folds a new-files-only scan into, so
-    * stats/drift/RI re-evaluate over the WHOLE partition without
-    * rescanning old files. Dynamic overwrite per partition, lineage in
-    * snapshot_id — the same contract as the key sketches. */
-  def writeStatsState(
-      spark: SparkSession, outDir: String,
-      rows: Seq[(String, String, Array[Byte])]): Unit =
-    writeKeyed(spark, rows, Seq("part_value", "snapshot_id", "state"),
-      statsStatePath(outDir), "partition", "part_value")
+  /** Replace the state rows of exactly the partitions in `rows`: hive-
+    * partitioned by `partition` = `part_value` (the partition column is
+    * type-inferred on read, so readers key on `part_value`), one file per
+    * partition dir, dynamic overwrite. */
+  def writePartitionState(spark: SparkSession, outDir: String,
+      rows: Seq[PartitionState]): Unit = {
+    import spark.implicits._
+    if (rows.nonEmpty)
+      TableIO.writePartitioned(
+        rows.toDF(partitionStateSchema.fieldNames.toIndexedSeq: _*)
+          .withColumn("partition", col("part_value"))
+          .coalesce(1),
+        partitionStatePath(outDir), partitionCol = "partition",
+        recluster = false)
+  }
 
-  /** partition → (snapshot_id, serialized stats state). */
-  def readStatsState(
-      spark: SparkSession, outDir: String): Map[String, (String, Array[Byte])] =
-    TableIO.readIfExists(spark, statsStatePath(outDir)).map(
-      _.select("part_value", "snapshot_id", "state")
-        .collect()
-        .map(r => r.getString(0) ->
-          ((r.getString(1), r.getAs[Array[Byte]]("state"))))
-        .toMap).getOrElse(Map.empty)
+  /** partition → its [[PartitionState]] row, read with an explicit schema
+    * (no inference job) and collected: one small row per partition. */
+  def readPartitionState(
+      spark: SparkSession, outDir: String): Map[String, PartitionState] =
+    if (!TableIO.hasData(spark, partitionStatePath(outDir))) Map.empty
+    else spark.read.schema(partitionStateSchema)
+      .parquet(partitionStatePath(outDir))
+      .select(partitionStateSchema.fieldNames.toIndexedSeq.map(col): _*)
+      .collect()
+      .map(r => r.getString(0) -> PartitionState(r.getString(0),
+        r.getString(1), r.getString(2), r.getSeq[String](3),
+        Option(r.getAs[Array[Byte]](4)), r.getMap[String, String](5).toMap))
+      .toMap
 
-  /** Persist each validated partition's `path:length` file inventory —
-    * the list a later append-delta run subtracts from the current listing
-    * to find exactly the NEW files. One row per file; dynamic overwrite
-    * per partition, lineage in snapshot_id (which is itself the md5 of
-    * this sorted list, so inventory and checkpoint cannot desync
-    * silently). */
-  def writeInventory(
-      spark: SparkSession, outDir: String,
-      rows: Seq[(String, String, String)]): Unit =
-    writeKeyed(spark, rows, Seq("part_value", "snapshot_id", "file"),
-      inventoryPath(outDir), "partition", "part_value")
-
-  /** partition → (snapshot_id, file entries). */
+  /** partition → (snapshot_id, file entries): a projection of
+    * [[readPartitionState]], kept because `perfbench`'s
+    * `FullScan.directCalls` times it. */
   def readInventory(
       spark: SparkSession, outDir: String): Map[String, (String, Seq[String])] =
-    TableIO.readIfExists(spark, inventoryPath(outDir)).map(
-      _.select("part_value", "snapshot_id", "file")
-        .collect()
-        .groupBy(_.getString(0))
-        .map { case (part, rs) =>
-          part -> ((rs.head.getString(1), rs.map(_.getString(2)).toSeq))
-        }).getOrElse(Map.empty)
+    readPartitionState(spark, outDir).collect {
+      case (p, s) if s.files.nonEmpty => p -> ((s.snapshotId, s.files)) }
+
+  /** partition → (snapshot_id, serialized stats state): a projection of
+    * [[readPartitionState]], kept for the same timing. */
+  def readStatsState(
+      spark: SparkSession, outDir: String): Map[String, (String, Array[Byte])] =
+    readPartitionState(spark, outDir).flatMap { case (p, s) =>
+      s.state.map(b => p -> ((s.snapshotId, b))) }
 
   /** The resume set for one ruleset hash and a partition → snapshot id map
     * (a partition missing from the map matches no entry): a one-line

@@ -74,8 +74,8 @@ case class SourceStatsAggregate(
       row: InternalRow): mutable.HashMap[UTF8String, State] = {
     val src0 = sourceChild.eval(row).asInstanceOf[UTF8String]
     // a NULL source must not vanish from the stats: it books under the
-    // sentinel label, so rowCount stays exact and referential integrity
-    // flags it as an undeclared source instead of a silent PASS
+    // sentinel label, so the per-source counts stay exact and referential
+    // integrity flags it as an undeclared source instead of a silent PASS
     val src =
       if (src0 == null) SourceStatsAggregate.NullSourceKey else src0
     // row-backed UTF8String points into a reused buffer: probe with the

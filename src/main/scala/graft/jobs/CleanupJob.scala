@@ -15,7 +15,7 @@ import graft.sources.TableIO
  * Spark-native shape: "staging" = the input table's source partitions;
  * cleanup drops exactly the partitions the TransferJob report says were
  * promoted (they now live in the store, verified by a count check), plus
- * processing leftovers (_temporary dirs, stale _running locks) under the
+ * processing leftovers (_temporary dirs, stale partition locks) under the
  * validation out dir. Everything is driver-side metadata work.
  */
 object CleanupJob {
@@ -25,7 +25,7 @@ object CleanupJob {
       kept: Seq[String],
       leftoversRemoved: Seq[String])
 
-  /** A `_running` lock younger than this is a LIVE run, never swept. */
+  /** A partition lock younger than this is a LIVE run, never swept. */
   val lockStaleMs: Long = 6 * 3600 * 1000L
 
   /** Audit-log RETENTION (VERDICT r03 #7): `violations_log` and `run_log`
@@ -144,12 +144,12 @@ object CleanupJob {
       TableIO.deletePartitions(spark, inputPath, "source", cleanable)
 
     // processing leftovers: Spark _temporary dirs from crashed writes,
-    // orphaned _running.reclaim.* tombstones (acquireRunLock crash between
-    // rename and delete), and STALE _running locks (the processed-sentinel
-    // analog). The live lock of a running validation is NOT touched —
-    // deleting it would re-admit a concurrent double-writer, the exact
-    // thing the lock prevents; only locks older than `lockStaleMs` (same
-    // default as Checkpoint.acquireRunLock's reclaim) are swept.
+    // orphaned *.reclaim.* tombstones (a lock reclaim that crashed between
+    // rename and delete), and STALE partition locks (the processed-
+    // sentinel analog). The live lock of a running validation is NOT
+    // touched — deleting it would re-admit a concurrent double-writer, the
+    // exact thing the lock prevents; only locks older than `lockStaleMs`
+    // (same default as Checkpoint.acquirePartitionLocks' reclaim) go.
     val leftovers = scala.collection.mutable.ArrayBuffer.empty[String]
     validationOutDir.foreach { outDir =>
       val root = new org.apache.hadoop.fs.Path(outDir)
@@ -168,8 +168,7 @@ object CleanupJob {
                 if (!dryRun) fs.delete(st.getPath, true)
               } else if (st.getPath.getName != "_temporary") sweep(st.getPath)
             } else if (st.getPath.getName.contains(".reclaim.")) {
-              // orphaned reclaim tombstones from ANY lock (whole-dir
-              // `_running` or per-partition `_locks/*.lock`)
+              // orphaned reclaim tombstones of `_locks/*.lock`
               leftovers += st.getPath.toString
               if (!dryRun) fs.delete(st.getPath, false)
             } else if (st.getPath.getName.endsWith(".lock") &&
@@ -181,13 +180,6 @@ object CleanupJob {
             }
           }
         sweep(root)
-        val lock = new org.apache.hadoop.fs.Path(s"$outDir/_running")
-        if (fs.exists(lock) &&
-            System.currentTimeMillis() -
-              fs.getFileStatus(lock).getModificationTime > lockStaleMs) {
-          leftovers += lock.toString
-          if (!dryRun) fs.delete(lock, false)
-        }
       }
     }
 
@@ -224,60 +216,9 @@ object CleanupJob {
       targetBytes: Long,
       dryRun: Boolean = false): Seq[(String, Int, Int)] = {
     require(maxFiles >= 1, "maxFiles must be >= 1")
-    require(targetBytes >= 1L, "targetBytes must be >= 1")
-    val root = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return Nil
-    val prefix = partitionCol + "="
-    def dataFiles(d: org.apache.hadoop.fs.Path) =
-      fs.listStatus(d).toSeq.filter(_.isFile).filterNot { st =>
-        val n = st.getPath.getName
-        n.startsWith("_") || n.startsWith(".")
-      }
-    val plans = fs.listStatus(root).toSeq
-      .filter(_.isDirectory)
-      .map(_.getPath)
-      .filter(_.getName.startsWith(prefix))
-      .sortBy(_.getName)
-      .flatMap { dir =>
-        val files = dataFiles(dir)
-        if (files.size <= maxFiles) None
-        else {
-          val bytes = files.map(_.getLen).sum
-          val nOut = math.max(1L, (bytes + targetBytes - 1) / targetBytes)
-          if (nOut >= files.size) None
-          else Some((dir, files.size, nOut.toInt))
-        }
-      }
-    if (!dryRun) plans.foreach { case (dir, _, nOut) =>
-      val tmp = new org.apache.hadoop.fs.Path(
-        s"$tablePath/_compact_tmp/${dir.getName}")
-      val old = new org.apache.hadoop.fs.Path(
-        s"$tablePath/_compact_old/${dir.getName}")
-      fs.delete(tmp, true)
-      // reading the partition DIR directly sidesteps Spark's (correct)
-      // refusal to overwrite a path being read, and writes files without
-      // the partition column — exactly the hive-layout file shape
-      spark.read.parquet(dir.toString)
-        .repartition(nOut)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(tmp.toString)
-      fs.delete(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS"), false)
-      fs.mkdirs(old.getParent)
-      fs.delete(old, true)
-      if (!fs.rename(dir, old))
-        throw new java.io.IOException(s"compaction: cannot move $dir aside")
-      if (!fs.rename(tmp, dir)) {
-        fs.rename(old, dir) // restore — the old layout is still complete
-        throw new java.io.IOException(s"compaction: cannot move $tmp in")
-      }
-      fs.delete(old, true)
-    }
-    if (!dryRun) {
-      fs.delete(new org.apache.hadoop.fs.Path(s"$tablePath/_compact_tmp"), true)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$tablePath/_compact_old"), true)
-    }
-    plans.map { case (dir, before, after) => (dir.getName, before, after) }
+    rewritePartitions(spark, tablePath, partitionCol, targetBytes, dryRun,
+      "compact", "compaction")((files, nOut) => files > maxFiles && nOut < files)(
+      (rows, nOut) => rows.repartition(nOut))
   }
 
   /** CLUSTERED rewrite — [[compactPartitions]]'s sibling for SCAN
@@ -316,65 +257,86 @@ object CleanupJob {
       targetBytes: Long,
       statsCols: Seq[String] = Nil,
       dryRun: Boolean = false): Seq[(String, Int, Int)] = {
+    val plans = rewritePartitions(spark, tablePath, partitionCol, targetBytes,
+      dryRun, "cluster", "clustering")((files, _) => files > 0)(
+      (rows, nOut) => rows
+        .repartitionByRange(nOut, org.apache.spark.sql.functions.col(clusterCol))
+        .sortWithinPartitions(clusterCol))
+    if (!dryRun && plans.nonEmpty &&
+        graft.sources.ManifestTable.exists(spark, tablePath)) {
+      val touched = plans.map { case (dir, _, _) =>
+        graft.sources.TableIO.unescapePathName(
+          dir.stripPrefix(partitionCol + "="))
+      }
+      graft.sources.ManifestTable.commit(
+        spark, tablePath, partitionCol, touched = Some(touched),
+        statsCols = if (statsCols.isEmpty) Seq(clusterCol) else statsCols)
+    }
+    plans
+  }
+
+  /** The partition-rewrite skeleton of [[compactPartitions]] and
+    * [[clusterPartitions]]: each `partitionCol=` dir whose data files
+    * `rewrite(files, nOut)` accepts — nOut = ceil(bytes / targetBytes),
+    * at least 1 — is read whole, shaped into nOut files by `layout`,
+    * written to `_<staging>_tmp`, and swapped in by rename (old aside,
+    * new in, old deleted; the old layout is restored if the second rename
+    * fails). Returns (partitionDirName, filesBefore, filesAfter). */
+  private def rewritePartitions(
+      spark: SparkSession,
+      tablePath: String,
+      partitionCol: String,
+      targetBytes: Long,
+      dryRun: Boolean,
+      staging: String,
+      label: String)(
+      rewrite: (Int, Int) => Boolean)(
+      layout: (org.apache.spark.sql.DataFrame, Int) =>
+        org.apache.spark.sql.DataFrame): Seq[(String, Int, Int)] = {
     require(targetBytes >= 1L, "targetBytes must be >= 1")
     val root = new org.apache.hadoop.fs.Path(tablePath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) return Nil
-    val prefix = partitionCol + "="
-    def dataFiles(d: org.apache.hadoop.fs.Path) =
-      fs.listStatus(d).toSeq.filter(_.isFile).filterNot { st =>
-        val n = st.getPath.getName
-        n.startsWith("_") || n.startsWith(".")
-      }
     val plans = fs.listStatus(root).toSeq
       .filter(_.isDirectory)
       .map(_.getPath)
-      .filter(_.getName.startsWith(prefix))
+      .filter(_.getName.startsWith(partitionCol + "="))
       .sortBy(_.getName)
       .flatMap { dir =>
-        val files = dataFiles(dir)
-        if (files.isEmpty) None
-        else {
-          val bytes = files.map(_.getLen).sum
-          val nOut = math.max(1L, (bytes + targetBytes - 1) / targetBytes)
-          Some((dir, files.size, nOut.toInt))
+        val files = fs.listStatus(dir).toSeq.filter(_.isFile).filterNot { st =>
+          val n = st.getPath.getName
+          n.startsWith("_") || n.startsWith(".")
         }
+        val bytes = files.map(_.getLen).sum
+        val nOut = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
+        Option.when(rewrite(files.size, nOut))((dir, files.size, nOut))
       }
     if (!dryRun) {
       plans.foreach { case (dir, _, nOut) =>
         val tmp = new org.apache.hadoop.fs.Path(
-          s"$tablePath/_cluster_tmp/${dir.getName}")
+          s"$tablePath/_${staging}_tmp/${dir.getName}")
         val old = new org.apache.hadoop.fs.Path(
-          s"$tablePath/_cluster_old/${dir.getName}")
+          s"$tablePath/_${staging}_old/${dir.getName}")
         fs.delete(tmp, true)
-        spark.read.parquet(dir.toString)
-          .repartitionByRange(nOut, org.apache.spark.sql.functions.col(clusterCol))
-          .sortWithinPartitions(clusterCol)
+        // reading the partition DIR directly sidesteps Spark's (correct)
+        // refusal to overwrite a path being read, and writes files without
+        // the partition column — exactly the hive-layout file shape
+        layout(spark.read.parquet(dir.toString), nOut)
           .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
           .parquet(tmp.toString)
         fs.delete(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS"), false)
         fs.mkdirs(old.getParent)
         fs.delete(old, true)
         if (!fs.rename(dir, old))
-          throw new java.io.IOException(s"clustering: cannot move $dir aside")
+          throw new java.io.IOException(s"$label: cannot move $dir aside")
         if (!fs.rename(tmp, dir)) {
           fs.rename(old, dir) // restore — the old layout is still complete
-          throw new java.io.IOException(s"clustering: cannot move $tmp in")
+          throw new java.io.IOException(s"$label: cannot move $tmp in")
         }
         fs.delete(old, true)
       }
-      fs.delete(new org.apache.hadoop.fs.Path(s"$tablePath/_cluster_tmp"), true)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$tablePath/_cluster_old"), true)
-      if (plans.nonEmpty &&
-          graft.sources.ManifestTable.exists(spark, tablePath)) {
-        val touched = plans.map { case (dir, _, _) =>
-          graft.sources.TableIO.unescapePathName(
-            dir.getName.stripPrefix(prefix))
-        }
-        graft.sources.ManifestTable.commit(
-          spark, tablePath, partitionCol, touched = Some(touched),
-          statsCols = if (statsCols.isEmpty) Seq(clusterCol) else statsCols)
-      }
+      fs.delete(new org.apache.hadoop.fs.Path(s"$tablePath/_${staging}_tmp"), true)
+      fs.delete(new org.apache.hadoop.fs.Path(s"$tablePath/_${staging}_old"), true)
     }
     plans.map { case (dir, before, after) => (dir.getName, before, after) }
   }

@@ -96,10 +96,10 @@ object TransferJob {
     * most once, and only when the checkpoint has entries. */
   private[jobs] def lineageBlocks(lineage: Checkpoint.Lineage,
       currentSnapOf: => String => String): String => Option[String] = {
-    val latest = lineage.latestSnapshot(None)
+    val latest = lineage.latest
     lazy val snapOf = currentSnapOf
     if (latest.isEmpty) _ => None // no checkpoint manifest: verdict gate only
-    else s => latest.get(s) match {
+    else s => latest.get(s).map(_.snapshotId) match {
       case Some(sid) if sid == snapOf(s) => None
       case Some(_) => Some("STALE_LINEAGE")
       case None => Some("NO_LINEAGE")

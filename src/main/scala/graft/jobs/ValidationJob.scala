@@ -55,11 +55,12 @@ object ValidationJob {
         * join keeps the reported violations exact. */
       sketchFpp: Double = 0.001,
       /** APPEND-DELTA mode: a changed partition whose current file set is
-        * a strict superset of its last-validated inventory (same paths,
-        * same lengths) re-validates by scanning ONLY the new files — the
-        * Iceberg-snapshot-diff shape of incremental ingestion, where
-        * partitions grow by appended files run over run. Stats / drift /
-        * RI / completeness evaluate over the WHOLE partition by folding
+        * a strict superset of the inventory in its partition-state row
+        * (same paths, same lengths) re-validates by scanning ONLY the new
+        * files — the Iceberg-snapshot-diff shape of incremental
+        * ingestion, where partitions grow by appended files run over run.
+        * Stats / drift / RI / completeness evaluate over the WHOLE
+        * partition by folding
         * the persisted mergeable stats state into the delta scan's
         * aggregates (field-exactly what a full rescan computes);
         * within-delta duplicates surface through the normal uniqueness
@@ -67,24 +68,28 @@ object ValidationJob {
         * (booked as R_CROSS_RUN_UNIQUE with prior-copy evidence — a full
         * rescan books the same docs under R_UNIQUE_DOC_ID; the partition
         * verdict is identical), and old-files row/uniqueness violations
-        * are preserved from the current violations table. Partitions
-        * ineligible for delta (rewritten/removed files, missing persisted
-        * state or sketch, first sight) fall back to a full rescan
-        * automatically. Incompatible with refSnapshotPath (the equality
-        * join needs both sides complete). */
+        * are preserved from the current violations table. The row must
+        * carry the lineage of the partition's latest checkpoint entry and
+        * this run's ruleset hash, so the preserved rows come from this
+        * rule set's last completed run. Partitions ineligible for delta
+        * (rewritten/removed files, a row from another rule set or from a
+        * run that did not complete, missing state or sketch, first
+        * sight) fall back to a full rescan automatically. Incompatible
+        * with refSnapshotPath (the equality join needs both sides
+        * complete). */
       appendDelta: Boolean = false,
       /** RULE-DELTA mode: a partition whose data is UNCHANGED (same
         * per-partition snapshot id as its latest completed checkpoint
         * entry) but whose rule set changed re-validates only the CHANGED
-        * rules — the per-rule fingerprint maps persisted under _rulesets/
-        * say which — carrying forward verdicts of unchanged rules and
+        * rules — the per-rule fingerprints in its partition-state row say
+        * which — carrying forward verdicts of unchanged rules and
         * preserving their violations. With declarative rule configs this
         * makes "add one rule to a 10^12-row table" cost one scan
         * evaluating one rule, not |rules| of them; a baseline refresh
         * re-runs only the drift family (each drift rule's fingerprint
         * folds the baseline snapshot id). All-or-nothing per run: if ANY
-        * to-validate partition is ineligible (data changed, or its old
-        * ruleset has no persisted map), the whole run falls back to full
+        * to-validate partition is ineligible (data changed, or no state
+        * row matching its latest entry), the whole run falls back to full
         * evaluation — partitions needing different rule subsets in one run
         * would need one scan per subset, which is the full rescan it was
         * avoiding. Incompatible with appendDelta (changed data vs
@@ -170,7 +175,10 @@ object ValidationJob {
       ruleDeltaActive: Boolean,
       /** rules whose verdicts/violations carry forward untouched */
       carriedIds: Set[String],
-      deltaInfo: Map[String, DeltaPart]) {
+      deltaInfo: Map[String, DeltaPart],
+      /** rule-delta: the stats state a partition's new state row keeps
+        * when this run evaluates no stats-family rule (same data) */
+      carriedState: Map[String, Array[Byte]]) {
     def deltaParts: Set[String] = deltaInfo.keySet
   }
 
@@ -179,9 +187,7 @@ object ValidationJob {
   private final case class Scanned(vio: Dataset[Violation], count: Long)
   private final case class Finished(fin: RuleEngine.StagedResult,
       rowsValidated: Long, storageVios: Seq[Violation],
-      storageNotCompleted: Set[(String, String)],
-      /** rows per scanned source (whole-partition in append-delta) */
-      nDocs: Map[String, Long])
+      storageNotCompleted: Set[(String, String)])
   private final case class CrossRun(vio: Option[DataFrame],
       notCompleted: Set[(String, String)], stats: CrossRunStats)
   private final case class Written(verdicts: Seq[Verdict], violations: Long,
@@ -311,10 +317,11 @@ object ValidationJob {
       .map(TableIO.snapshotId(spark, _)).getOrElse("none")
     val rulesetHash = TableIO.md5Hex(cfg.rules.rulesetHash +
       s"|baseline=$baselineFp|refSnapshot=$refSnapshotFp")
-    // PER-RULE lineage fingerprints (the _rulesets map): descriptor plus
-    // the rule's OWN input snapshot, so rule-delta re-runs exactly what a
-    // change touches — a baseline refresh changes only the drift rules'
-    // fingerprints, a refSnapshot swap only the equality rule's.
+    // PER-RULE lineage fingerprints (kept in the partition-state rows):
+    // descriptor plus the rule's OWN input snapshot, so rule-delta re-runs
+    // exactly what a change touches — a baseline refresh changes only the
+    // drift rules' fingerprints, a refSnapshot swap only the equality
+    // rule's.
     val ruleFps: Map[String, String] = cfg.rules.rules.map { r =>
       val inputFp = r match {
         case _: graft.rules.DriftRule => s"|baseline=$baselineFp"
@@ -354,47 +361,48 @@ object ValidationJob {
 
   /** classify, under the lock: rule-delta and append-delta classification
     * and the delta files' footer gate. Spark jobs: the checkpoint lineage
-    * read and the ruleset-map reads (rule-delta), the lineage, inventory,
-    * stats-state and sketch reads (append-delta), and the merged footer
-    * read of the new files. */
+    * and partition-state reads (either delta mode), the sketch metadata
+    * read (append-delta), and the merged footer read of the new files. */
   private def classify(spark: SparkSession, cfg: Config, snap: Snap,
       scope: Scope, sketches: => Sketches): Classified = {
     import scope.todo
+    require(!(cfg.ruleDelta && cfg.appendDelta),
+      "ruleDelta and appendDelta are mutually exclusive: a partition " +
+        "re-validates for changed DATA or changed RULES, never both ways")
     // Read again under the lock, and only by a delta mode: a run that
     // finished after resumeScope's read may have rewritten the verdicts
-    // and side tables whose lineage this read must match.
+    // and state rows whose lineage this read must match.
     lazy val lineage = Checkpoint.lineage(spark, checkpointPath(cfg.outDir))
-    // RULE-DELTA classification: every to-validate partition must carry
-    // its current snapshot under some completed prior run whose persisted
-    // per-rule map exists — then the changed set is the union over
-    // partitions (re-running an unchanged rule for one partition is
+    lazy val rows = Checkpoint.readPartitionState(spark, cfg.outDir)
+    // THE one eligibility rule of both delta modes: a partition's state
+    // row is usable only if it carries the (snapshot, ruleset) of the
+    // partition's latest completed checkpoint entry — the run whose
+    // violations and verdicts the tables now hold. A row written by a run
+    // that failed before its checkpoint (rows are written first), or an
+    // entry of a later run under another rule set, breaks the match.
+    def matched(p: String): Option[Checkpoint.PartitionState] = for {
+      row <- rows.get(p)
+      last <- lineage.latest.get(p)
+      if row.snapshotId == last.snapshotId && row.rulesetHash == last.rulesetHash
+    } yield row
+
+    // RULE-DELTA classification: every to-validate partition must have a
+    // matched row for its CURRENT data — then the changed set is the union
+    // over partitions (re-running an unchanged rule for one partition is
     // harmless; one engine pass beats one per distinct subset). A strict
     // subset is required twice over: changed == all rules means delta buys
     // nothing, and changed == ∅ (a config-input edit touching no rule that
     // exists, e.g. baseline swap with no drift rules) still needs the new
     // lineage hash stamped, which the full path does trivially.
-    require(!(cfg.ruleDelta && cfg.appendDelta),
-      "ruleDelta and appendDelta are mutually exclusive: a partition " +
-        "re-validates for changed DATA or changed RULES, never both ways")
     val allIds = cfg.rules.ruleIds.toSet
+    val ruleBase: Map[String, Checkpoint.PartitionState] =
+      if (!cfg.ruleDelta || snap.partSnaps.isEmpty) Map.empty
+      else todo.flatMap(p => matched(p).filter(r =>
+        r.snapshotId == snap.snapOf(p) && r.ruleFps.nonEmpty).map(p -> _)).toMap
     val ruleDeltaChanged: Set[String] =
-      if (!cfg.ruleDelta || snap.partSnaps.isEmpty) allIds
-      else {
-        val lastHash = lineage.latestHash(snap.snapOf)
-        val maps = lastHash.values.toSet.iterator
-          .map((h: String) =>
-            h -> Checkpoint.readRulesetMap(spark, cfg.outDir, h))
-          .toMap
-        val perPart: Seq[Option[Set[String]]] = todo.map { p =>
-          for {
-            h <- lastHash.get(p)
-            old = maps(h)
-            if old.nonEmpty
-          } yield allIds.filter(id => !old.get(id).contains(snap.ruleFps(id)))
-        }
-        if (perPart.exists(_.isEmpty)) allIds // some partition ineligible
-        else perPart.flatten.flatten.toSet
-      }
+      if (ruleBase.size < todo.size) allIds // some partition ineligible
+      else ruleBase.values.flatMap(r =>
+        allIds.filter(id => !r.ruleFps.get(id).contains(snap.ruleFps(id)))).toSet
     val ruleDeltaActive = cfg.ruleDelta &&
       ruleDeltaChanged.nonEmpty && ruleDeltaChanged != allIds
     val evalRules =
@@ -403,15 +411,15 @@ object ValidationJob {
       else cfg.rules
 
     // APPEND-DELTA classification: a todo partition is delta-eligible iff
-    // its last completed run (same ruleset) left behind a matching
-    // inventory, stats state, and sharded cross-run sketch, the current
-    // file set strictly extends the old one (same paths, same lengths),
-    // and old + new rows still fit the sketch's shards. Every condition
-    // is checked against the OLD snapshot id, which is itself the md5 of
-    // the old inventory — the artifacts cannot desync silently. A
-    // partition that outgrew its shards (or still has an unsharded
-    // sketch) takes the full rescan, which re-shards it; capacity at
-    // least doubles each time, so those rescans amortize.
+    // its matched row was written under THIS rule set and holds a stats
+    // state, its sharded cross-run sketch carries the row's snapshot id,
+    // the current file set strictly extends the row's (same paths, same
+    // lengths), and old + new rows still fit the sketch's shards. The
+    // row's snapshot id is itself the md5 of its inventory, so the
+    // artifacts cannot desync silently. A partition that outgrew its
+    // shards (or still has an unsharded sketch) takes the full rescan,
+    // which re-shards it; capacity at least doubles each time, so those
+    // rescans amortize.
     val deltaInfo: Map[String, DeltaPart] =
       if (!cfg.appendDelta || cfg.rules.crossRunRules.isEmpty) Map.empty
       else {
@@ -419,31 +427,27 @@ object ValidationJob {
           "appendDelta cannot run with a reference snapshot: the " +
             "cross-snapshot equality join needs both sides complete")
         val bySketch = sketches
-        val inv = Checkpoint.readInventory(spark, cfg.outDir)
-        val states = Checkpoint.readStatsState(spark, cfg.outDir)
-        val lastSnap = lineage.latestSnapshot(Some(snap.rulesetHash))
         todo.flatMap { part =>
           for {
             files <- snap.filesByPart.flatMap(_.get(part))
-            oldSnap <- lastSnap.get(part)
-            (invSnap, oldFiles) <- inv.get(part)
-            if invSnap == oldSnap
-            (stSnap, oldState) <- states.get(part)
-            if stSnap == oldSnap
+            row <- matched(part)
+            if row.rulesetHash == snap.rulesetHash
+            oldState <- row.state
             metas = cfg.rules.crossRunRules.flatMap(r =>
-              bySketch(r.id).get(part).filter(_.snapshotId == oldSnap))
+              bySketch(r.id).get(part).filter(_.snapshotId == row.snapshotId))
             if metas.size == cfg.rules.crossRunRules.size
             nshards <- metas.map(_.nshards).distinct match {
               case Seq(Some(n)) => Some(n)
               case _ => None
             }
-            oldSet = oldFiles.toSet
-            if oldSet.subsetOf(files.toSet) && files.size > oldFiles.size
+            oldSet = row.files.toSet
+            if oldSet.nonEmpty && oldSet.subsetOf(files.toSet) &&
+              files.size > row.files.size
             newFiles = files.filterNot(oldSet).sorted
             if ShardedBloom.fits(stateDocs(oldState) + TableIO.parquetRowCount(
               spark, newFiles.map(TableIO.inventoryEntryPath)), nshards)
           } yield part -> DeltaPart(
-            oldSnap, oldFiles, newFiles, oldState, nshards)
+            row.snapshotId, row.files, newFiles, oldState, nshards)
         }.toMap
       }
     // Delta files come from whatever writer appended them — re-gate their
@@ -462,7 +466,10 @@ object ValidationJob {
     }
     Classified(evalRules, ruleDeltaActive,
       if (ruleDeltaActive) allIds -- evalRules.ruleIds else Set.empty,
-      deltaInfo)
+      deltaInfo,
+      if (ruleDeltaActive)
+        ruleBase.flatMap { case (p, r) => r.state.map(p -> _) }
+      else Map.empty)
   }
 
   /** Rows a persisted stats state covers. */
@@ -538,28 +545,20 @@ object ValidationJob {
   }
 
   /** finish: the staged plan's driver tail and the storage-manifest
-    * row-count check. Spark jobs: `finish()` (narrow aggregation pass),
-    * a row count only when the scan observed none, and the table
+    * row-count check. Spark jobs: `finish()` (narrow aggregation pass, or
+    * one per-source count when no stats-family rule runs), and the table
     * manifest's row-count read. */
   private def finish(spark: SparkSession, cfg: Config, scope: Scope,
       cls: Classified, planned: Planned): Finished = {
     val fin = planned.staged.finish() // observed stats + driver rules
-    // exact per-source counts come free from the observed aggregates; in
-    // an append-delta run those are MERGED (whole-partition) counts, so
-    // the rows actually scanned = merged total − persisted old totals
-    // (both known driver-side, no extra job)
+    // in an append-delta run the per-source counts are MERGED (whole-
+    // partition) counts, so the rows actually scanned = merged total −
+    // persisted old totals (both known driver-side, no extra job)
     val oldStateDocs = cls.deltaInfo.values.map(d => stateDocs(d.oldState)).sum
-    // with no aggregates to ride (a rule set without stats-family rules)
-    // one per-source count stands in, which also sizes the sketches
-    val nDocs: Map[String, Long] =
-      if (fin.rowCount.isDefined)
-        fin.aggregates.map(a => a.source -> a.nDocs).toMap
-      else planned.seqs.groupBy(col("source")).count()
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val rowsValidated = nDocs.values.sum - oldStateDocs
+    val rowsValidated = fin.counts.values.sum - oldStateDocs
 
     // Storage-manifest ROW-COUNT reconciliation (StorageCountRule): the
-    // per-partition counts (nDocs, whole-partition in append-delta, so
+    // per-partition counts (whole-partition in append-delta, so
     // with or without a stats-family rule) against the table manifest's
     // metadata counts (one |files|-row read). Rows lost or added between
     // ingest-commit and validation (file truncation, debris a bypassing
@@ -586,7 +585,7 @@ object ValidationJob {
     } yield (rule, src, manifestRows.get(src).flatten)
     val storageVios = checks.flatMap {
       case (rule, src, Some(exp)) =>
-        val act = nDocs.getOrElse(src, 0L)
+        val act = fin.counts.getOrElse(src, 0L)
         Option.when(exp != act)(Violation(doc_id = null, rule_id = rule.id,
           observed = s"""{"scanned_rows":$act,"manifest_rows":$exp}""",
           source = src, severity = rule.severity))
@@ -594,7 +593,7 @@ object ValidationJob {
     }
     val notCompleted =
       checks.collect { case (rule, src, None) => (src, rule.id) }.toSet
-    Finished(fin, rowsValidated, storageVios, notCompleted, nDocs)
+    Finished(fin, rowsValidated, storageVios, notCompleted)
   }
 
   /** cross_run: routes the new scope's keys through the persisted sketch
@@ -778,9 +777,9 @@ object ValidationJob {
     }.reduceOption(_ unionByName _)
   }
 
-  /** write: every output table but the checkpoint, in four concurrent
-    * chains — violations + violations log, verdicts + run log, cross-run
-    * sketches, stats state + inventory + ruleset map. Spark jobs: the
+  /** write: every output table but the checkpoint — the partition-state
+    * rows first, then three concurrent chains: violations + violations
+    * log, verdicts + run log, cross-run sketches. Spark jobs: the
     * preserved-violations read and count, the carried-verdicts collect,
     * the verdict roll-up, the sketch-refresh scan and every write. */
   private def write(spark: SparkSession, cfg: Config, snap: Snap,
@@ -825,6 +824,20 @@ object ValidationJob {
       "-" + TableIO.md5Hex(ps.toSeq.sorted.mkString(",")).take(8))
     val runId = s"${snapshotId.take(12)}-${rulesetHash.take(12)}$scopeSuffix"
     val carried = carriedVerdicts(spark, cfg, cls, runSources)
+
+    // Each validated partition's state row — its files, merged stats
+    // state and rule fingerprints under this run's lineage: what the NEXT
+    // delta run starts from. Written BEFORE any chain rewrites the
+    // partition's violations or verdicts, so a crash from here on leaves
+    // a row that no checkpoint entry matches, and the next delta run
+    // rescans the partition in full. A rule-delta run that evaluates no
+    // stats-family rule keeps the old state (the data is unchanged).
+    val stateOf = cls.carriedState ++ fin.aggregates
+      .filter(_.stateBytes.nonEmpty).map(a => a.source -> a.stateBytes)
+    Checkpoint.writePartitionState(spark, cfg.outDir, scope.todo.map(p =>
+      Checkpoint.PartitionState(p, snap.snapOf(p), rulesetHash,
+        snap.filesByPart.flatMap(_.get(p)).getOrElse(Nil), stateOf.get(p),
+        snap.ruleFps)))
 
     // The chains read only the materialized violations and driver facts,
     // so they run CONCURRENTLY (the serial write tail taxes the 4N scaling
@@ -886,29 +899,14 @@ object ValidationJob {
     // row travels with its partition's snapshot id so staleness is
     // detectable.
     val sketchChain = Future(
-      refreshedSketches(spark, cfg, snap, cls, planned.seqs, finished.nDocs)
+      refreshedSketches(spark, cfg, snap, cls, planned.seqs, fin.counts)
         .foreach(Checkpoint.writeSketches(_, cfg.outDir)))
-    // The merged stats state + current file inventory of every validated
-    // partition: the material the NEXT append-delta run starts from.
-    val stateChain = Future {
-      Checkpoint.writeStatsState(spark, cfg.outDir, fin.aggregates
-        .filter(a => todoSet(a.source) && a.stateBytes.nonEmpty)
-        .map(a => (a.source, snap.snapOf(a.source), a.stateBytes)))
-      snap.filesByPart.foreach { m =>
-        Checkpoint.writeInventory(spark, cfg.outDir, scope.todo.flatMap(p =>
-          m.getOrElse(p, Nil).map(f => (p, snap.snapOf(p), f))))
-      }
-      // per-rule fingerprints of the FULL rule set under this run's hash —
-      // written by every run (delta or not) so any FUTURE rule edit can
-      // diff against what this lineage actually meant
-      Checkpoint.writeRulesetMap(spark, cfg.outDir, rulesetHash, snap.ruleFps)
-    }
     // Join ALL chains before anything can unwind: if one chain fails
     // while another is mid-write, bailing out immediately would abandon
     // the in-flight write after its stale partitions were already deleted
     // (and swallow its error). All outcomes are observed; the violations
     // chain's error wins (table integrity first).
-    Seq(vioChain, verdictChain, sketchChain, stateChain)
+    Seq(vioChain, verdictChain, sketchChain)
       .map(f => scala.util.Try(Await.result(f, Duration.Inf)))
       .foreach(_.get)
     Written(Await.result(verdictChain, Duration.Inf), vioCount, runId,

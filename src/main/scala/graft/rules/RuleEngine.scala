@@ -120,7 +120,9 @@ object RuleEngine {
       driverViolations: Seq[Violation],
       sources: Seq[String],
       stats: Option[(String, Map[String, String])],
-      rowCount: Option[Long],
+      /** Rows per data source: the aggregates' nDocs (post-merge in an
+        * append-delta run) or, with no stats-family rule, one count. */
+      counts: Map[String, Long],
       /** (source, rule_id) pairs whose check could not run (a drift rule
         * with no baseline bins for that source, snapshot equality with no
         * reference snapshot): the roll-up reports them as NOT_COMPLETED,
@@ -227,7 +229,8 @@ object RuleEngine {
 
   /** Driver-side tail of [[planStaged]]'s `finish()`: RI /
     * drift / manifest violations from the collected aggregates, the source
-    * domain, NOT_COMPLETED bookkeeping, stats metrics and exact row count. */
+    * domain, NOT_COMPLETED bookkeeping, stats metrics and exact per-source
+    * row counts. */
   private def driverSide(
       spark: SparkSession,
       seqs: Dataset[Sequence],
@@ -252,11 +255,12 @@ object RuleEngine {
         rules.entropyRules.flatMap(r => entropyViolationsFromAgg(aggs, r)) ++
         rules.manifestRules.flatMap(r => manifestViolations(manifestRows, r))
 
-    val sources0 =
-      if (needAgg) (aggs.map(_.source) ++ manifestRows.map(_.source))
-      else
-        seqs.select(col("source")).distinct().as[String].collect().toSeq ++
-          manifestRows.map(_.source)
+    // with no aggregates to ride, one per-source count job stands in
+    val counts: Map[String, Long] =
+      if (needAgg) aggs.map(a => a.source -> a.nDocs).toMap
+      else seqs.groupBy(col("source")).count().as[(String, Long)]
+        .collect().toMap
+    val sources0 = counts.keys.toSeq ++ manifestRows.map(_.source)
 
     val notCompleted: Set[(String, String)] =
       rules.driftRules.flatMap { r =>
@@ -274,7 +278,7 @@ object RuleEngine {
       sources = sources0.distinct.sorted,
       stats = rules.statsRules.headOption
         .map(r => (r.id, statsMetricsFromAgg(aggs))),
-      rowCount = if (needAgg) Some(aggs.map(_.nDocs).sum) else None,
+      counts = counts,
       notCompleted = notCompleted,
       aggregates = aggs)
   }

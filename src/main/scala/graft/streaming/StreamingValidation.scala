@@ -107,7 +107,7 @@ object StreamingValidation {
     * [[graft.jobs.ValidationJob]] in `--append-delta` mode, scoped to the
     * sources the batch's files landed in. The stream is the ORCHESTRATOR;
     * what to scan is decided by the job's own per-partition lineage
-    * (inventory + stats state + sketch), so:
+    * (partition-state row + sketch), so:
     *  - a grown partition pays only its NEW files (stats/drift/RI fold
     *    the persisted mergeable state — byte-identical to a full rescan);
     *  - a rewritten partition falls back to a full rescan of itself;

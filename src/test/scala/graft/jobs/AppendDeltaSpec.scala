@@ -5,7 +5,7 @@ import graft.gen.SequenceGen
 import graft.gen.SequenceGen.Knobs
 import graft.model._
 import graft.drift.Drift
-import graft.rules.RuleEngine
+import graft.rules.{RowRule, RuleEngine, RuleSet, Rules}
 import org.apache.spark.sql.functions._
 
 /** Append-delta validation: a partition that only GREW re-validates by
@@ -313,5 +313,68 @@ class AppendDeltaSpec extends SparkSpec {
       .parquet(s"$dir/input")
     val r3 = ValidationJob.run(spark, cfg("d", delta = true))
     assert(r3.deltaPartitions === Seq("big") && r3.rowsValidated === 1L)
+  }
+
+  /** The standard rules plus R_NTOK_CAP at `cap`: two caps are two rule
+    * sets that differ only in what one rule id means. */
+  private def capRules(cap: Int) = RuleSet(Rules.standard.rules :+ RowRule(
+    "R_NTOK_CAP", Severity.Warning, valid = col("n_tok") <= cap,
+    observed = to_json(struct(col("n_tok")))))
+
+  /** A full run under cap 200, a second run under cap 100 on the same data
+    * (`failCap100`: it fails in its verdict write), one row appended to
+    * cardiac, then an append-delta run under cap 200 again: cardiac must
+    * be rescanned in full and end with a fresh full cap-200 run's
+    * violations and verdicts. */
+  private def ruleFlipFlop(name: String, failCap100: Boolean): Unit = {
+    val dir = tmpDir(name)
+    writeInput(dir)
+    def cfg(out: String, cap: Int, delta: Boolean) = ValidationJob.Config(
+      s"$dir/input", s"$dir/manifest", s"$dir/$out", rules = capRules(cap),
+      appendDelta = delta)
+    ValidationJob.run(spark, cfg("out", 200, delta = false))
+    if (!failCap100) ValidationJob.run(spark, cfg("out", 100, delta = false))
+    else {
+      // a regular file where the verdicts table was: the violations are
+      // rewritten under cap 100, the verdict write throws
+      val verdicts = new java.io.File(ValidationJob.verdictsPath(s"$dir/out"))
+      val vpath = new org.apache.hadoop.fs.Path(verdicts.toString)
+      vpath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .delete(vpath, true)
+      java.nio.file.Files.write(verdicts.toPath, "not a table".getBytes)
+      intercept[Exception](ValidationJob.run(spark, cfg("out", 100, delta = false)))
+      verdicts.delete()
+    }
+    Seq(Sequence("D999999999950", Array.fill(150)(1), 150, "cardiac"))
+      .toDS().write.mode("append").partitionBy("source").parquet(s"$dir/input")
+    val r = ValidationJob.run(spark, cfg("out", 200, delta = true))
+    assert(r.validatedPartitions === Seq("cardiac"))
+    assert(r.deltaPartitions.isEmpty, r.toString)
+    assert(r.rowsValidated === spark.read.parquet(s"$dir/input")
+      .filter($"source" === "cardiac").count())
+
+    // control: a full cap-200 run of the grown table in a fresh outDir
+    ValidationJob.run(spark, cfg("out_full", 200, delta = false))
+    def cardiac(out: String, path: String => String, cols: String*) =
+      spark.read.parquet(path(s"$dir/$out")).filter($"source" === "cardiac")
+        .select(cols.map(col): _*).collect().map(_.toSeq).toSet
+    val vioCols = Seq("doc_id", "rule_id", "severity", "observed")
+    val capVios = cardiac("out_full", ValidationJob.violationsPath, vioCols: _*)
+      .count(_(1) == "R_NTOK_CAP")
+    assert(capVios > 0)
+    assert(cardiac("out", ValidationJob.violationsPath, vioCols: _*) ===
+      cardiac("out_full", ValidationJob.violationsPath, vioCols: _*))
+    assert(cardiac("out", ValidationJob.verdictsPath, "rule_id", "status") ===
+      cardiac("out_full", ValidationJob.verdictsPath, "rule_id", "status"))
+  }
+
+  test("a rule set flip-flop over unchanged data: the append-delta run " +
+      "under the first rule set rescans the grown partition in full") {
+    ruleFlipFlop("adelta_flip", failCap100 = false)
+  }
+
+  test("a run under another rule set that fails in its verdict write: " +
+      "the next append-delta run rescans the grown partition in full") {
+    ruleFlipFlop("adelta_flip_fail", failCap100 = true)
   }
 }

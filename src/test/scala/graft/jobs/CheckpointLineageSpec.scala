@@ -32,12 +32,12 @@ class CheckpointLineageSpec extends SparkSpec {
     assert(lineage.entries.size === 4)
 
     // append-delta (the run's hash) and the transfer gate (any hash)
-    assert(lineage.latestSnapshot(Some("hash")) === Map("p" -> "snap_a"))
-    assert(lineage.latestSnapshot(None) ===
+    assert(lineage.latest("p").snapshotId === "snap_a" &&
+      lineage.latest("p").rulesetHash === "hash")
+    assert(lineage.latest.map { case (p, e) => p -> e.snapshotId } ===
       Map("p" -> "snap_a", "q" -> "snap"))
     // rule-delta: the same data, last validated under the later hash
-    assert(lineage.latestHash(Map("p" -> "x", "q" -> "snap")) ===
-      Map("q" -> "hash_a"))
+    assert(lineage.latest("q").rulesetHash === "hash_a")
     // resume: any entry under the hash for the current snapshot
     assert(lineage.done("hash", Map("p" -> "snap_a", "q" -> "snap")) ===
       Set("p"))

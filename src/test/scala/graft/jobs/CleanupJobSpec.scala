@@ -51,8 +51,8 @@ class CleanupJobSpec extends SparkSpec {
     fs.mkdirs(tmpDirPath)
     fs.setTimes(tmpDirPath, past, past)
     fs.create(new org.apache.hadoop.fs.Path(
-      s"$dir/out/_running.reclaim.dead-uuid"), true).close()
-    val lockPath = new org.apache.hadoop.fs.Path(s"$dir/out/_running")
+      s"$dir/out/_locks/mito.lock.reclaim.dead-uuid"), true).close()
+    val lockPath = new org.apache.hadoop.fs.Path(s"$dir/out/_locks/mito.lock")
     fs.create(lockPath, true).close()
     fs.setTimes(lockPath, past, past)
 
@@ -74,7 +74,7 @@ class CleanupJobSpec extends SparkSpec {
     assert(after.toSet === parts.toSet - promoted.head)
     assert(!fs.exists(tmpDirPath))
     assert(!fs.exists(new org.apache.hadoop.fs.Path(
-      s"$dir/out/_running.reclaim.dead-uuid")))
+      s"$dir/out/_locks/mito.lock.reclaim.dead-uuid")))
     assert(!fs.exists(lockPath))
 
     // LIVE (fresh) lock and FRESH _temporary are NEVER swept — they may

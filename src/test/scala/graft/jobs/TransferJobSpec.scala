@@ -148,10 +148,5 @@ class TransferJobSpec extends SparkSpec {
     assert(Checkpoint.acquirePartitionLocks(
       spark, cfg.outDir, r.validatedPartitions))
     Checkpoint.releasePartitionLocks(spark, cfg.outDir, r.validatedPartitions)
-
-    // the whole-dir run lock (TransferJob's unit) still works standalone
-    assert(Checkpoint.acquireRunLock(spark, cfg.outDir))
-    assert(!Checkpoint.acquireRunLock(spark, cfg.outDir, attempts = 1))
-    Checkpoint.releaseRunLock(spark, cfg.outDir)
   }
 }

@@ -395,7 +395,7 @@ class ValidationJobSpec extends SparkSpec {
       .filter(f => f.isDirectory && f.getName.startsWith("run_seg="))
       .map(_.getName).sorted.toSeq
     assert(segs().size === 3)
-    val before = Checkpoint.read(spark, cpPath)
+    val before = ValidationJobSpec.read(spark, cpPath)
       .collect().sortBy(e => (e.partition, e.snapshot_id)).toSeq
 
     // dry run reports the would-fold count without touching anything
@@ -405,7 +405,7 @@ class ValidationJobSpec extends SparkSpec {
     assert(Checkpoint.compact(spark, cpPath) === 3)
     assert(segs().size === 1)
     assert(segs().head.startsWith("run_seg=base-"))
-    val after = Checkpoint.read(spark, cpPath)
+    val after = ValidationJobSpec.read(spark, cpPath)
       .collect().sortBy(e => (e.partition, e.snapshot_id)).toSeq
     assert(after === before)
 
@@ -579,10 +579,21 @@ class ValidationJobSpec extends SparkSpec {
       confirmed = 2, shardRows = 8, sketchKib = 8 * 117800 / 1024))
     assert(r2.xrun.json ===
       """{"candidates":2,"confirmed":2,"shard_rows":8,"sketch_kib":920}""")
-    val metrics = graft.checkpoint.Checkpoint
+    val metrics = ValidationJobSpec
       .read(spark, ValidationJob.checkpointPath(cfg.outDir))
       .filter($"partition" === "newsrc").select("metrics").as[String].collect()
     assert(metrics.length === 1)
     assert(metrics.head.endsWith(s""","xrun":${r2.xrun.json}}"""), metrics.head)
+  }
+}
+
+object ValidationJobSpec {
+  /** Every checkpoint entry in full (verdict and metrics too), for
+    * inspection; the job's lineage decisions read `Checkpoint.lineage`. */
+  def read(spark: org.apache.spark.sql.SparkSession,
+      path: String): org.apache.spark.sql.Dataset[CheckpointEntry] = {
+    import spark.implicits._
+    graft.sources.TableIO.readIfExists(spark, path)
+      .fold(spark.emptyDataset[CheckpointEntry])(_.as[CheckpointEntry])
   }
 }

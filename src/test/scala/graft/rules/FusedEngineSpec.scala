@@ -82,7 +82,7 @@ class FusedEngineSpec extends SparkSpec {
 
     // roll-up facts
     assert(obsFin.sources === fbFin.sources)
-    assert(obsFin.rowCount === fbFin.rowCount)
+    assert(obsFin.counts === fbFin.counts)
     assert(obsFin.notCompleted === fbFin.notCompleted)
     assert(obsFin.stats === fbFin.stats) // field-exact incl. HLL + pcts JSON
     assert(fields(obsFin.aggregates) === fields(fbFin.aggregates))
@@ -159,7 +159,7 @@ class FusedEngineSpec extends SparkSpec {
     val staged = RuleEngine.planStaged(empty, manifest, Rules.standard)
     assert(staged.scanViolations.count() === 0L)
     val fin = staged.finish() // must not block on the observation
-    assert(fin.rowCount === Some(0L))
+    assert(fin.counts.values.sum === 0L)
     // the manifest's declared sources surface as missing-docs RI errors
     assert(fin.driverViolations.exists(_.rule_id == Rules.RRefIntegrity))
     assert(fin.sources.nonEmpty)
@@ -175,9 +175,9 @@ class FusedEngineSpec extends SparkSpec {
       .filter(col("source").isin("cardiac", "mito")) // aggressive filter
       .count()
     val fin = staged.finish()
-    // rowCount comes from the narrow aggregation over the FULL seqs; the
-    // observed token stats must align with it for every source
-    assert(fin.rowCount === Some(N))
+    // the counts come from the narrow aggregation over the FULL seqs; the
+    // observed token stats must align with them for every source
+    assert(fin.counts.values.sum === N)
     val statsJson = fin.stats.get._2
     assert(statsJson.keySet ===
       seqs.select("source").distinct().as[String].collect().toSet)
