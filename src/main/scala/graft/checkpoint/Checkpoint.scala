@@ -12,16 +12,17 @@ import graft.sources.TableIO
  * for the reference's RUNNING/PASS/FAIL state machine + README sentinel
  * (reference validation_manager.py:209-253, cleanup_manager.py:114-128,
  * batch_notification.py:206-218). A restarted job skips partitions whose
- * (snapshot_id, ruleset_hash) already completed; any change to input data
- * or rule set re-validates exactly the affected partitions.
+ * latest entry already carries the current (snapshot_id, ruleset_hash);
+ * any change to input data or rule set re-validates exactly the affected
+ * partitions.
  *
  * Every lineage decision reads the table once, through [[lineage]]: a
  * collected view of (partition, snapshot_id, ruleset_hash, completed_at)
- * whose lookups — the resume set and each partition's latest entry —
- * share one order, completed_at as an Instant (see
- * [[graft.model.CompletedAt]]). [[compact]] keeps its own segment read.
- * What a delta run starts from is one [[PartitionState]] row per
- * partition, usable only while it matches that partition's latest entry.
+ * whose one lookup is each partition's latest entry, completed_at
+ * ordered as an Instant (see [[graft.model.CompletedAt]]). [[compact]]
+ * keeps its own segment read. What a delta run starts from is one
+ * [[PartitionState]] row per partition, usable only while it matches
+ * that partition's latest entry.
  *
  * Crash safety: jobs write the partition-state rows FIRST, then
  * violations, verdicts and sketches, and the checkpoint LAST; every data
@@ -46,15 +47,11 @@ object Checkpoint {
     * ruleset_hash). Duplicate entries (a compaction that crashed before
     * its deletes) change no answer. */
   final case class Lineage(entries: Seq[LineageEntry]) {
-    /** The resume set: partitions that some entry under `hash` completed
-      * for their CURRENT snapshot id `snapOf(partition)`. */
-    def done(hash: String, snapOf: String => String): Set[String] =
-      entries.iterator.filter(e => e.rulesetHash == hash &&
-        e.snapshotId == snapOf(e.partition)).map(_.partition).toSet
-
     /** Each partition's latest entry: the lineage its last completed run
-      * left, which a delta run's [[PartitionState]] row must carry and
-      * the transfer gate compares with the current data. */
+      * left — whose output the tables hold. Resume skips a partition only
+      * while this entry carries the current (snapshot, rule set); a delta
+      * run's [[PartitionState]] row must carry it, and the transfer gate
+      * compares it with the current data. */
     lazy val latest: Map[String, LineageEntry] =
       entries.groupBy(_.partition).map { case (p, es) =>
         p -> es.maxBy(e => (e.completedAt, (e.snapshotId, e.rulesetHash)))(
@@ -386,11 +383,20 @@ object Checkpoint {
     readPartitionState(spark, outDir).flatMap { case (p, s) =>
       s.state.map(b => p -> ((s.snapshotId, b))) }
 
-  /** The resume set for one ruleset hash and a partition → snapshot id map
-    * (a partition missing from the map matches no entry): a one-line
-    * delegate to [[Lineage.done]], kept because `perfbench`'s
-    * `FullScan.directCalls` times it. */
+  /** The resume set: partitions whose LATEST entry completed under `hash`
+    * for their current snapshot id `snapOf(partition)`. An older entry
+    * under `hash` does not count — after a rule-set flip-flop over the
+    * same data the tables hold the later rule set's output. */
+  def resumable(lineage: Lineage, hash: String,
+      snapOf: String => String): Set[String] =
+    lineage.latest.collect { case (p, e)
+      if e.rulesetHash == hash && e.snapshotId == snapOf(p) => p }.toSet
+
+  /** [[resumable]] for a partition → snapshot id map (a partition missing
+    * from the map matches no entry): a one-line delegate, kept because
+    * `perfbench`'s `FullScan.directCalls` times it. */
   def completedPartitionsBySnapshot(spark: SparkSession, path: String,
       rulesetHash: String, partitionSnapshots: Map[String, String]): Set[String] =
-    lineage(spark, path).done(rulesetHash, partitionSnapshots.getOrElse(_, ""))
+    resumable(lineage(spark, path), rulesetHash,
+      partitionSnapshots.getOrElse(_, ""))
 }

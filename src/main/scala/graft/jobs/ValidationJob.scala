@@ -346,13 +346,14 @@ object ValidationJob {
   private def resumeScope(
       spark: SparkSession, cfg: Config, snap: Snap): Scope = {
     import spark.implicits._
-    // Resume: drop partitions already validated under this exact
+    // Resume: drop partitions whose latest entry is this exact
     // (snapshot, rule set) lineage. Entries carry snap.snapOf(partition),
     // the whole-table id on a flat layout, so one lookup serves both.
     // The later filter is on the partition column, so Catalyst prunes
     // the done partitions' files from the scan entirely.
-    val done = Checkpoint.lineage(spark, checkpointPath(cfg.outDir))
-      .done(snap.rulesetHash, snap.snapOf)
+    val done = Checkpoint.resumable(
+      Checkpoint.lineage(spark, checkpointPath(cfg.outDir)),
+      snap.rulesetHash, snap.snapOf)
     val allParts = TableIO.partitionValues(spark, cfg.inputPath, "source")
       .getOrElse(
         snap.all.select("source").distinct().as[String].collect().toSeq.sorted)

@@ -77,32 +77,6 @@ object TableIO {
     }.sum
   }
 
-  /** Bucketed table write — the co-located-join layout for keyed passes
-    * at the 10^12-row shape. A table bucketed by `doc_id` gives every
-    * keyed consumer hash-clustered input: per-key aggregation (the
-    * snapshot-equality fingerprint pass), the uniqueness key count, and
-    * cross-snapshot joins all run with ZERO exchanges when both sides
-    * share the bucket spec (TableIOSpec pins this on the real
-    * snapshot-equality plan). This is the Parquet stand-in for Iceberg's
-    * bucket partition transform; bucket metadata lives in the session
-    * catalog, so the write goes through `saveAsTable` (with an explicit
-    * `path` the table is external — the files outlive the catalog entry).
-    * Sorted within buckets so merge joins skip their sort where Spark can
-    * use it. */
-  def writeBucketed(
-      df: DataFrame,
-      table: String,
-      bucketCol: String,
-      nBuckets: Int,
-      path: Option[String] = None): Unit = {
-    val w = df.write
-      .mode(SaveMode.Overwrite)
-      .format("parquet")
-      .bucketBy(nBuckets, bucketCol)
-      .sortBy(bucketCol)
-    path.fold(w)(p => w.option("path", p)).saveAsTable(table)
-  }
-
   /** Hive-style partition-path unescape: every %xx byte-escape Spark's
     * partition writer emits is decoded; everything else (including '+',
     * which is LITERAL in Hive paths, unlike URL encoding) passes through.

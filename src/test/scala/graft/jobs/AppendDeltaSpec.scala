@@ -332,7 +332,8 @@ class AppendDeltaSpec extends SparkSpec {
     def cfg(out: String, cap: Int, delta: Boolean) = ValidationJob.Config(
       s"$dir/input", s"$dir/manifest", s"$dir/$out", rules = capRules(cap),
       appendDelta = delta)
-    ValidationJob.run(spark, cfg("out", 200, delta = false))
+    val all = ValidationJob.run(spark, cfg("out", 200, delta = false))
+      .validatedPartitions
     if (!failCap100) ValidationJob.run(spark, cfg("out", 100, delta = false))
     else {
       // a regular file where the verdicts table was: the violations are
@@ -348,10 +349,13 @@ class AppendDeltaSpec extends SparkSpec {
     Seq(Sequence("D999999999950", Array.fill(150)(1), 150, "cardiac"))
       .toDS().write.mode("append").partitionBy("source").parquet(s"$dir/input")
     val r = ValidationJob.run(spark, cfg("out", 200, delta = true))
-    assert(r.validatedPartitions === Seq("cardiac"))
+    // a completed cap-100 run is every partition's latest entry, so none
+    // resumes; a failed one left the cap-200 entries latest
+    val validated = if (failCap100) Seq("cardiac") else all
+    assert(r.validatedPartitions === validated)
     assert(r.deltaPartitions.isEmpty, r.toString)
     assert(r.rowsValidated === spark.read.parquet(s"$dir/input")
-      .filter($"source" === "cardiac").count())
+      .filter($"source".isin(validated: _*)).count())
 
     // control: a full cap-200 run of the grown table in a fresh outDir
     ValidationJob.run(spark, cfg("out_full", 200, delta = false))
@@ -376,5 +380,32 @@ class AppendDeltaSpec extends SparkSpec {
   test("a run under another rule set that fails in its verdict write: " +
       "the next append-delta run rescans the grown partition in full") {
     ruleFlipFlop("adelta_flip_fail", failCap100 = true)
+  }
+
+  test("resume trusts only the latest entry: a rule set flip-flop over " +
+      "unchanged data re-validates every partition") {
+    val dir = tmpDir("resume_flip")
+    writeInput(dir)
+    def run(out: String, cap: Int) = ValidationJob.run(spark,
+      ValidationJob.Config(s"$dir/input", s"$dir/manifest", s"$dir/$out",
+        rules = capRules(cap)))
+    val first = run("out", 200)
+    run("out", 100)
+    // the cap-200 entries are still in the checkpoint, but every
+    // partition's latest entry is the cap-100 run's
+    val third = run("out", 200)
+    assert(third.validatedPartitions === first.validatedPartitions)
+    assert(third.skippedPartitions.isEmpty, third.toString)
+
+    run("out_full", 200)
+    def table(out: String, path: String => String, cols: String*) =
+      spark.read.parquet(path(s"$dir/$out"))
+        .select(cols.map(col): _*).collect().map(_.toSeq).toSet
+    val vioCols = Seq("source", "doc_id", "rule_id", "severity", "observed")
+    val vios = table("out", ValidationJob.violationsPath, vioCols: _*)
+    assert(vios.count(_(2) == "R_NTOK_CAP") > 0)
+    assert(vios === table("out_full", ValidationJob.violationsPath, vioCols: _*))
+    assert(table("out", ValidationJob.verdictsPath, "source", "rule_id", "status") ===
+      table("out_full", ValidationJob.verdictsPath, "source", "rule_id", "status"))
   }
 }

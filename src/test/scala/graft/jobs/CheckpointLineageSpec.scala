@@ -38,13 +38,16 @@ class CheckpointLineageSpec extends SparkSpec {
       Map("p" -> "snap_a", "q" -> "snap"))
     // rule-delta: the same data, last validated under the later hash
     assert(lineage.latest("q").rulesetHash === "hash_a")
-    // resume: any entry under the hash for the current snapshot
-    assert(lineage.done("hash", Map("p" -> "snap_a", "q" -> "snap")) ===
-      Set("p"))
-    assert(lineage.done("hash_a", Map("p" -> "snap_a", "q" -> "snap")) ===
-      Set("q"))
+    // resume: the latest entry carries the hash and the current snapshot
+    assert(Checkpoint.resumable(lineage, "hash",
+      Map("p" -> "snap_a", "q" -> "snap")) === Set("p"))
+    assert(Checkpoint.resumable(lineage, "hash_a",
+      Map("p" -> "snap_a", "q" -> "snap")) === Set("q"))
+    // an older entry for the snapshot or the hash does not count
     assert(Checkpoint.completedPartitionsBySnapshot(
-      spark, path, "hash", Map("p" -> "snap_b")) === Set("p"))
+      spark, path, "hash", Map("p" -> "snap_b")) === Set.empty)
+    assert(Checkpoint.resumable(lineage, "hash_b",
+      Map("p" -> "snap_a", "q" -> "snap")) === Set.empty)
     assert(Checkpoint.completedPartitionsBySnapshot(
       spark, path, "hash", Map("q" -> "snap")) === Set.empty)
 
@@ -61,7 +64,7 @@ class CheckpointLineageSpec extends SparkSpec {
       "the current snapshot ids") {
     val lineage = Checkpoint.lineage(spark, s"${tmpDir("lineage0")}/none")
     assert(lineage.entries.isEmpty)
-    assert(lineage.done("hash", _ => "snap").isEmpty)
+    assert(Checkpoint.resumable(lineage, "hash", _ => "snap").isEmpty)
     val gate = TransferJob.lineageBlocks(lineage,
       throw new AssertionError("current snapshot ids read"))
     assert(gate("p") === None)

@@ -2,6 +2,7 @@ package graft.sources
 
 import graft.SparkSpec
 import graft.gen.SequenceGen
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 class TableIOSpec extends SparkSpec {
@@ -118,9 +119,9 @@ class TableIOSpec extends SparkSpec {
         graft.model.Sequence(f"D$i%05d", toks, toks.length,
           if (i % 2 == 0) "alpha" else "beta")
       }.toDS()
-    TableIO.writeBucketed(snap(mutate = false).toDF(),
+    TableIOSpec.writeBucketed(snap(mutate = false).toDF(),
       "bt_old", "doc_id", 8, Some(s"$dir/old"))
-    TableIO.writeBucketed(snap(mutate = true).toDF(),
+    TableIOSpec.writeBucketed(snap(mutate = true).toDF(),
       "bt_new", "doc_id", 8, Some(s"$dir/new"))
     val prevThresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
@@ -146,5 +147,33 @@ class TableIOSpec extends SparkSpec {
       spark.sql("DROP TABLE IF EXISTS bt_old")
       spark.sql("DROP TABLE IF EXISTS bt_new")
     }
+  }
+}
+
+object TableIOSpec {
+  /** Bucketed table write — the co-located-join layout for keyed passes
+    * at the 10^12-row shape. A table bucketed by `doc_id` gives every
+    * keyed consumer hash-clustered input: per-key aggregation (the
+    * snapshot-equality fingerprint pass), the uniqueness key count, and
+    * cross-snapshot joins all run with ZERO exchanges when both sides
+    * share the bucket spec (the bucketed-layout test pins this on the
+    * real snapshot-equality plan). This is the Parquet stand-in for
+    * Iceberg's bucket partition transform; bucket metadata lives in the
+    * session catalog, so the write goes through `saveAsTable` (with an
+    * explicit `path` the table is external — the files outlive the
+    * catalog entry). Sorted within buckets so merge joins skip their sort
+    * where Spark can use it. */
+  def writeBucketed(
+      df: DataFrame,
+      table: String,
+      bucketCol: String,
+      nBuckets: Int,
+      path: Option[String] = None): Unit = {
+    val w = df.write
+      .mode(SaveMode.Overwrite)
+      .format("parquet")
+      .bucketBy(nBuckets, bucketCol)
+      .sortBy(bucketCol)
+    path.fold(w)(p => w.option("path", p)).saveAsTable(table)
   }
 }
